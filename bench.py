@@ -1,7 +1,8 @@
 """Benchmark harness — the driver runs this per-round at sf0.1.
 
 Runs every registered query at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
+``/root/testdata/sf0.1``) on ``local[DEFAULT_CPUS]`` (``$SPARK_GRAFT_CPUS``,
+else the process's CPU affinity count) and prints ONE
 JSON line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
@@ -21,7 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from sig_etl_spark.queries import QUERIES  # noqa: E402
-from sig_etl_spark.session import get_spark  # noqa: E402
+from sig_etl_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 
 def run_query(df) -> None:
@@ -264,11 +265,10 @@ def main() -> int:
     # The driver's low-core scaling leg used to OVERWRITE the 32-core
     # BENCH_FULL_latest.json (round-14 verdict); the FULL artifact is now
     # keyed by the core count so each leg keeps its own record.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     out = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT",
         os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     f"BENCH_FULL_latest_c{cpus}.json"),
+                     f"BENCH_FULL_latest_c{DEFAULT_CPUS}.json"),
     )
     full_name = os.path.basename(out)
     result = {
@@ -280,7 +280,7 @@ def main() -> int:
         "repeats_per_query": repeats,
         "warmup_per_query": warmup,
         "aggregation": "median",
-        "cpus": int(cpus) if cpus.isdigit() else cpus,
+        "cpus": int(DEFAULT_CPUS) if DEFAULT_CPUS.isdigit() else DEFAULT_CPUS,
         "sf": sf,
     }
     if excluded:

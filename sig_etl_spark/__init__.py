@@ -5,7 +5,7 @@ The reference is a single-threaded, eager, row-at-a-time Python ETL
 (scrape → normalize → fuzzy-match). This engine re-expresses every
 operator it supports as idiomatic Spark DataFrame / Spark SQL plans so
 that Catalyst + Tungsten + AQE pick the physical strategy, and the same
-code scales from local[32] to a 1000-executor cluster.
+code scales from local mode to a 1000-executor cluster.
 
 Layout
 ------

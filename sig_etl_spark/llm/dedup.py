@@ -531,23 +531,6 @@ def simhash_near_pairs(
     )
 
 
-_DEC = "decimal(38,18)"
-
-
-def _decimal_dot(a, b):
-    """Order-independent exact dot product: per-element double multiply,
-    DECIMAL(38,18) accumulation (addition order cannot change the result,
-    so the value is reproducible across engines and partitionings).
-
-    ~100x the cost of ``_double_dot`` and interpreted — kept only for
-    callers that need order-independence under a DISTRIBUTED sum. Per-row
-    array folds don't: see _double_dot."""
-    prods = F.zip_with(a, b, lambda x, y: (x.cast("double") * y.cast("double")).cast(_DEC))
-    # re-cast after each addition: decimal(38,18)+decimal(38,18) widens and
-    # aggregate() requires the merge type to equal the zero type
-    return F.aggregate(prods, F.lit(0).cast(_DEC), lambda acc, x: (acc + x).cast(_DEC))
-
-
 def _double_dot(a, b):
     """Dot product as a strict left-to-right IEEE-double fold.
 
@@ -580,22 +563,6 @@ def _double_dot_expr(a: str, b: str):
     """:func:`_double_dot` over plain column names, built in one py4j
     round-trip (see :func:`_dot_sql`)."""
     return F.expr(_dot_sql(a, b))
-
-
-def array_dot(a, b, exact: bool = False):
-    """Dot product over two ARRAY columns. ``exact=True`` selects the
-    DECIMAL(38,18) accumulator (order-independent under re-partitioned
-    sums); the default double fold is deterministic for per-row use and
-    ~100x cheaper."""
-    return _decimal_dot(a, b) if exact else _double_dot(a, b)
-
-
-def embedding_norms(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        _double_dot(F.col(vec_col), F.col(vec_col)).alias("norm2"),
-    )
 
 
 def embedding_near_dup_pairs(

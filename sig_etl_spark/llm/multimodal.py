@@ -380,106 +380,23 @@ def _huff_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
     return out
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, value: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.buf.append(self.acc)
-                if self.acc == 0xFF:  # byte stuffing
-                    self.buf.append(0x00)
-                self.acc = 0
-                self.n = 0
-
-    def pad(self) -> None:
-        """Pad to byte boundary with 1-bits (T.81 F.1.2.3)."""
-        while self.n:
-            self.put(1, 1)
-
-
-class _BitReader:
-    """MSB-first reader over entropy-coded data with 0xFF00 destuffing;
-    stops (raises _Marker) when a real marker interrupts the stream."""
-
-    class Marker(Exception):
-        def __init__(self, marker: int) -> None:
-            self.marker = marker
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self.acc = 0
-        self.n = 0
-
-    def bit(self) -> int:
-        if self.n == 0:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated JPEG entropy data")
-            b = self.data[self.pos]
-            self.pos += 1
-            if b == 0xFF:
-                if self.pos >= len(self.data):
-                    raise ValueError("truncated JPEG entropy data at 0xFF")
-                m = self.data[self.pos]
-                self.pos += 1
-                if m != 0x00:  # a real marker, not a stuffed byte
-                    raise _BitReader.Marker(m)
-            self.acc = b
-            self.n = 8
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def bits(self, count: int) -> int:
-        v = 0
-        for _ in range(count):
-            v = (v << 1) | self.bit()
-        return v
-
-    def align(self) -> None:
-        self.n = 0
-
-    def expect_rst(self, idx: int) -> None:
-        """Consume the RSTn marker that must follow a restart interval."""
-        self.align()
-        if self.pos + 2 > len(self.data) or self.data[self.pos] != 0xFF:
-            raise ValueError("missing restart marker")
-        m = self.data[self.pos + 1]
-        if m != 0xD0 + (idx & 7):
-            raise ValueError(
-                f"bad restart marker: want RST{idx & 7}, got 0x{m:02X}"
-            )
-        self.pos += 2
-
-
-def _huff_decode(reader: _BitReader, table: dict[tuple[int, int], int]) -> int:
-    code, length = 0, 0
-    while length < 16:
-        code = (code << 1) | reader.bit()
-        length += 1
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid Huffman code in JPEG entropy data")
+class _Marker(Exception):
+    """A real marker (not a stuffed 0xFF00 byte) interrupted the
+    entropy-coded stream; the marker byte is its argument."""
 
 
 # ---------------------------------------------------------------------------
-# Fast entropy decode (round 15): the per-BIT Python reader above costs
-# length+size method calls per coefficient; the scan below replaces it
-# with (a) one numpy-built peek-16 lookup table per Huffman table
-# (prefix-expanded canonical codes: lut[16-bit window] = length<<8|sym),
+# Fast entropy decode (round 15): a per-BIT Python reader costs
+# length+size method calls per coefficient; the scan below uses (a) one
+# numpy-built peek-16 lookup table per Huffman table (prefix-expanded
+# canonical codes: lut[16-bit window] = length<<8|sym),
 # (b) an int accumulator refilled a byte at a time over the destuffed
 # entropy segment, ~3 Python ops per symbol, and (c) batch de-zigzag /
 # dequantization with one fancy-index assignment per component instead
 # of a 64-step Python loop per block. Bit-exactness is pinned by the
-# round-trip/corruption tests; error semantics mirror the per-bit
-# reader: reading past the segment raises ValueError (end of data) or
-# _BitReader.Marker (a real marker interrupted the stream).
+# round-trip/corruption tests. Reading past the segment raises
+# ValueError (end of data) or _Marker (a real marker interrupted the
+# stream).
 # ---------------------------------------------------------------------------
 
 # Decode tables are cached by the raw DHT segment bytes (fixtures share
@@ -513,8 +430,8 @@ def _entropy_segments(content: bytes, start: int) -> list[tuple[bytes, int | Non
     [(destuffed_bytes, terminating_marker_or_None)]. 0xFF00 -> literal
     0xFF; RSTn markers split segments; any other marker (or end of
     input) terminates the scan. A trailing lone 0xFF is excluded from
-    the data (the per-bit reader errored only when it tried to READ it,
-    which the cursor arithmetic reproduces)."""
+    the data (reading it is an error only when the scan gets that far,
+    which the cursor arithmetic enforces)."""
     segs: list[tuple[bytes, int | None]] = []
     parts: list[bytes] = []
     i, n = start, len(content)
@@ -537,17 +454,6 @@ def _entropy_segments(content: bytes, start: int) -> list[tuple[bytes, int | Non
             parts.append(content[i:j])
             segs.append((b"".join(parts), m))
             return segs
-
-
-def _extend(v: int, size: int) -> int:
-    """T.81 F.12: map a `size`-bit magnitude to its signed value."""
-    if size == 0:
-        return 0
-    return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-
-
-def _category(v: int) -> int:
-    return int(v).bit_length() if v else 0
 
 
 def _parse_jpeg(content: bytes):
@@ -713,7 +619,7 @@ def _parse_jpeg(content: bytes):
                                     "invalid Huffman code in JPEG entropy data"
                                 )
                             if term is not None:
-                                raise _BitReader.Marker(term)
+                                raise _Marker(term)
                             raise ValueError("truncated JPEG entropy data")
                         if t:
                             while nacc < t:
@@ -725,7 +631,7 @@ def _parse_jpeg(content: bytes):
                                 nacc += 8
                             if used + t > limit:
                                 if term is not None:
-                                    raise _BitReader.Marker(term)
+                                    raise _Marker(term)
                                 raise ValueError("truncated JPEG entropy data")
                             v = (acc >> (nacc - t)) & ((1 << t) - 1)
                             nacc -= t
@@ -757,7 +663,7 @@ def _parse_jpeg(content: bytes):
                                         "invalid Huffman code in JPEG entropy data"
                                     )
                                 if term is not None:
-                                    raise _BitReader.Marker(term)
+                                    raise _Marker(term)
                                 raise ValueError("truncated JPEG entropy data")
                             s = rs & 0x0F
                             if s == 0:
@@ -777,7 +683,7 @@ def _parse_jpeg(content: bytes):
                                 nacc += 8
                             if used + s > limit:
                                 if term is not None:
-                                    raise _BitReader.Marker(term)
+                                    raise _Marker(term)
                                 raise ValueError("truncated JPEG entropy data")
                             v = (acc >> (nacc - s)) & ((1 << s) - 1)
                             nacc -= s
@@ -873,8 +779,11 @@ def _encode_entropy(
         out.extend(body)
 
     for ti, q in enumerate(qtables):
-        zz = bytes(q.reshape(64)[_ZZFLAT].astype(np.uint8).tolist())
-        seg(0xDB, bytes([ti]) + zz)
+        zz = q.reshape(64)[_ZZFLAT]
+        # 8-bit DQT precision: astype(np.uint8) would silently wrap 256 -> 0
+        if zz.min() < 1 or zz.max() > 255:
+            raise ValueError(f"quant table {ti} has entries outside 1..255")
+        seg(0xDB, bytes([ti]) + bytes(zz.astype(np.uint8).tolist()))
     sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
     for ci in range(ncomp):
         sof += bytes([ci + 1, 0x11, min(ci, len(qtables) - 1)])
@@ -890,13 +799,11 @@ def _encode_entropy(
     seg(0xDA, sos)
 
     by, bx = planes[0].shape[:2]
-    # Round 15: the per-BIT _BitWriter cost length+size appends per
-    # symbol, and the per-block 64-step zigzag gather cost 64 numpy
-    # scalar reads. Zigzag runs as ONE fancy-index pass per component
+    # Round 15: a per-BIT writer costs length+size appends per symbol,
+    # and a per-block 64-step zigzag gather costs 64 numpy scalar reads. Zigzag runs as ONE fancy-index pass per component
     # (with .tolist() so the scan loop touches Python ints), last
     # nonzero index is vectorized, and bits go through an int
-    # accumulator flushed a byte at a time with inline 0xFF stuffing —
-    # byte-identical output to the per-bit writer by construction
+    # accumulator flushed a byte at a time with inline 0xFF stuffing
     # (pinned by the roundtrip tests and the decoder's exactness).
     zzs = []
     lastnzs = []

@@ -1860,12 +1860,8 @@ def ivfpq_topk(
     qbase = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     ).crossJoin(F.broadcast(cents_arr))
-    _dot_sql = (
-        "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, "
-        "(acc, x) -> acc + x)"
-    )
-    qq = _dot_sql.format(a="qvec", b="qvec")
-    qc = _dot_sql.format(a="qvec", b="ct.cent_vec")
+    qq = _dot_sql("qvec", "qvec")
+    qc = _dot_sql("qvec", "ct.cent_vec")
     probes = qbase.select(
         "query_id",
         F.expr(

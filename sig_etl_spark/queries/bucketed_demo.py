@@ -10,9 +10,9 @@ asserts the join runs exchange-free, and the DuckDB oracle (which reads
 the raw parquet) proves bucketing never changes results.
 
 The bucketed tables are written into the session warehouse on first use
-per (sf_dir, version) — the warehouse stand-in for the one-time
-re-bucketing job a real deployment schedules. Float sums go through
-DECIMAL(38,10) like every cross-row reduction in this repo.
+per sf_dir — the warehouse stand-in for the one-time re-bucketing job a
+real deployment schedules. Float sums go through DECIMAL(38,10) like
+every cross-row reduction in this repo.
 """
 
 from __future__ import annotations
@@ -23,10 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sig_etl_spark.queries import register
+from sig_etl_spark.session import scratch_dir
 from sig_etl_spark.tables import load_table
 
 _N_BUCKETS = 8
-_VERSION = "v1"
 
 
 def bucketed_table(
@@ -38,34 +38,15 @@ def bucketed_table(
 ) -> DataFrame:
     """Read ``table`` as a bucketed catalog table, writing it on first use.
 
-    The catalog name is versioned by (table, sf basename, layout version)
-    so different scale factors coexist and layout changes regenerate
-    rather than silently reusing stale buckets."""
-    base = os.path.basename(sf_dir.rstrip("/")).replace(".", "_").replace("-", "_")
-    # Full-path hash alongside the basename: two different sf_dirs with
-    # the same basename (e.g. two tmp copies of sf0.01) must not silently
-    # share bucketed data within a session.
-    import hashlib
-
-    path_tag = hashlib.md5(
-        os.path.abspath(sf_dir).encode("utf-8")
-    ).hexdigest()[:8]
+    The catalog name is the basename of an sf_dir-keyed
+    :func:`scratch_dir` path, so different fixture sets coexist in one
+    session; the table's files sit in the session warehouse, which like
+    the in-memory catalog lives exactly as long as the process."""
     # n_buckets is part of the name: bucket count IS the layout, and two
     # join sides only co-locate when their counts match — a different
     # count must regenerate, never silently reuse the old layout.
-    name = f"bkt_{table}_{base}_{path_tag}_b{n_buckets}_{_VERSION}"
+    name = os.path.basename(scratch_dir(f"bkt_{table}_b{n_buckets}", sf_dir))
     if not spark.catalog.tableExists(name):
-        # The in-memory catalog forgets tables across sessions while the
-        # warehouse dir persists; a location without catalog metadata has
-        # no bucket spec, so clear it and rewrite (CREATE would otherwise
-        # fail with LOCATION_ALREADY_EXISTS).
-        import shutil
-        from urllib.parse import urlparse
-
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        stale = os.path.join(wh, name)
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
         (
             load_table(spark, sf_dir, table)
             .write.mode("overwrite")
@@ -128,18 +109,9 @@ def j_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def partitioned_events(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
-    """Events re-written partitionBy(day) into the warehouse on first
-    use per (sf_dir, version) — same one-time-layout-job convention as
-    bucketed_table."""
-    import hashlib
-
-    base = os.path.basename(sf_dir.rstrip("/")).replace(".", "_").replace("-", "_")
-    path_tag = hashlib.md5(os.path.abspath(sf_dir).encode("utf-8")).hexdigest()[:8]
-    name = f"part_events_{base}_{path_tag}_{_VERSION}"
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    loc = os.path.join(wh, name)
+    """Events re-written partitionBy(day) on first use per sf_dir — same
+    one-time-layout-job convention as bucketed_table."""
+    loc = scratch_dir("part_events", sf_dir)
     marker = os.path.join(loc, "_SUCCESS")
     if not os.path.exists(marker):
         (

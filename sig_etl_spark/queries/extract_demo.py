@@ -9,7 +9,6 @@ order, whitespace, explode) breaks the hash.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,6 +16,7 @@ from pyspark.sql import functions as F
 
 from sig_etl_spark.extract import extract_records, stabilize_columns
 from sig_etl_spark.queries import register
+from sig_etl_spark.session import scratch_dir
 from sig_etl_spark.tables import load_table
 
 _ORACLE = """
@@ -211,46 +211,32 @@ _LANDING_STATES = ["TX", "CA", "NY", "WA"]
 _N_PAGES = 20
 
 
-def _landing_dir(spark: SparkSession) -> str:
-    """Create the fixture landing dir once per host (idempotent)."""
-    import os
-
-    d = "/root/repo/.landing_demo"
-    # Version the fixture by its generating constants: editing the page
-    # count or state cycle invalidates the cache instead of silently
-    # serving stale files against a freshly built oracle.
-    done = os.path.join(d, ".complete")
-    version = f"{_N_PAGES}:{','.join(_LANDING_STATES)}"
-    stale = True
-    if os.path.exists(done):
-        with open(done) as f:
-            stale = f.read() != version
-    if stale:
-        os.makedirs(d, exist_ok=True)
-        for i in range(_N_PAGES):
-            state = _LANDING_STATES[i % len(_LANDING_STATES)]
-            rows = "".join(
-                f"<tr><td>{i}-{j}</td><td>{i * 100 + j}</td></tr>"
-                for j in range(1 + i % 3)
-            )
-            html = (
-                "<html><body><table><thead><tr><th>k</th><th>v</th></tr>"
-                f"</thead><tbody>{rows}</tbody></table></body></html>"
-            )
-            with open(os.path.join(d, f"page_{state}_{i}.html"), "w") as f:
-                f.write(html)
-            # P9 decoys: same stem, wrong extension - must be pruned by glob
-            with open(os.path.join(d, f"page_{state}_{i}.txt"), "w") as f:
-                f.write("not html")
-        with open(done, "w") as f:
-            f.write(version)
+def _landing_dir() -> str:
+    """Create the fixture landing dir once per process (idempotent)."""
+    d = scratch_dir("landing")
+    if os.path.isdir(d):
+        return d
+    os.makedirs(d)
     # Deterministic mtimes (base + page index) so O1's most-recent-first
-    # ordering is reproducible; re-applied every call because filesystem
-    # copies / checkouts don't preserve them.
+    # ordering is reproducible.
     base = 1_700_000_000
     for i in range(_N_PAGES):
         state = _LANDING_STATES[i % len(_LANDING_STATES)]
-        os.utime(os.path.join(d, f"page_{state}_{i}.html"), (base + i, base + i))
+        rows = "".join(
+            f"<tr><td>{i}-{j}</td><td>{i * 100 + j}</td></tr>"
+            for j in range(1 + i % 3)
+        )
+        html = (
+            "<html><body><table><thead><tr><th>k</th><th>v</th></tr>"
+            f"</thead><tbody>{rows}</tbody></table></body></html>"
+        )
+        page = os.path.join(d, f"page_{state}_{i}.html")
+        with open(page, "w") as f:
+            f.write(html)
+        os.utime(page, (base + i, base + i))
+        # P9 decoys: same stem, wrong extension - must be pruned by glob
+        with open(os.path.join(d, f"page_{state}_{i}.txt"), "w") as f:
+            f.write("not html")
     return d
 
 
@@ -276,7 +262,7 @@ FROM rows_
 def extract_s2_landing_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sig_etl_spark.extract import read_landing
 
-    d = _landing_dir(spark)
+    d = _landing_dir()
     landed = read_landing(spark, d, glob="*.html")
     records = extract_records(
         landed, parser="table", partition_pattern=r"page_([A-Z]{2})_\d+\.html"
@@ -316,7 +302,7 @@ def csv_stage_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p_brand")
         ).alias("brand"),
     )
-    d = "/root/repo/.stage_demo"
+    d = scratch_dir("csv_stage", sf_dir)
     write_stage_csv(staged, d)
     return read_stage_csv(spark, d)
 
@@ -353,44 +339,6 @@ WHERE c_mktsegment IN ({", ".join("'" + s + "'" for s in _JDBC_SEGMENTS)})
 """
 
 
-_JDBC_STAGE_CLEANUP = [False]
-
-
-def _jdbc_stage_dir() -> str:
-    """Pid-keyed Derby staging directory: reap dead-pid siblings, remove
-    this process's own dir at exit (ADVICE r14 leak fix)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    base = tempfile.gettempdir()
-    try:
-        names = os.listdir(base)
-    except OSError:
-        names = []
-    for name in names:
-        if not name.startswith("sig_etl_stage_jdbc_"):
-            continue
-        try:
-            pid = int(name.rsplit("_", 1)[-1])
-        except ValueError:
-            continue
-        if pid == os.getpid():
-            continue
-        try:
-            os.kill(pid, 0)  # liveness probe only
-        except ProcessLookupError:
-            shutil.rmtree(os.path.join(base, name), ignore_errors=True)
-        except PermissionError:
-            pass  # alive under another uid — not ours to reap
-    d = os.path.join(base, f"sig_etl_stage_jdbc_{os.getpid()}")
-    if not _JDBC_STAGE_CLEANUP[0]:
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _JDBC_STAGE_CLEANUP[0] = True
-    return d
-
-
-
 @register(
     "jdbc_stage_roundtrip",
     oracle=_JDBC_ORACLE,
@@ -410,17 +358,9 @@ def jdbc_stage_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # real extract does with SELECT min(k), max(k).
     lo, hi = dim.agg(F.min("c_custkey"), F.max("c_custkey")).first()
     # Embedded Derby allows exactly one JVM per database directory
-    # (db.lck): a fixed path makes two concurrent harness processes
-    # (bench + verify + pytest smoke) collide on boot. The staging
-    # database is incidental — only the round-tripped rows matter — so
-    # key the directory by pid: stable within a process (overwrite mode
-    # reuses it across invocations), disjoint across processes. The dir
-    # is removed at interpreter exit, and stale dirs of DEAD pids are
-    # reaped on entry (round 15 — ADVICE r14: a recycled pid could
-    # otherwise inherit a crashed JVM's db.lck, which Derby refuses to
-    # boot over; live pids under another uid are left alone).
-    stage_dir = _jdbc_stage_dir()
-    url = f"jdbc:derby:{stage_dir}/stagedb;create=true"
+    # (db.lck); the per-process scratch root keeps concurrent runs apart,
+    # and overwrite mode reuses the database across calls.
+    url = f"jdbc:derby:{scratch_dir('stage_jdbc')}/stagedb;create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     # Spark's DerbyDialect maps StringType to CLOB, which Derby refuses
     # to compare in WHERE — force VARCHAR so the predicate can push down.
@@ -492,7 +432,7 @@ FROM rows_
 def extract_o1_latest_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sig_etl_spark.extract import latest_files, read_landing, slice_records
 
-    d = _landing_dir(spark)
+    d = _landing_dir()
     landed = read_landing(spark, d, glob="*.html")
     newest = latest_files(landed, _N_LATEST)
     records = extract_records(
@@ -515,11 +455,9 @@ _XLSX_ZIPS = [str(75000 + i) for i in range(10)]  # last two not in the dim
 
 
 def _excel_dim(spark: SparkSession):
-    import os
-
     from sig_etl_spark.sources import read_excel, write_xlsx
 
-    d = "/root/repo/.excel_demo"
+    d = scratch_dir("excel")
     path = os.path.join(d, "dim.xlsx")
     # Rewritten unconditionally: the file is dim-sized and written on the
     # driver, and an unconditional write can never serve a stale fixture
@@ -621,11 +559,7 @@ def jsonl_stage_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("meta"),
         "value",
     )
-    # Stage dir keyed by sf_dir (same discipline as parquet_schema_evolution)
-    # so interleaved verify (sf0.01) and bench (sf0.1) runs — or a lazily
-    # re-evaluated returned DataFrame — never read the other scale's data.
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    d = f"/root/repo/.jsonl_stage_demo_{tag}"
+    d = scratch_dir("jsonl_stage", sf_dir)
     staged.write.mode("overwrite").json(d)
     schema = StructType(
         [
@@ -681,9 +615,6 @@ def jsonl_stage_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         " proves no row or column is silently dropped",
 )
 def parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
     o = load_table(spark, sf_dir, "orders")
     v1 = o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey",
@@ -694,8 +625,7 @@ def parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
         F.col("o_orderpriority").alias("priority"),
     )
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    d = f"/root/repo/.schema_evo_demo/{tag}"
+    d = scratch_dir("schema_evo", sf_dir)
     v1.write.mode("overwrite").parquet(os.path.join(d, "batch=v1"))
     v2.write.mode("overwrite").parquet(os.path.join(d, "batch=v2"))
     return spark.read.option("mergeSchema", "true").option(
@@ -733,7 +663,7 @@ def orc_stage_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("price_cents"),
     )
-    d = "/root/repo/.stage_demo_orc"
+    d = scratch_dir("orc_stage", sf_dir)
     staged.write.mode("overwrite").orc(d)
     return spark.read.orc(d)
 
@@ -800,8 +730,7 @@ def jsonl_corrupt_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    d = f"/root/repo/.jsonl_corrupt_demo_{tag}"
+    d = scratch_dir("jsonl_corrupt", sf_dir)
     ev.select(line.alias("value")).write.mode("overwrite").text(d)
 
     schema = StructType(

@@ -31,6 +31,7 @@ from sig_etl_spark.functions import parse_name
 from sig_etl_spark.linkage import ColumnRule, MatchConfig, fuzzy_match
 from sig_etl_spark.pipeline import Pipeline
 from sig_etl_spark.queries import register
+from sig_etl_spark.session import scratch_dir
 from sig_etl_spark.tables import load_table
 
 _REQUIRED = 80.0
@@ -193,7 +194,7 @@ FROM near WHERE rn = 1
 def pipeline_e2e_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipe = Pipeline(
         spark=spark,
-        workdir="/root/repo/.pipeline_demo",
+        workdir=scratch_dir("pipeline", sf_dir),
         base_name="DemoRatings-",
         stages={
             "extract": _extract_stage(sf_dir),

@@ -1,7 +1,8 @@
 """SparkSession builder for the engine.
 
-Defaults are chosen for correctness at local[32] test scale while keeping
-the knobs that matter at 100 TB explicit:
+Defaults are chosen for correctness at local test scale (one core and one
+shuffle partition per CPU this process may run on) while keeping the knobs
+that matter at 100 TB explicit:
 
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing)
 - Arrow on (every Pandas UDF crosses the JVM/Python boundary in batches)
@@ -11,11 +12,42 @@ the knobs that matter at 100 TB explicit:
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Cores for local mode: SPARK_GRAFT_CPUS if set, else the CPUs this process
+# may run on (its affinity, which a container or taskset can narrow below
+# the machine's count).
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+DEFAULT_SHUFFLE_PARTITIONS = DEFAULT_CPUS
+
+_scratch_root: str | None = None
+
+
+def scratch_dir(name: str, sf_dir: str | None = None) -> str:
+    """Path of the driver-side scratch directory ``name`` (not created).
+
+    Every file a query builder writes (stage round-trips, fixtures, the
+    Derby staging database, the catalog warehouse) lives under one root
+    made by ``tempfile.mkdtemp`` on the first call and removed when the
+    interpreter exits, so concurrent runs never share scratch state and
+    nothing lands in the checkout; ``TMPDIR`` moves the root. The root is
+    made lazily because pandas-UDF workers import this package too.
+    Output derived from a fixture set passes its ``sf_dir``: the name is
+    then keyed by that path, so two scales read in one process never see
+    each other's files."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="sig_etl_")
+        atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    if sf_dir is not None:
+        name += "_" + hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
+    return os.path.join(_scratch_root, name)
 
 
 def get_spark(
@@ -27,9 +59,8 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     On a cluster, ``master`` comes from spark-submit; locally we default to
-    ``local[$SPARK_GRAFT_CPUS]``.
+    ``local[DEFAULT_CPUS]``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         # Adaptive execution: coalesce post-shuffle partitions, split skewed
@@ -59,19 +90,21 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # Pin the warehouse (bucketed catalog tables) inside the repo
-        # regardless of the caller's CWD.
+        # The warehouse (bucketed catalog tables) is scratch: the in-memory
+        # catalog that indexes it dies with the process anyway.
+        .config("spark.sql.warehouse.dir", scratch_dir("spark-warehouse"))
+        # Embedded Derby (the JDBC staging query) logs to ./derby.log
+        # unless told otherwise.
         .config(
-            "spark.sql.warehouse.dir",
-            os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                         "spark-warehouse"),
+            "spark.driver.extraJavaOptions",
+            f"-Dderby.stream.error.file={scratch_dir('derby.log')}",
         )
         .config("spark.ui.enabled", "false")
     )
     if master:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
+        builder = builder.master(f"local[{DEFAULT_CPUS}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

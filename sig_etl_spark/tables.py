@@ -56,8 +56,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view for spark.sql queries."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

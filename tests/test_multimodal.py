@@ -328,6 +328,19 @@ def test_jpeg_coeff_entropy_layer_exact():
         assert np.array_equal(coeffs[0], plane), f"ri={ri}"
 
 
+def test_jpeg_quant_table_out_of_range_rejected():
+    """DQT entries are 8-bit and 0 is not a valid divisor: a table entry
+    of 256 or 0 raises instead of wrapping through uint8."""
+    import numpy as np
+
+    plane = np.zeros((1, 1, 8, 8), dtype=np.int32)
+    for bad in (256, 0):
+        quant = np.ones((8, 8), dtype=np.int32)
+        quant[3, 5] = bad
+        with pytest.raises(ValueError, match="outside 1..255"):
+            M.encode_jpeg_from_coeffs([plane], 8, 8, quant=quant)
+
+
 def test_jpeg_quant_table_respected():
     """A non-trivial quant table must round-trip through DQT: dequantized
     coefficients are exact multiples of the table entries."""

@@ -1166,3 +1166,32 @@ def test_ivf_kmeans_string_id_corpus_tier_schema_parity(spark):
     )
     assert a.schema == b.schema
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+
+
+def test_ivfpq_probe_dot_is_double_on_float_arrays(spark):
+    """The query's cell probe multiplies in double: an array<float>
+    embedding probes the same cells (and so returns the same rows) as the
+    same vectors cast to array<double>. The query sits within float32
+    rounding of the bisector of the two cells, so a float product
+    (x * y on float elements) probes the other cell."""
+    c1 = [0.37108397483825684, 0.3009185492992401, 0.37689346075057983,
+          -0.22215715050697327]
+    c2 = [-0.7298070192337036, 0.4429766833782196, 0.05070864409208298,
+          -0.37951624393463135]
+    q = [-0.20716731250286102, 0.937956690788269, 0.6359922885894775,
+         -0.7485512495040894]
+    schema = "vec_id long, embedding array<float>"
+    queries = spark.createDataFrame([(0, q)], schema)
+    corpus = spark.createDataFrame([(1, c1), (2, c2)], schema)
+
+    def top(vec):
+        return S.ivfpq_topk(
+            queries.select("vec_id", vec.alias("embedding")),
+            corpus.select("vec_id", vec.alias("embedding")),
+            "vec_id", "embedding", k=1, n_centroids=2, nprobe=1,
+            m_subs=2, ksub=2, dim=4, shortlist=2,
+        ).collect()
+
+    as_float = top(F.col("embedding"))
+    as_double = top(F.col("embedding").cast("array<double>"))
+    assert as_float == as_double and as_double
