@@ -19,7 +19,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from sig_etl_spark.queries import QUERIES  # noqa: E402
 from sig_etl_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
@@ -93,6 +94,11 @@ def _run_fresh_subset(names: list[str]) -> dict | None:
 
 
 def main() -> int:
+    # Spark's Python workers see PYTHONPATH, not sys.path: export the
+    # checkout before any session starts, so any working directory works.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # Parse "sf0.1" -> 0.1 from the directory name if possible.
     base = os.path.basename(sf_dir.rstrip("/"))

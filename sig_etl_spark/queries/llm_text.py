@@ -1914,14 +1914,15 @@ def llm_token_fluency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # llm_decontaminate (same oracle — the bloom is transparent), different
 # 100 TB shape. The plain version anti-joins every training row against
 # the benchmark set; here a sketch-sized bloom filter of benchmark
-# fingerprints (md5-derived bits, deterministic, 16 KiB of plan
-# literal) splits training rows FIRST: bloom-negative rows are
-# DEFINITELY clean and keep with zero join work (the overwhelming
-# majority), and only bloom-positive rows (true overlaps + ~fp-rate
-# noise) reach the exact anti-join that removes false positives. When
-# the benchmark set outgrows a broadcast, this is the shape that
-# survives: the filter stays KiB-sized no matter how large either side
-# grows — same register discipline as j_bloom_pruned.
+# fingerprints (the engine's xxhash64 bits: deterministic, and exempt
+# from portable hashing because the exact anti-join drops every false
+# positive; 8 KiB of plan literal) splits training rows FIRST:
+# bloom-negative rows are DEFINITELY clean and keep with zero join
+# work (the overwhelming majority), and only bloom-positive rows (true
+# overlaps + ~fp-rate noise) reach the exact anti-join that removes
+# false positives. When the benchmark set outgrows a broadcast, this is
+# the shape that survives: the filter stays KiB-sized no matter how
+# large either side grows — same register discipline as j_bloom_pruned.
 # ---------------------------------------------------------------------------
 
 

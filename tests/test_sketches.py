@@ -107,6 +107,94 @@ def test_bloom_words_sketch_sized(spark, sf_dir):
     assert any(w != 0 for w in words)
 
 
+def _false_negatives(df, words, m_bits, k) -> int:
+    from sig_etl_spark import sketches as SK
+
+    return df.where(~SK.bloom_member(words, "key", m_bits, k)).count()
+
+
+def test_bloom_null_key_gives_null_predicate(spark):
+    """NULL in, NULL out (both decontamination NULL policies coalesce on
+    it), and a NULL build key sets no bit rather than failing the build."""
+    from sig_etl_spark import sketches as SK
+
+    m_bits, k = 1 << 10, 3
+    words = SK.bloom_words(
+        spark.createDataFrame([("a",), (None,)], "key string"), "key", m_bits, k
+    )
+    assert words == SK.bloom_words(
+        spark.createDataFrame([("a",)], "key string"), "key", m_bits, k
+    )
+    probe = spark.createDataFrame([("a",), (None,)], "key string")
+    got = dict(
+        probe.select("key", SK.bloom_member(words, "key", m_bits, k)).collect()
+    )
+    assert got == {"a": True, None: None}
+
+
+def test_bloom_int_build_key_finds_bigint_probe_key(spark):
+    """Keys are hashed as strings, so an INT build side and a BIGINT probe
+    side of the same values hit the same bits; a type-keyed hash would
+    drop nearly every match here."""
+    from sig_etl_spark import sketches as SK
+
+    m_bits, k = 1 << 16, 3
+    build = spark.range(5000).selectExpr("cast(id * 7 - 9000 as int) as key")
+    words = SK.bloom_words(build, "key", m_bits, k)
+    probe = build.selectExpr("cast(key as bigint) as key")
+    assert _false_negatives(probe, words, m_bits, k) == 0
+    # and the filter is not trivially all-ones: disjoint keys mostly miss
+    others = spark.range(5000).selectExpr("id * 7 + 100000 as key")
+    assert _false_negatives(others, words, m_bits, k) > 4500
+
+
+def test_bloom_no_false_negatives_random_keys(spark):
+    import random
+
+    from sig_etl_spark import sketches as SK
+
+    rng = random.Random(11)
+    alphabet = "abcXYZ019 _-'\"é字🙂"
+    strings = ["".join(rng.choices(alphabet, k=rng.randint(0, 30)))
+               for _ in range(3000)]
+    longs = [rng.randint(-(1 << 63), (1 << 63) - 1) for _ in range(3000)]
+    longs += [-(1 << 63), (1 << 63) - 1, 0, -1]
+    m_bits, k = 1 << 14, 4
+    for values, dtype in ((strings, "string"), (longs, "bigint")):
+        df = spark.createDataFrame([(v,) for v in values], f"key {dtype}")
+        words = SK.bloom_words(df, "key", m_bits, k)
+        assert any(w < 0 for w in words)  # bit 63 is reachable
+        assert _false_negatives(df, words, m_bits, k) == 0, dtype
+
+
+def test_bloom_word_literal_spans_the_long_range(spark):
+    """Words are written into the plan as bigint literals; the two ends
+    of the range (bit 63 alone, all bits) must parse and test right."""
+    m_bits = 128
+    keys = spark.range(200).selectExpr("id as key")
+    assert _false_negatives(keys, [-1, -1], m_bits, 2) == 0
+    assert _false_negatives(keys, [-(1 << 63), (1 << 63) - 1], m_bits, 1) > 0
+
+
+def test_bloom_probe_plan_has_no_portable_hash(spark, sf_dir):
+    """The hot probe stays on the engine's codegen'd hash: no md5/conv
+    chain in the optimized plan of the prune or of j_bloom_pruned."""
+    from sig_etl_spark import sketches as SK
+    from sig_etl_spark.queries.sketch_demo import _BLOOM_K, _BLOOM_M, _ORDERS_PRED
+    from sig_etl_spark.tables import load_table
+
+    orders = load_table(spark, sf_dir, "orders").where(_ORDERS_PRED)
+    li = load_table(spark, sf_dir, "lineitem")
+    words = SK.bloom_words(orders, "o_orderkey", _BLOOM_M, _BLOOM_K)
+    for df in (
+        SK.with_bloom_prune(li, words, "l_orderkey", _BLOOM_M, _BLOOM_K),
+        QUERIES["j_bloom_pruned"].builder(spark, sf_dir),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "xxhash64(" in plan
+        assert "md5(" not in plan and "conv(" not in plan
+
+
 def test_gaps_islands_intervals_are_consistent(spark, sf_dir):
     rows = QUERIES["events_gaps_islands"].builder(spark, sf_dir).collect()
     by_user: dict[int, list] = {}

@@ -26,7 +26,8 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from sig_etl_spark.queries import QUERIES, float_seam_lint
 from sig_etl_spark.session import get_spark
@@ -71,6 +72,11 @@ def frame_hash(df: pd.DataFrame) -> str:
 
 
 def main() -> int:
+    # Spark's Python workers see PYTHONPATH, not sys.path: export the
+    # checkout before any session starts, so any working directory works.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("names", nargs="*")
