@@ -153,9 +153,10 @@ def fuzzy_match(x: DataFrame, y: DataFrame, config: MatchConfig) -> DataFrame:
     # the pair blow-up, so this shuffle is ~free, and a broadcast-hash
     # join (y broadcast — only the right side of a LEFT join can be
     # broadcast) preserves the streamed side's hash partitioning on
-    # _x_row_id. The pair frame is therefore *born* 32-way parallel AND
-    # already satisfies the best-match windows' required distribution —
-    # zero post-join shuffles of the exploded pair frame. When y is too
+    # _x_row_id. The pair frame is therefore *born* spread over the
+    # session's default parallelism AND already satisfies the best-match
+    # windows' required distribution — zero post-join shuffles of the
+    # exploded pair frame. When y is too
     # big to broadcast the join degrades to SMJ on the block keys and the
     # window adds its own exchange, which is then unavoidable anyway.
     parallelism = x.sparkSession.sparkContext.defaultParallelism

@@ -2,26 +2,29 @@
 with typed metadata.
 
 The Spark-side machinery here is real and tested — schemas, Arrow batch
-shapes, mapInPandas signatures, frame explosion, partitioning. The codec
-layer is tiered: REAL stdlib decoders for binary PPM (P6), non-interlaced
-8-bit PNG (zlib inflate + filter reversal, CRC-checked) and baseline
-4:4:4 JPEG (Huffman entropy decode + IDCT), PIL for everything else when
-importable, and an honest NotImplementedError for formats neither covers
-(this container ships no image/audio libraries). The byte-statistics featurizer (``_decode_bytes``)
-remains a deterministic stand-in for an embedding model; swapping a real
-one changes only the batch body — every schema, batch and shuffle stays
-as tested.
+shapes, frame explosion, partitioning. Every media op runs through one
+execution path, ``map_media``: a per-row Python function over
+``mapInPandas`` Arrow batches, so an op is its row body plus its output
+schema. The codec layer is tiered: REAL stdlib decoders for binary PPM
+(P6), non-interlaced 8-bit PNG (zlib inflate + filter reversal,
+CRC-checked) and baseline 4:4:4 JPEG (Huffman entropy decode + IDCT), PIL
+for everything else when importable, and an honest NotImplementedError
+for formats neither covers (this container ships no image/audio
+libraries). The byte-statistics featurizer (``_decode_bytes``) remains a
+deterministic stand-in for an embedding model; swapping a real one
+changes only its row body — every schema, batch and shuffle stays as
+tested.
 
-At 100 TB: media rows are large and skew-prone — features are computed in
-``mapInPandas`` (streaming Arrow batches, bounded by
-spark.sql.execution.arrow.maxRecordsPerBatch), and ``partition_media``
-spreads rows by id hash so one executor never holds a pathological batch
-of 4K videos.
+At 100 TB: media rows are large and skew-prone — ``map_media`` streams
+Arrow batches bounded by spark.sql.execution.arrow.maxRecordsPerBatch,
+and ``partition_media`` spreads rows by id hash over the session's
+default parallelism so one executor never holds a pathological batch of
+4K videos.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -78,6 +81,45 @@ FRAMES_SCHEMA = StructType(
         StructField("frame", BinaryType()),
     ]
 )
+
+RESIZED_SCHEMA = StructType(
+    [
+        StructField("media_id", LongType()),
+        StructField("kind", StringType()),
+        StructField("content", BinaryType()),
+        StructField("width", IntegerType()),
+        StructField("height", IntegerType()),
+        StructField("format", StringType()),
+    ]
+)
+
+
+def map_media(
+    df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: StructType
+) -> DataFrame:
+    """Run ``fn(*row)`` over every row of ``df`` in Arrow batches.
+
+    ``fn`` takes the row's values in column order and yields output
+    tuples in ``schema`` order: one for a per-row op, several for an
+    exploding one (frames, windows). Batches stream through
+    ``mapInPandas``, so a blob never leaves its executor and no task
+    holds more than one batch of rows."""
+    names = schema.fieldNames()
+
+    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [out for row in pdf.itertuples(index=False, name=None) for out in fn(*row)]
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    return df.mapInPandas(_batches, schema)
+
+
+def partition_media(df: DataFrame) -> DataFrame:
+    """Spread media rows by ``media_id`` hash over the session's default
+    parallelism (one task per core; skew guard for large blobs). The
+    count is explicit because AQE coalesces a bare id-only repartition
+    into fewer, slower tasks."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, "media_id")
 
 
 def _decode_bytes(content: bytes) -> np.ndarray:
@@ -1071,26 +1113,16 @@ def decode_audio_stats(df: DataFrame) -> DataFrame:
     contract bit-exact across engines (same discipline as
     decode_image_stats)."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "media_id", "sample_rate", "n_channels", "n_frames",
-                "sum_ch0", "sum_ch1", "peak_abs")}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                samples, rate = decode_wav(bytes(content))
-                sums = samples.sum(axis=0, dtype=np.int64)
-                out["media_id"].append(mid)
-                out["sample_rate"].append(rate)
-                out["n_channels"].append(samples.shape[1])
-                out["n_frames"].append(samples.shape[0])
-                out["sum_ch0"].append(int(sums[0]))
-                out["sum_ch1"].append(int(sums[1]) if samples.shape[1] > 1 else 0)
-                out["peak_abs"].append(
-                    int(np.abs(samples.astype(np.int32)).max(initial=0))
-                )
-            yield pd.DataFrame(out)
+    def _stats(mid, content):
+        samples, rate = decode_wav(bytes(content))
+        sums = samples.sum(axis=0, dtype=np.int64)
+        yield (
+            mid, rate, samples.shape[1], samples.shape[0], int(sums[0]),
+            int(sums[1]) if samples.shape[1] > 1 else 0,
+            int(np.abs(samples.astype(np.int32)).max(initial=0)),
+        )
 
-    return df.mapInPandas(_stats, AUDIO_STATS_SCHEMA)
+    return map_media(df.select("media_id", "content"), _stats, AUDIO_STATS_SCHEMA)
 
 
 def decode_real(content: bytes) -> np.ndarray:
@@ -1137,26 +1169,14 @@ def decode_image_stats(df: DataFrame) -> DataFrame:
     per-channel pixel sums from the raster. Integer sums (not float
     means) keep the contract bit-exact across engines.
 
-    Same scale shape as the other media ops: streaming Arrow batches
-    through mapInPandas, no row-at-a-time Python, blob never leaves the
-    executor."""
+    Same scale shape as the other media ops (``map_media``)."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "media_id", "width", "height", "sum_r", "sum_g", "sum_b")}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                px = decode_real(bytes(content))
-                sums = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                out["media_id"].append(mid)
-                out["height"].append(px.shape[0])
-                out["width"].append(px.shape[1])
-                out["sum_r"].append(int(sums[0]))
-                out["sum_g"].append(int(sums[1]))
-                out["sum_b"].append(int(sums[2]))
-            yield pd.DataFrame(out)
+    def _stats(mid, content):
+        px = decode_real(bytes(content))
+        sums = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
+        yield mid, px.shape[1], px.shape[0], int(sums[0]), int(sums[1]), int(sums[2])
 
-    return df.mapInPandas(_stats, IMAGE_STATS_SCHEMA)
+    return map_media(df.select("media_id", "content"), _stats, IMAGE_STATS_SCHEMA)
 
 
 JPEG_COEFF_STATS_SCHEMA = StructType(
@@ -1179,140 +1199,81 @@ def decode_jpeg_coeff_stats(df: DataFrame) -> DataFrame:
     integers over the coefficient planes, so the whole entropy path is
     bit-checkable (a one-bit Huffman slip corrupts every later value).
 
-    Scale shape: identical to decode_image_stats — streaming Arrow
-    batches, blob never leaves the executor."""
+    Scale shape: identical to decode_image_stats."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "media_id", "width", "height", "n_blocks",
-                "sum_dc", "sum_coeff", "sum_abs", "n_nonzero_ac")}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                w, h, coeffs = decode_jpeg_coeffs(bytes(content))
-                n_blocks = sum(p.shape[0] * p.shape[1] for p in coeffs)
-                sum_dc = sum(int(p[:, :, 0, 0].sum()) for p in coeffs)
-                sum_coeff = sum(int(p.sum(dtype=np.int64)) for p in coeffs)
-                sum_abs = sum(
-                    int(np.abs(p).sum(dtype=np.int64)) for p in coeffs
-                )
-                nz = sum(
-                    int(np.count_nonzero(p)) for p in coeffs
-                ) - sum(
-                    int(np.count_nonzero(p[:, :, 0, 0])) for p in coeffs
-                )
-                out["media_id"].append(mid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_blocks"].append(n_blocks)
-                out["sum_dc"].append(sum_dc)
-                out["sum_coeff"].append(sum_coeff)
-                out["sum_abs"].append(sum_abs)
-                out["n_nonzero_ac"].append(nz)
-            yield pd.DataFrame(out)
+    def _stats(mid, content):
+        w, h, coeffs = decode_jpeg_coeffs(bytes(content))
+        n_blocks = sum(p.shape[0] * p.shape[1] for p in coeffs)
+        sum_dc = sum(int(p[:, :, 0, 0].sum()) for p in coeffs)
+        sum_coeff = sum(int(p.sum(dtype=np.int64)) for p in coeffs)
+        sum_abs = sum(int(np.abs(p).sum(dtype=np.int64)) for p in coeffs)
+        nz = sum(int(np.count_nonzero(p)) for p in coeffs) - sum(
+            int(np.count_nonzero(p[:, :, 0, 0])) for p in coeffs
+        )
+        yield mid, w, h, n_blocks, sum_dc, sum_coeff, sum_abs, nz
 
-    return df.mapInPandas(_stats, JPEG_COEFF_STATS_SCHEMA)
-
-
-def partition_media(df: DataFrame, n: int | None = None) -> DataFrame:
-    """Spread media rows by id hash (skew guard for large blobs)."""
-    return df.repartition(n, F.col("media_id")) if n else df.repartition(F.col("media_id"))
+    return map_media(df.select("media_id", "content"), _stats, JPEG_COEFF_STATS_SCHEMA)
 
 
 def extract_features(df: DataFrame) -> DataFrame:
-    """mapInPandas feature extraction: bytes -> FEATURE_DIM float vector.
+    """Feature extraction: bytes -> FEATURE_DIM float vector.
 
     Fake featurizer = bucketed byte histogram (deterministic); a real one
     would be an embedding model over decoded pixels/samples — identical
-    plumbing, different batch body.
+    plumbing, different row body.
     """
 
-    def _featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for content in pdf["content"]:
-                arr = _decode_bytes(bytes(content) if content is not None else b"")
-                hist, _ = np.histogram(arr, bins=FEATURE_DIM, range=(0, 256))
-                denom = max(len(arr), 1)
-                feats.append((hist / denom).astype(np.float32).tolist())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": [
-                        len(bytes(c)) if c is not None else 0 for c in pdf["content"]
-                    ],
-                    "features": feats,
-                }
-            )
+    def _featurize(mid, kind, content):
+        raw = bytes(content) if content is not None else b""
+        arr = _decode_bytes(raw)
+        hist, _ = np.histogram(arr, bins=FEATURE_DIM, range=(0, 256))
+        yield mid, kind, len(raw), (hist / max(len(arr), 1)).astype(np.float32).tolist()
 
-    return df.mapInPandas(_featurize, FEATURES_SCHEMA)
+    return map_media(df.select("media_id", "kind", "content"), _featurize, FEATURES_SCHEMA)
 
 
 def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """mapInPandas resize: output blob is exactly width*height bytes.
+    """Resize: output blob is exactly width*height bytes.
 
     STUB body (truncate/tile the source bytes deterministically); the PIL
     path would decode->resize->re-encode. Schema: original columns with
     content/width/height replaced.
     """
-    out_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("kind", StringType()),
-            StructField("content", BinaryType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("format", StringType()),
-        ]
-    )
     target = width * height
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for content in pdf["content"]:
-                raw = bytes(content) if content is not None else b"\x00"
-                reps = -(-target // max(len(raw), 1))  # ceil
-                blobs.append((raw * reps)[:target])
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "content": blobs,
-                    "width": width,
-                    "height": height,
-                    "format": ["raw"] * len(pdf),
-                }
-            )
+    def _resize(mid, kind, content):
+        raw = bytes(content) if content is not None else b"\x00"
+        reps = -(-target // max(len(raw), 1))  # ceil
+        yield mid, kind, (raw * reps)[:target], width, height, "raw"
 
-    return df.filter(F.col("kind") == "image").mapInPandas(_resize, out_schema)
+    images = df.filter(F.col("kind") == "image").select("media_id", "kind", "content")
+    return map_media(images, _resize, RESIZED_SCHEMA)
+
+
+def frame_slices(content, duration_ms, every_ms: int) -> Iterator[tuple[int, bytes]]:
+    """(frame_idx, frame bytes) per sampled frame of one video: the frame
+    count comes from duration_ms, each frame a deterministic byte slice
+    standing in for an ffmpeg frame grab (never empty)."""
+    raw = bytes(content) if content is not None else b"\x00"
+    n_frames = max(int(duration_ms or 0) // every_ms, 1)
+    step = max(len(raw) // n_frames, 1)
+    for i in range(n_frames):
+        yield i, raw[i * step : i * step + step] or b"\x00"
 
 
 def sample_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video -> one row per sampled frame (frame_idx, ts_ms, frame bytes).
 
-    Frame count comes from duration_ms metadata; the frame blob is a
-    deterministic byte slice standing in for an ffmpeg frame grab. The
-    explosion happens inside mapInPandas so a 2-hour video never
+    The explosion happens inside ``map_media`` so a 2-hour video never
     round-trips through a single Python row.
     """
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"media_id": [], "frame_idx": [], "ts_ms": [], "frame": []}
-            for _, row in pdf.iterrows():
-                raw = bytes(row["content"]) if row["content"] is not None else b"\x00"
-                duration = int(row["duration_ms"] or 0)
-                n_frames = max(duration // every_ms, 1)
-                step = max(len(raw) // n_frames, 1)
-                for i in range(n_frames):
-                    out["media_id"].append(row["media_id"])
-                    out["frame_idx"].append(i)
-                    out["ts_ms"].append(i * every_ms)
-                    out["frame"].append(raw[i * step : i * step + step] or b"\x00")
-            yield pd.DataFrame(out)
+    def _sample(mid, content, duration_ms):
+        for i, frame in frame_slices(content, duration_ms, every_ms):
+            yield mid, i, i * every_ms, frame
 
-    return df.filter(F.col("kind") == "video").mapInPandas(_sample, FRAMES_SCHEMA)
+    videos = df.filter(F.col("kind") == "video").select("media_id", "content", "duration_ms")
+    return map_media(videos, _sample, FRAMES_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = StructType(
@@ -1332,27 +1293,17 @@ def decode_audio_features(df: DataFrame) -> DataFrame:
     exact integer, and RMS = sqrt(energy / n_frames). The first two are
     integer-exact across engines; RMS is one division of exact integers
     plus one sqrt — both correctly-rounded IEEE ops, so it hashes too.
-    Same Arrow mapInPandas shape as decode_audio_stats: the decode cost
-    is per-batch vectorized numpy, no per-row Python in the stream."""
+    Same shape as decode_audio_stats: per-row vectorized numpy."""
 
-    def _feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "media_id", "n_frames", "zero_crossings", "energy", "rms")}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                samples, _rate = decode_wav(bytes(content))
-                ch0 = samples[:, 0].astype(np.int64)
-                n = ch0.shape[0]
-                zc = int(((ch0[1:] * ch0[:-1]) < 0).sum()) if n > 1 else 0
-                energy = int((ch0 * ch0).sum())
-                out["media_id"].append(mid)
-                out["n_frames"].append(n)
-                out["zero_crossings"].append(zc)
-                out["energy"].append(energy)
-                out["rms"].append(float(np.sqrt(energy / n)) if n else 0.0)
-            yield pd.DataFrame(out)
+    def _feats(mid, content):
+        samples, _rate = decode_wav(bytes(content))
+        ch0 = samples[:, 0].astype(np.int64)
+        n = ch0.shape[0]
+        zc = int(((ch0[1:] * ch0[:-1]) < 0).sum()) if n > 1 else 0
+        energy = int((ch0 * ch0).sum())
+        yield mid, n, zc, energy, float(np.sqrt(energy / n)) if n else 0.0
 
-    return df.mapInPandas(_feats, AUDIO_FEATURES_SCHEMA)
+    return map_media(df.select("media_id", "content"), _feats, AUDIO_FEATURES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1404,25 +1355,19 @@ PHASH_SCHEMA = StructType(
 )
 
 
+def _signed64(h: int) -> int:
+    """Fold an unsigned 64-bit hash to signed so it fits a plain BIGINT."""
+    return h - (1 << 64) if h >= 1 << 63 else h
+
+
 def phash_images(df: DataFrame) -> DataFrame:
     """(media_id, content) -> (media_id, phash BIGINT) via the REAL
-    decode path (``decode_real``) + ``phash64_pixels``, streamed in Arrow
-    batches through mapInPandas — blob never leaves the executor."""
+    decode path (``decode_real``) + ``phash64_pixels``."""
 
-    def _hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hs = [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                px = decode_real(bytes(content))
-                h = phash64_pixels(px)
-                # fold to signed 64-bit so the column is a plain BIGINT
-                if h >= 1 << 63:
-                    h -= 1 << 64
-                ids.append(int(mid))
-                hs.append(h)
-            yield pd.DataFrame({"media_id": ids, "phash": hs})
+    def _hash(mid, content):
+        yield mid, _signed64(phash64_pixels(decode_real(bytes(content))))
 
-    return df.select("media_id", "content").mapInPandas(_hashes, PHASH_SCHEMA)
+    return map_media(df.select("media_id", "content"), _hash, PHASH_SCHEMA)
 
 
 def phash_near_dup_pairs(
@@ -1504,6 +1449,9 @@ def phash_near_dup_pairs(
 AFP_FRAME = 512
 AFP_BAND_EDGES = (1, 8, 32, 96, 257)  # rFFT bin ranges: 4 log-spaced bands
 AFP_TRANSITIONS = 16
+AFP_SCHEMA = StructType(
+    [StructField("media_id", LongType()), StructField("fp", LongType())]
+)
 
 
 def audio_fingerprint64(samples: np.ndarray) -> int:
@@ -1549,21 +1497,9 @@ def audio_fingerprint64(samples: np.ndarray) -> int:
 
 def fingerprint_audio(df: DataFrame) -> DataFrame:
     """(media_id, content WAV bytes) -> (media_id, fp BIGINT) via the real
-    RIFF decode path, Arrow-batched through mapInPandas."""
-    schema = StructType(
-        [StructField("media_id", LongType()), StructField("fp", LongType())]
-    )
+    RIFF decode path."""
 
-    def _fps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fps = [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                samples, _rate = decode_wav(bytes(content))
-                h = audio_fingerprint64(samples)
-                if h >= 1 << 63:
-                    h -= 1 << 64
-                ids.append(int(mid))
-                fps.append(h)
-            yield pd.DataFrame({"media_id": ids, "fp": fps})
+    def _fp(mid, content):
+        yield mid, _signed64(audio_fingerprint64(decode_wav(bytes(content))[0]))
 
-    return df.select("media_id", "content").mapInPandas(_fps, schema)
+    return map_media(df.select("media_id", "content"), _fp, AFP_SCHEMA)

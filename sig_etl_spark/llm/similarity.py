@@ -112,12 +112,7 @@ def brute_force_topk(
                 "query_id_norm2", "corpus_id_norm2",
             ).alias("cosine"),
         )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )
+    return _topk_by_cosine(scored, k)
 
 
 def _brute_scored_np(
@@ -300,14 +295,7 @@ def int8_topk(
         )
     else:
         raise ValueError(f"unknown impl {impl!r}")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("corpus_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )
+    return _topk_by_cosine(scored, k)
 
 
 def _int8_scored_np(
@@ -647,12 +635,7 @@ def lsh_topk(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("corpus_id"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )
+    return _topk_by_cosine(cands, k)
 
 
 def ivf_topk(
@@ -883,12 +866,7 @@ def _ivf_topk_tail(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
     # (rank<=1) and a query probes distinct cells, so a (query, corpus)
     # pair arises at most once — a dropDuplicates here would be a wasted
     # full shuffle of the candidate set.
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("corpus_id"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )
+    return _topk_by_cosine(cands, k)
 
 
 def ivf_incremental_topk(
@@ -1713,6 +1691,8 @@ def _adc_scored(pairs: DataFrame, m_subs: int) -> DataFrame:
 
 
 def _topk_by_cosine(scored: DataFrame, k: int) -> DataFrame:
+    """Top-k rows per query_id by (cosine DESC, corpus_id) with their
+    1-based rank: the one ranking every top-k search path shares."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("corpus_id")
     )

@@ -2,12 +2,13 @@
 
 The testdata has no real media, so these queries *manufacture* binary
 columns deterministically (content = UTF-8 bytes of ``documents.text``,
-metadata derived from doc_id) and drive the real mapInPandas codec
-plumbing (llm/multimodal.py) over them. Because the stub codecs are
-deterministic byte functions and the text is ASCII, every output is
-re-expressible in ANSI SQL — the DuckDB oracle checks the *plumbing*
-(batch shapes, explosion, slicing, histogramming) cell-for-cell. Real
-codecs swap into ``_decode_bytes`` without touching any of this wiring.
+metadata derived from doc_id) and drive the real codec plumbing
+(llm/multimodal.py, one ``map_media`` Arrow-batch path) over them.
+Because the stub codecs are deterministic byte functions and the text is
+ASCII, every output is re-expressible in ANSI SQL — the DuckDB oracle
+checks the *plumbing* (batch shapes, explosion, slicing, histogramming)
+cell-for-cell. Real codecs swap into ``_decode_bytes`` without touching
+any of this wiring.
 
 Reference scope: SURVEY §2 multimodal columns (decode / feature-extract /
 resize / frame-sample as Pandas UDFs over mapInPandas).
@@ -15,14 +16,45 @@ resize / frame-sample as Pandas UDFs over mapInPandas).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import hashlib
+
+import numpy as np
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from sig_etl_spark.llm.multimodal import (
+    _D32,
+    _ZIGZAG,
+    AFP_FRAME,
+    AFP_TRANSITIONS,
     FEATURE_DIM,
+    decode_audio_features,
+    decode_audio_stats,
     decode_image_stats,
+    decode_jpeg_coeff_stats,
+    decode_real,
+    decode_wav,
+    encode_jpeg,
+    encode_jpeg_from_coeffs,
+    encode_png,
+    encode_ppm,
+    encode_wav,
     extract_features,
+    fingerprint_audio,
+    frame_slices,
+    map_media,
     partition_media,
+    phash_images,
+    phash_near_dup_pairs,
     resize_images,
     sample_frames,
 )
@@ -35,21 +67,65 @@ _KINDS = ["image", "audio", "video"]
 def _media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> MEDIA_SCHEMA frame: content is the UTF-8 text bytes,
     kind cycles image/audio/video by doc_id, duration is 500*(1+id%7) ms."""
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        32, F.col("doc_id")
+    docs = load_table(spark, sf_dir, "documents")
+    return partition_media(
+        docs.select(
+            F.col("doc_id").alias("media_id"),
+            F.try_element_at(
+                F.array(*[F.lit(k) for k in _KINDS]),
+                (F.col("doc_id") % 3).cast("int") + 1,
+            ).alias("kind"),
+            F.encode("text", "UTF-8").alias("content"),
+            F.lit(64).cast("int").alias("width"),
+            F.lit(64).cast("int").alias("height"),
+            F.lit(16000).cast("int").alias("sample_rate"),
+            (F.lit(500) * (F.lit(1) + F.col("doc_id") % 7)).cast("int").alias("duration_ms"),
+            F.lit("raw").alias("format"),
+        )
     )
-    return docs.select(
+
+
+def _media_ids(
+    spark: SparkSession,
+    sf_dir: str,
+    twin_every: int = 0,
+    twin_offset: int = 0,
+    twin_noise: int = 0,
+) -> DataFrame:
+    """(media_id, seed, noise): one row per document (seed = doc_id,
+    noise 0) plus, when ``twin_every`` is set, a twin of every
+    twin_every-th document under media_id + twin_offset with noise
+    ``twin_noise``; spread by media id."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    ids = docs.select(
         F.col("doc_id").alias("media_id"),
-        F.try_element_at(
-            F.array(*[F.lit(k) for k in _KINDS]),
-            (F.col("doc_id") % 3).cast("int") + 1,
-        ).alias("kind"),
-        F.encode("text", "UTF-8").alias("content"),
-        F.lit(64).cast("int").alias("width"),
-        F.lit(64).cast("int").alias("height"),
-        F.lit(16000).cast("int").alias("sample_rate"),
-        (F.lit(500) * (F.lit(1) + F.col("doc_id") % 7)).cast("int").alias("duration_ms"),
-        F.lit("raw").alias("format"),
+        F.col("doc_id").alias("seed"),
+        F.lit(0).alias("noise"),
+    )
+    if twin_every:
+        ids = ids.unionByName(
+            docs.filter(F.col("doc_id") % twin_every == 0).select(
+                (F.col("doc_id") + twin_offset).alias("media_id"),
+                F.col("doc_id").alias("seed"),
+                F.lit(twin_noise).alias("noise"),
+            )
+        )
+    return partition_media(ids)
+
+
+_BLOB_SCHEMA = StructType(
+    [StructField("media_id", LongType()), StructField("content", BinaryType())]
+)
+
+
+def _blob_media(spark: SparkSession, sf_dir: str, blob, **twins) -> DataFrame:
+    """(media_id, content = blob(seed, noise)) over ``_media_ids``: the
+    fixture bytes are generated executor-side (codecs are Python, not
+    SQL), so no blob is ever materialized on the driver."""
+    return map_media(
+        _media_ids(spark, sf_dir, **twins),
+        lambda mid, seed, noise: [(mid, blob(seed, noise))],
+        _BLOB_SCHEMA,
     )
 
 
@@ -204,26 +280,22 @@ FROM px GROUP BY media_id, width, height
 """
 
 
-def _ppm_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        32, F.col("doc_id")
-    )
-    w = (F.lit(4) + F.col("doc_id") % 5).cast("int")
-    h = (F.lit(3) + F.col("doc_id") % 4).cast("int")
+def _ppm_content(seed: Column) -> Column:
+    """P6 PPM bytes built in SQL: a (4 + seed%5) x (3 + seed%4) raster
+    whose sample j is (seed*7 + j*13) % 95 + 32."""
+    w = (F.lit(4) + seed % 5).cast("int")
+    h = (F.lit(3) + seed % 4).cast("int")
     raster = F.array_join(
         F.transform(
             F.sequence(F.lit(0), (w * h * 3 - 1).cast("int")),
-            lambda j: F.char((F.col("doc_id") * 7 + j * 13) % 95 + 32),
+            lambda j: F.char((seed * 7 + j * 13) % 95 + 32),
         ),
         "",
     )
     header = F.concat(
         F.lit("P6\n"), w.cast("string"), F.lit(" "), h.cast("string"), F.lit("\n255\n")
     )
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.concat(header, raster), "UTF-8").alias("content"),
-    )
+    return F.encode(F.concat(header, raster), "UTF-8")
 
 
 @register(
@@ -234,7 +306,9 @@ def _ppm_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         " header fields and per-channel pixel sums arithmetically",
 )
 def mm_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = _ppm_media(spark, sf_dir)
+    media = _media_ids(spark, sf_dir).select(
+        "media_id", _ppm_content(F.col("seed")).alias("content")
+    )
     return decode_image_stats(media)
 
 
@@ -272,40 +346,13 @@ FROM px GROUP BY media_id, width, height
 """
 
 
-def _png_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id -> real PNG bytes of the closed-form raster. Encoding is
-    Python (zlib/CRC are not SQL expressions), so it runs in mapInPandas
-    — same Arrow-batch shape as the decode side."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-
-    from sig_etl_spark.llm.multimodal import encode_png
-
-    docs = partition_media(
-        load_table(spark, sf_dir, "documents").select(
-            F.col("doc_id").alias("media_id")
-        ),
-        32,
-    )
-    schema = StructType(
-        [StructField("media_id", LongType()), StructField("content", BinaryType())]
-    )
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                w, h = 4 + mid % 5, 3 + mid % 4
-                j = np.arange(w * h * 3, dtype=np.int64)
-                px = ((mid * 11 + j * 17) % 256).astype(np.uint8).reshape(h, w, 3)
-                blobs.append(encode_png(px))  # default: filters cycle 0..4
-            yield pd.DataFrame({"media_id": pdf["media_id"], "content": blobs})
-
-    return docs.mapInPandas(_make, schema)
+def _png_blob(seed: int, noise: int) -> bytes:
+    """Real PNG bytes of the closed-form raster (encoding is Python:
+    zlib/CRC are not SQL expressions). No twins, so ``noise`` is unused."""
+    w, h = 4 + seed % 5, 3 + seed % 4
+    j = np.arange(w * h * 3, dtype=np.int64)
+    px = ((seed * 11 + j * 17) % 256).astype(np.uint8).reshape(h, w, 3)
+    return encode_png(px)  # default: filters cycle 0..4
 
 
 @register(
@@ -316,8 +363,7 @@ def _png_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         " inside mapInPandas; oracle re-derives pixel sums arithmetically",
 )
 def mm_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = _png_media(spark, sf_dir)
-    return decode_image_stats(media)
+    return decode_image_stats(_blob_media(spark, sf_dir, _png_blob))
 
 
 # ---------------------------------------------------------------------------
@@ -355,41 +401,15 @@ FROM s GROUP BY media_id, sample_rate, n_channels, n_frames
 """
 
 
-def _wav_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id -> real WAV bytes of the closed-form PCM stream (struct
-    packing is Python, so mapInPandas — same Arrow shape as decode)."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-
-    from sig_etl_spark.llm.multimodal import encode_wav
-
-    docs = partition_media(
-        load_table(spark, sf_dir, "documents").select(
-            F.col("doc_id").alias("media_id")
-        ),
-        32,
-    )
-    schema = StructType(
-        [StructField("media_id", LongType()), StructField("content", BinaryType())]
-    )
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                channels = 1 + mid % 2
-                frames = 50 + mid % 64
-                rate = 8000 + 100 * (mid % 5)
-                j = np.arange(frames * channels, dtype=np.int64)
-                v = ((mid * 31 + j * 57) % 4001 - 2000).astype(np.int16)
-                blobs.append(encode_wav(v.reshape(frames, channels), rate))
-            yield pd.DataFrame({"media_id": pdf["media_id"], "content": blobs})
-
-    return docs.mapInPandas(_make, schema)
+def _wav_blob(seed: int, noise: int) -> bytes:
+    """Real WAV bytes of the closed-form PCM stream (struct packing is
+    Python). No twins, so ``noise`` is unused."""
+    channels = 1 + seed % 2
+    frames = 50 + seed % 64
+    rate = 8000 + 100 * (seed % 5)
+    j = np.arange(frames * channels, dtype=np.int64)
+    v = ((seed * 31 + j * 57) % 4001 - 2000).astype(np.int16)
+    return encode_wav(v.reshape(frames, channels), rate)
 
 
 @register(
@@ -401,10 +421,7 @@ def _wav_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         " arithmetically",
 )
 def mm_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sig_etl_spark.llm.multimodal import decode_audio_stats
-
-    media = _wav_media(spark, sf_dir)
-    return decode_audio_stats(media)
+    return decode_audio_stats(_blob_media(spark, sf_dir, _wav_blob))
 
 
 # ---------------------------------------------------------------------------
@@ -452,44 +469,15 @@ FROM px GROUP BY media_id, width, height
 """
 
 
-def _jpeg_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id -> real baseline-JPEG bytes of the constant-tile raster."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-
-    from sig_etl_spark.llm.multimodal import encode_jpeg
-
-    docs = partition_media(
-        load_table(spark, sf_dir, "documents").select(
-            F.col("doc_id").alias("media_id")
-        ),
-        32,
-    )
-    schema = StructType(
-        [StructField("media_id", LongType()), StructField("content", BinaryType())]
-    )
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                w = 8 * (2 + mid % 3) + mid % 5
-                h = 8 * (1 + mid % 2) + mid % 3
-                y, x = np.mgrid[0:h, 0:w]
-                v = ((mid * 13 + (y // 8) * 37 + (x // 8) * 11) % 256).astype(
-                    np.uint8
-                )
-                px = np.repeat(v[:, :, None], 3, axis=2)
-                blobs.append(
-                    encode_jpeg(px, restart_interval=2 if mid % 3 == 0 else 0)
-                )
-            yield pd.DataFrame({"media_id": pdf["media_id"], "content": blobs})
-
-    return docs.mapInPandas(_make, schema)
+def _jpeg_blob(seed: int, noise: int) -> bytes:
+    """Real baseline-JPEG bytes of the constant-tile raster. No twins,
+    so ``noise`` is unused."""
+    w = 8 * (2 + seed % 3) + seed % 5
+    h = 8 * (1 + seed % 2) + seed % 3
+    y, x = np.mgrid[0:h, 0:w]
+    v = ((seed * 13 + (y // 8) * 37 + (x // 8) * 11) % 256).astype(np.uint8)
+    px = np.repeat(v[:, :, None], 3, axis=2)
+    return encode_jpeg(px, restart_interval=2 if seed % 3 == 0 else 0)
 
 
 @register(
@@ -501,8 +489,7 @@ def _jpeg_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         " decode_jpeg) inside mapInPandas; oracle re-derives pixel sums",
 )
 def mm_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = _jpeg_media(spark, sf_dir)
-    return decode_image_stats(media)
+    return decode_image_stats(_blob_media(spark, sf_dir, _jpeg_blob))
 
 
 _JPEG_MAX_COEF = 8 * 64  # blocks <= (2+2)*(1+1) = 8, 64 coeffs each
@@ -540,54 +527,26 @@ FROM cf GROUP BY media_id, bx, by
 """
 
 
-def _jpeg_coeff_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id -> baseline stream built straight from closed-form integer
-    coefficient blocks (quant all-ones, so dequant is the identity)."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-
-    from sig_etl_spark.llm.multimodal import _ZIGZAG, encode_jpeg_from_coeffs
-
-    docs = partition_media(
-        load_table(spark, sf_dir, "documents").select(
-            F.col("doc_id").alias("media_id")
-        ),
-        32,
+def _jpeg_coeff_blob(seed: int, noise: int) -> bytes:
+    """Baseline stream built straight from closed-form integer
+    coefficient blocks (quant all-ones, so dequant is the identity). No
+    twins, so ``noise`` is unused."""
+    bx, by = 2 + seed % 3, 1 + seed % 2
+    plane = np.zeros((by, bx, 8, 8), dtype=np.int32)
+    for b in range(by * bx):
+        m = 7 + (b % 3) * 8
+        zz = np.zeros(64, dtype=np.int32)
+        zz[0] = (seed * 7 + b) % 101 - 50
+        for k in range(1, 64):
+            if (seed + b + k) % m == 0:
+                zz[k] = (seed * 5 + b * 3 + k * 11) % 41 - 20
+        b8 = np.zeros((8, 8), dtype=np.int32)
+        for kk, (rr, cc) in enumerate(_ZIGZAG):
+            b8[rr, cc] = zz[kk]
+        plane[b // bx, b % bx] = b8
+    return encode_jpeg_from_coeffs(
+        [plane], bx * 8, by * 8, restart_interval=3 if seed % 4 == 0 else 0
     )
-    schema = StructType(
-        [StructField("media_id", LongType()), StructField("content", BinaryType())]
-    )
-
-    def _make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                bx, by = 2 + mid % 3, 1 + mid % 2
-                plane = np.zeros((by, bx, 8, 8), dtype=np.int32)
-                for b in range(by * bx):
-                    m = 7 + (b % 3) * 8
-                    zz = np.zeros(64, dtype=np.int32)
-                    zz[0] = (mid * 7 + b) % 101 - 50
-                    for k in range(1, 64):
-                        if (mid + b + k) % m == 0:
-                            zz[k] = (mid * 5 + b * 3 + k * 11) % 41 - 20
-                    b8 = np.zeros((8, 8), dtype=np.int32)
-                    for kk, (rr, cc) in enumerate(_ZIGZAG):
-                        b8[rr, cc] = zz[kk]
-                    plane[b // bx, b % bx] = b8
-                blobs.append(
-                    encode_jpeg_from_coeffs(
-                        [plane], bx * 8, by * 8,
-                        restart_interval=3 if mid % 4 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame({"media_id": pdf["media_id"], "content": blobs})
-
-    return docs.mapInPandas(_make, schema)
 
 
 @register(
@@ -599,10 +558,7 @@ def _jpeg_coeff_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         "checked — a one-bit slip anywhere corrupts the hash",
 )
 def mm_decode_jpeg_coeffs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sig_etl_spark.llm.multimodal import decode_jpeg_coeff_stats
-
-    media = _jpeg_coeff_media(spark, sf_dir)
-    return decode_jpeg_coeff_stats(media)
+    return decode_jpeg_coeff_stats(_blob_media(spark, sf_dir, _jpeg_coeff_blob))
 
 
 @register(
@@ -666,10 +622,7 @@ FROM lagged GROUP BY media_id, n_frames
         " PCM channel 0; oracle re-derives from the closed-form stream",
 )
 def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sig_etl_spark.llm.multimodal import decode_audio_features
-
-    media = _wav_media(spark, sf_dir)
-    return decode_audio_features(media)
+    return decode_audio_features(_blob_media(spark, sf_dir, _wav_blob))
 
 
 # ---------------------------------------------------------------------------
@@ -705,6 +658,15 @@ FROM img GROUP BY pixel_key
 """
 
 
+def _pixel_key(mid, content):
+    yield mid, hashlib.md5(decode_real(bytes(content)).tobytes()).hexdigest()
+
+
+_PIXEL_KEY_SCHEMA = StructType(
+    [StructField("media_id", LongType()), StructField("pixel_key", StringType())]
+)
+
+
 @register(
     "mm_image_dedup",
     oracle=_IMG_DEDUP_ORACLE,
@@ -713,49 +675,10 @@ FROM img GROUP BY pixel_key
         " detection, lowest-id survivor",
 )
 def mm_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from sig_etl_spark.llm.multimodal import decode_real
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    base = docs.select(F.col("doc_id").alias("media_id"), F.col("doc_id").alias("k"))
-    twin = docs.select(
-        (F.col("doc_id") + 1000000).alias("media_id"), F.col("doc_id").alias("k")
+    media = _media_ids(spark, sf_dir, twin_every=1, twin_offset=1000000).select(
+        "media_id", _ppm_content(F.col("seed")).alias("content")
     )
-    d = partition_media(base.unionByName(twin), 32)
-    w = (F.lit(4) + F.col("k") % 5).cast("int")
-    h = (F.lit(3) + F.col("k") % 4).cast("int")
-    raster = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), (w * h * 3 - 1).cast("int")),
-            lambda j: F.char((F.col("k") * 7 + j * 13) % 95 + 32),
-        ),
-        "",
-    )
-    header = F.concat(
-        F.lit("P6\n"), w.cast("string"), F.lit(" "), h.cast("string"), F.lit("\n255\n")
-    )
-    media = d.select(
-        "media_id", F.encode(F.concat(header, raster), "UTF-8").alias("content")
-    )
-
-    schema = StructType(
-        [StructField("media_id", LongType()), StructField("pixel_key", StringType())]
-    )
-
-    def _keys(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys = []
-            for content in pdf["content"]:
-                px = decode_real(bytes(content))
-                keys.append(hashlib.md5(px.tobytes()).hexdigest())
-            yield pd.DataFrame({"media_id": pdf["media_id"], "pixel_key": keys})
-
-    keyed = media.mapInPandas(_keys, schema)
+    keyed = map_media(media, _pixel_key, _PIXEL_KEY_SCHEMA)
     return keyed.groupBy("pixel_key").agg(
         F.min("media_id").alias("canonical_id"),
         F.count(F.lit(1)).alias("n_copies"),
@@ -828,52 +751,30 @@ FROM hist a JOIN hist b ON a.media_id = b.media_id
 """
 
 
+def _frame_hists(mid, content, duration_ms):
+    for i, frame in frame_slices(content, duration_ms, _EVERY_MS):
+        h = np.bincount(np.frombuffer(frame, dtype=np.uint8) // 16, minlength=16)[:16]
+        yield mid, i, h.astype(np.int64).tolist()
+
+
+_FRAME_HIST_SCHEMA = StructType(
+    [
+        StructField("media_id", LongType()),
+        StructField("frame_idx", IntegerType()),
+        StructField("h", ArrayType(LongType())),
+    ]
+)
+
+
 def _video_frame_hists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(media_id, frame_idx, h ARRAY<BIGINT>[16]) per sampled frame —
-    the 16-bucket byte histograms computed in the SAME mapInPandas pass
-    that slices frames (no second decode); shared by mm_scene_cuts and
+    the 16-bucket byte histograms computed in the SAME pass that slices
+    frames (no second decode); shared by mm_scene_cuts and
     mm_shot_segments."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
+    video = _media_from_documents(spark, sf_dir).filter(F.col("kind") == "video")
+    return map_media(
+        video.select("media_id", "content", "duration_ms"), _frame_hists, _FRAME_HIST_SCHEMA
     )
-
-    media = _media_from_documents(spark, sf_dir)
-    video = media.filter(F.col("kind") == "video")
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("frame_idx", IntegerType()),
-            StructField("h", ArrayType(LongType())),
-        ]
-    )
-
-    def _hists(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"media_id": [], "frame_idx": [], "h": []}
-            for _, row in pdf.iterrows():
-                raw = bytes(row["content"]) if row["content"] is not None else b"\x00"
-                duration = int(row["duration_ms"] or 0)
-                n_frames = max(duration // _EVERY_MS, 1)
-                step = max(len(raw) // n_frames, 1)
-                for i in range(n_frames):
-                    frame = raw[i * step : i * step + step] or b"\x00"
-                    arr = np.frombuffer(frame, dtype=np.uint8) // 16
-                    h = np.bincount(arr, minlength=16)[:16]
-                    out["media_id"].append(row["media_id"])
-                    out["frame_idx"].append(i)
-                    out["h"].append(h.astype(np.int64).tolist())
-            yield pd.DataFrame(out)
-
-    return video.mapInPandas(_hists, schema)
 
 
 @register(
@@ -1058,6 +959,22 @@ FROM seg
 """
 
 
+def _frame_energies(mid, content):
+    ch0 = decode_wav(bytes(content))[0][:, 0].astype(np.int64)
+    for f in range(0, ch0.shape[0], _VAD_FRAME):
+        seg = ch0[f : f + _VAD_FRAME]
+        yield mid, f // _VAD_FRAME, int((seg * seg).sum())
+
+
+_FRAME_ENERGY_SCHEMA = StructType(
+    [
+        StructField("media_id", LongType()),
+        StructField("frame_idx", LongType()),
+        StructField("fenergy", LongType()),
+    ]
+)
+
+
 @register(
     "mm_audio_segments",
     oracle=_AUDIO_SEG_ORACLE,
@@ -1067,40 +984,10 @@ FROM seg
         " windows over frames-per-clip rows, never samples",
 )
 def mm_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
     from pyspark.sql import Window
-    from pyspark.sql.types import LongType, StructField, StructType
 
-    from sig_etl_spark.llm.multimodal import decode_wav
-
-    media = _wav_media(spark, sf_dir)
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("frame_idx", LongType()),
-            StructField("fenergy", LongType()),
-        ]
-    )
-
-    def _frame_energies(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"media_id": [], "frame_idx": [], "fenergy": []}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                samples, _rate = decode_wav(bytes(content))
-                ch0 = samples[:, 0].astype(np.int64)
-                n = ch0.shape[0]
-                for f in range(0, n, _VAD_FRAME):
-                    seg = ch0[f : f + _VAD_FRAME]
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(f // _VAD_FRAME)
-                    out["fenergy"].append(int((seg * seg).sum()))
-            yield pd.DataFrame(out)
-
-    fe = media.mapInPandas(_frame_energies, schema)
+    media = _blob_media(spark, sf_dir, _wav_blob)
+    fe = map_media(media, _frame_energies, _FRAME_ENERGY_SCHEMA)
     w = Window.partitionBy("media_id").orderBy("frame_idx")
     act = fe.filter(F.col("fenergy") > _VAD_THRESHOLD).withColumn(
         "grp", F.col("frame_idx") - F.row_number().over(w)
@@ -1147,69 +1034,26 @@ _PHASH_TWIN_OFFSET = 10_000_000
 _PHASH_MAX_HAMMING = 6
 
 
-def _phash_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Base image per doc + noisy near twin for every 5th doc, as real
-    PPM bytes generated executor-side (seeded by media id — no driver
-    materialization of blobs)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-
-    from sig_etl_spark.llm.multimodal import encode_ppm, partition_media
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    base = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.col("doc_id").alias("seed"),
-        F.lit(0).alias("noise"),
-    )
-    twin = docs.filter(F.col("doc_id") % _PHASH_TWIN_EVERY == 0).select(
-        (F.col("doc_id") + _PHASH_TWIN_OFFSET).alias("media_id"),
-        F.col("doc_id").alias("seed"),
-        F.lit(_PHASH_NOISE).alias("noise"),
-    )
-    spec = partition_media(base.unionByName(twin), 32)
-
-    schema = StructType(
-        [StructField("media_id", LongType()), StructField("content", BinaryType())]
-    )
-
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        from sig_etl_spark.llm.multimodal import _dct_matrix_n
-
-        d32 = _dct_matrix_n(32)
-        for pdf in batches:
-            ids, blobs = [], []
-            for mid, seed, noise in zip(pdf["media_id"], pdf["seed"], pdf["noise"]):
-                digest = hashlib.md5(f"img:{int(seed)}".encode()).digest()
-                bits = np.unpackbits(np.frombuffer(digest, dtype=np.uint8))[:64]
-                signs = bits.astype(np.float64) * 2 - 1
-                coeff = np.zeros((32, 32))
-                for u in range(8):
-                    for v in range(8):
-                        coeff[u, v] = signs[u * 8 + v] * 400.0 / ((1 + u) * (1 + v))
-                coeff[0, 0] = 4000.0
-                g = np.clip(d32.T @ coeff @ d32 / 2 + 128, 0, 255)
-                ys = (np.arange(16) * 32) // 16
-                xs = (np.arange(24) * 32) // 24
-                img = g[np.ix_(ys, xs)]
-                rgb = np.stack([img, img, img], axis=2).astype(np.int64)
-                if int(noise):
-                    rs = np.random.RandomState(int(seed) & 0x7FFFFFFF)
-                    rgb = rgb + rs.randint(
-                        -int(noise), int(noise) + 1, size=rgb.shape
-                    )
-                px = np.clip(rgb, 0, 255).astype(np.uint8)
-                ids.append(int(mid))
-                blobs.append(encode_ppm(px))
-            yield pd.DataFrame({"media_id": ids, "content": blobs})
-
-    return spec.mapInPandas(_gen, schema)
+def _phash_blob(seed: int, noise: int) -> bytes:
+    """Real PPM bytes of the md5-seeded image; ``noise`` > 0 adds
+    +/-noise uniform pixel noise (the near twin)."""
+    digest = hashlib.md5(f"img:{seed}".encode()).digest()
+    bits = np.unpackbits(np.frombuffer(digest, dtype=np.uint8))[:64]
+    signs = bits.astype(np.float64) * 2 - 1
+    coeff = np.zeros((32, 32))
+    for u in range(8):
+        for v in range(8):
+            coeff[u, v] = signs[u * 8 + v] * 400.0 / ((1 + u) * (1 + v))
+    coeff[0, 0] = 4000.0
+    g = np.clip(_D32.T @ coeff @ _D32 / 2 + 128, 0, 255)
+    ys = (np.arange(16) * 32) // 16
+    xs = (np.arange(24) * 32) // 24
+    img = g[np.ix_(ys, xs)]
+    rgb = np.stack([img, img, img], axis=2).astype(np.int64)
+    if noise:
+        rs = np.random.RandomState(seed & 0x7FFFFFFF)
+        rgb = rgb + rs.randint(-noise, noise + 1, size=rgb.shape)
+    return encode_ppm(np.clip(rgb, 0, 255).astype(np.uint8))
 
 
 @register(
@@ -1221,9 +1065,10 @@ def _phash_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         " verify; planted noisy twins",
 )
 def mm_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sig_etl_spark.llm.multimodal import phash_images, phash_near_dup_pairs
-
-    media = _phash_media(spark, sf_dir)
+    media = _blob_media(
+        spark, sf_dir, _phash_blob, twin_every=_PHASH_TWIN_EVERY,
+        twin_offset=_PHASH_TWIN_OFFSET, twin_noise=_PHASH_NOISE,
+    )
     hashes = phash_images(media)
     return phash_near_dup_pairs(hashes, max_hamming=_PHASH_MAX_HAMMING).orderBy(
         "id_a", "id_b"
@@ -1253,81 +1098,46 @@ _AFP_RATE = 8000
 _AFP_CENTERS = (60, 300, 900, 1900)
 
 
-def _afp_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
+_AFP_NFRAMES = AFP_TRANSITIONS + 1
+# band-center tone table shared by every clip: (bands, samples)
+_AFP_TONES = np.stack(
+    [
+        np.sin(2 * np.pi * c * (np.arange(_AFP_NFRAMES * AFP_FRAME) / _AFP_RATE))
+        for c in _AFP_CENTERS
+    ]
+)
 
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-    from sig_etl_spark.llm.multimodal import (
-        AFP_FRAME,
-        AFP_TRANSITIONS,
-        encode_wav,
-        partition_media,
-    )
+def _seed_bytes(seed: int, n: int) -> np.ndarray:
+    out = b""
+    i = 0
+    while len(out) < n:
+        out += hashlib.md5(f"aud:{seed}:{i}".encode()).digest()
+        i += 1
+    return np.frombuffer(out[:n], dtype=np.uint8)
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    base = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.col("doc_id").alias("seed"),
-        F.lit(0).alias("noise"),
-    )
-    twin = docs.filter(F.col("doc_id") % _AFP_TWIN_EVERY == 0).select(
-        (F.col("doc_id") + _AFP_TWIN_OFFSET).alias("media_id"),
-        F.col("doc_id").alias("seed"),
-        F.lit(_AFP_NOISE).alias("noise"),
-    )
-    spec = partition_media(base.unionByName(twin), 32)
-    schema = StructType(
-        [StructField("media_id", LongType()), StructField("content", BinaryType())]
-    )
-    nframes = AFP_TRANSITIONS + 1
 
-    def _gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        import numpy as np
-
-        def seed_bytes(seed: int, n: int) -> np.ndarray:
-            out = b""
-            i = 0
-            while len(out) < n:
-                out += hashlib.md5(f"aud:{seed}:{i}".encode()).digest()
-                i += 1
-            return np.frombuffer(out[:n], dtype=np.uint8)
-
-        nbands = len(_AFP_CENTERS)
-        for pdf in batches:
-            ids, blobs = [], []
-            # tone table shared by every clip in the batch: (bands, n)
-            n_samples = nframes * AFP_FRAME
-            t = np.arange(n_samples) / _AFP_RATE
-            tones = np.stack(
-                [np.sin(2 * np.pi * c * t) for c in _AFP_CENTERS]
-            )
-            for mid, seed, noise in zip(pdf["media_id"], pdf["seed"], pdf["noise"]):
-                vals = seed_bytes(int(seed), nframes * nbands)
-                prev = [None] * nbands
-                amps = np.zeros((nframes, nbands))
-                for f in range(nframes):
-                    for b in range(nbands):
-                        tr = int(vals[f * nbands + b]) % 3
-                        if tr == prev[b]:
-                            tr = (tr + 1) % 3
-                        prev[b] = tr
-                        amps[f, b] = 400.0 * 3**tr
-                # per-sample envelope per band, then one vectorized mix
-                env = np.repeat(amps, AFP_FRAME, axis=0)  # (n, bands)
-                s = (env.T * tones).sum(axis=0)
-                if int(noise):
-                    rs = np.random.RandomState(int(seed) & 0x7FFFFFFF)
-                    s = s + rs.randint(-int(noise), int(noise) + 1, size=len(s))
-                samples = np.clip(s, -32768, 32767).astype(np.int16)[:, None]
-                ids.append(int(mid))
-                blobs.append(encode_wav(samples, _AFP_RATE))
-            yield pd.DataFrame({"media_id": ids, "content": blobs})
-
-    return spec.mapInPandas(_gen, schema)
+def _afp_blob(seed: int, noise: int) -> bytes:
+    """Real WAV bytes of the md5-seeded tone clip; ``noise`` > 0 adds
+    +/-noise uniform sample noise (the near twin)."""
+    nbands = len(_AFP_CENTERS)
+    vals = _seed_bytes(seed, _AFP_NFRAMES * nbands)
+    prev = [None] * nbands
+    amps = np.zeros((_AFP_NFRAMES, nbands))
+    for f in range(_AFP_NFRAMES):
+        for b in range(nbands):
+            tr = int(vals[f * nbands + b]) % 3
+            if tr == prev[b]:
+                tr = (tr + 1) % 3
+            prev[b] = tr
+            amps[f, b] = 400.0 * 3**tr
+    # per-sample envelope per band, then one vectorized mix
+    env = np.repeat(amps, AFP_FRAME, axis=0)  # (n, bands)
+    s = (env.T * _AFP_TONES).sum(axis=0)
+    if noise:
+        rs = np.random.RandomState(seed & 0x7FFFFFFF)
+        s = s + rs.randint(-noise, noise + 1, size=len(s))
+    return encode_wav(np.clip(s, -32768, 32767).astype(np.int16)[:, None], _AFP_RATE)
 
 
 @register(
@@ -1338,9 +1148,10 @@ def _afp_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         " join as the image pHash; planted noisy twins, volume-invariant",
 )
 def mm_audio_fingerprint_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sig_etl_spark.llm.multimodal import fingerprint_audio, phash_near_dup_pairs
-
-    media = _afp_media(spark, sf_dir)
+    media = _blob_media(
+        spark, sf_dir, _afp_blob, twin_every=_AFP_TWIN_EVERY,
+        twin_offset=_AFP_TWIN_OFFSET, twin_noise=_AFP_NOISE,
+    )
     fps = fingerprint_audio(media)
     return phash_near_dup_pairs(
         fps, max_hamming=_AFP_MAX_HAMMING, hash_col="fp"

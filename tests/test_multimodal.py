@@ -20,7 +20,7 @@ def media(spark):
 
 
 def test_feature_extraction_schema_and_determinism(spark, media):
-    out = M.extract_features(M.partition_media(media, 4))
+    out = M.extract_features(M.partition_media(media))
     assert out.schema == M.FEATURES_SCHEMA
     rows = {r.media_id: r for r in out.collect()}
     assert len(rows) == 5
@@ -665,3 +665,53 @@ def test_audio_fingerprint_short_clip_fallback():
     b = (np.arange(AFP_FRAME, dtype=np.int16) * 3 % 251)[:, None]
     assert audio_fingerprint64(a) != audio_fingerprint64(b)
     assert audio_fingerprint64(a) == audio_fingerprint64(a.copy())
+
+
+@pytest.mark.parametrize(
+    "name", ["mm_decode_png", "mm_phash_near_dup", "mm_image_dedup", "mm_resize"]
+)
+def test_media_shuffle_takes_partition_count_from_session(spark, sf_dir, name):
+    """Every media fixture spreads its rows by media_id over the
+    session's default parallelism, never a literal: a fixed 32 ran eight
+    waves of small tasks on a 4-core session (about 3x slower)."""
+    import re
+
+    from sig_etl_spark.queries import QUERIES
+
+    df = QUERIES[name].builder(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    n = spark.sparkContext.defaultParallelism
+    counts = re.findall(r"hashpartitioning\(media_id#\d+L?, (\d+)\)", plan)
+    assert counts, plan
+    assert {int(c) for c in counts} == {n}, plan
+    if n != 32:
+        literal = re.compile(r"(?i)partitioning\((?:.*[,\s])?32\)")
+        shuffles = [
+            ln for ln in plan.splitlines() if "Exchange " in ln and "Broadcast" not in ln
+        ]
+        assert not [ln for ln in shuffles if literal.search(ln)], plan
+
+
+# Value hashes (tools/verify_local.frame_hash) of the two media queries
+# no SQL oracle can check, per fixture set: a fixture or codec byte that
+# changes the hashes but keeps the same pairs would pass the recall tests.
+_ROWS_ONLY_HASHES = {
+    "sf0.001": {
+        "mm_phash_near_dup": "fde44555fdee1556ec1acc2fa68434ba",
+        "mm_audio_fingerprint_near_dup": "257cb3956a4dc6d757258e903b539f0f",
+    },
+}
+
+
+@pytest.mark.parametrize("name", ["mm_phash_near_dup", "mm_audio_fingerprint_near_dup"])
+def test_rows_only_media_query_value_hash_pinned(spark, sf_dir, name):
+    import os
+
+    from sig_etl_spark.queries import QUERIES
+    from tools.verify_local import frame_hash
+
+    pinned = _ROWS_ONLY_HASHES.get(os.path.basename(os.path.normpath(sf_dir)))
+    if pinned is None:
+        pytest.skip(f"no pinned hash for fixture set {sf_dir}")
+    pdf = QUERIES[name].builder(spark, sf_dir).toPandas()
+    assert frame_hash(pdf) == pinned[name]
