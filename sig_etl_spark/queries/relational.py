@@ -667,7 +667,7 @@ def orders_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # each bucketed into quartile classes, concatenated into the classic
 # 'RFM' segment code. Scale shape: one combinable groupBy to the
 # per-customer frame, then the three quartile BOUNDARIES (9 numbers) are
-# computed once and broadcast, and every customer is classified by
+# computed in one plan and broadcast, and every customer is classified by
 # comparison — NO global ntile window, because an unpartitioned ntile
 # over millions of customers is a single-task global sort (the
 # anti-pattern the first cut of this query contained). Boundary
@@ -677,15 +677,12 @@ def orders_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ROUND-7 DRIVER-ENVIRONMENT HARDENING: the r6 cut used
 # percentile_disc/quantile_disc for the 9 boundaries and stayed driver
 # hash-red (while local DuckDB matched bit-for-bit), so the element pick
-# no longer uses ANY engine percentile function: each boundary is the
-# smallest value v whose cumulative count satisfies cum(v)*den >=
-# n*num — the identical type-1 inverse-CDF rule, expressed as pure
-# bigint comparisons over cumulative value counts on BOTH engines (see
-# _discrete_boundaries). Recency likewise drops engine date_diff
-# conventions for epoch-day arithmetic (floor(epoch_seconds/86400)
-# difference — identical IEEE ops both engines). Every output column is
-# bigint/int/string; no double and no engine-convention function
-# anywhere in the decision path.
+# uses NO engine percentile function on either engine: the same type-1
+# rule as pure bigint comparisons (_discrete_boundaries). Recency
+# likewise drops engine date_diff conventions for epoch-day arithmetic
+# (floor(epoch_seconds/86400) difference — identical IEEE ops both
+# engines). Every output column is bigint/int/string; no double and no
+# engine-convention function anywhere in the decision path.
 # ---------------------------------------------------------------------------
 
 _RFM_ORACLE = """
@@ -769,65 +766,63 @@ FROM scored
 
 
 def _discrete_boundaries(
-    df: DataFrame,
-    col: str,
-    bin_width: int,
-    quantiles: list[tuple[str, int, int]],
+    df: DataFrame, metrics: list[tuple[str, int, list[tuple[str, int, int]]]]
 ) -> DataFrame:
-    """Exact type-1 (inverse-CDF) discrete quantile boundaries with NO
-    engine percentile function: each boundary is the smallest value v
+    """Exact type-1 (inverse-CDF) discrete quantile boundaries of several
+    columns in ONE plan, with NO engine percentile function. ``metrics``
+    is ``[(col, bin_width, [(alias, num, den), ...]), ...]``; the one
+    result row holds, per alias, the smallest BIGINT value v of its column
     with cum_count(v) * den >= n * num — pure bigint comparisons over
     cumulative value counts, so the pick cannot vary with an engine's
     percentile element convention (the round-7 driver-seam fix).
 
-    Scale shape: value counts are one map-side-combinable groupBy; the
-    only unpartitioned window runs over FIXED-WIDTH BINS, whose row count
-    is bounded by value_range / bin_width independent of input rows; the
-    in-bin refinement window is partitioned by the (single) boundary bin
-    and sees only that bin's distinct values. Nothing here sorts the
-    full value set globally.
+    Scale shape: the columns are stacked into one long (m, v) frame whose
+    value counts are one map-side-combinable groupBy. Every window is
+    partitioned: the cumulative bin counts by metric, over FIXED-WIDTH
+    BINS bounded by value_range / bin_width independent of input rows;
+    the in-bin refinement by alias, over its boundary bin's distinct
+    values only. Nothing here sorts the full value set globally.
     """
+    stack = ", ".join(
+        f"struct({m} AS m, {w}L AS w, CAST({c} AS BIGINT) AS v)"
+        for m, (c, w, _) in enumerate(metrics)
+    )
     vc = (
-        df.groupBy(col)
+        df.select(F.expr(f"inline(array({stack}))"))
+        .groupBy("m", "w", "v")
         .agg(F.count(F.lit(1)).alias("vn"))
-        .withColumn("bin", F.floor(F.col(col) / F.lit(bin_width)).cast("bigint"))
-        # Materialize the (small) value-count frame once: every quantile's
-        # boundary-bin and refine branch re-reads it, and without the
-        # checkpoint each branch would replay the upstream rollup.
-        .localCheckpoint(eager=True)
+        .withColumn("bin", F.floor(F.col("v") / F.col("w")))
     )
-    bh = vc.groupBy("bin").agg(F.sum("vn").alias("bn"))
-    wb = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    bc = bh.withColumn("cumb", F.sum("bn").over(wb)).withColumn(
-        "total", F.sum("bn").over(Window.partitionBy())
+    up_to = (Window.unboundedPreceding, 0)
+    wb = Window.partitionBy("m").orderBy("bin").rowsBetween(*up_to)
+    bc = (
+        vc.groupBy("m", "bin")
+        .agg(F.sum("vn").alias("bn"))
+        .withColumn("cumb", F.sum("bn").over(wb))
+        .withColumn("total", F.sum("bn").over(Window.partitionBy("m")))
     )
-    out: DataFrame | None = None
-    for alias, num, den in quantiles:
-        # Boundary bin = smallest bin whose cumulative count reaches the
-        # target rank; the boundary VALUE then lies inside that bin.
-        sel = (
-            bc.filter(F.col("cumb") * den >= F.col("total") * num)
-            .orderBy("bin")
-            .limit(1)
-            .select(
-                F.col("bin").alias("qbin"),
-                (F.col("cumb") - F.col("bn")).alias("cum_before"),
-                F.col("total").alias("tot"),
-            )
-        )
-        inb = vc.join(F.broadcast(sel), vc["bin"] == sel["qbin"])
-        wv = (
-            Window.partitionBy("qbin")
-            .orderBy(col)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        ref = inb.withColumn("cumv", F.sum("vn").over(wv))
-        pick = ref.filter(
-            (F.col("cum_before") + F.col("cumv")) * den >= F.col("tot") * num
-        ).agg(F.min(col).alias(alias))
-        out = pick if out is None else out.crossJoin(pick)
-    assert out is not None
-    return out
+    rows = [(m, a, n, d) for m, (_, _, qs) in enumerate(metrics) for a, n, d in qs]
+    targets = df.sparkSession.createDataFrame(
+        rows, "m int, alias string, num bigint, den bigint"
+    )
+    # Boundary bin = smallest bin whose cumulative count reaches the
+    # target rank; the boundary VALUE then lies inside that bin.
+    sel = (
+        bc.join(F.broadcast(targets), "m")
+        .filter("cumb * den >= total * num")
+        .groupBy("m", "alias", "num", "den")
+        .agg(F.min(F.expr("struct(bin, cumb - bn AS cum_before, total)")).alias("q"))
+        .select("m", "alias", "num", "den", "q.*")
+    )
+    wv = Window.partitionBy("alias").orderBy("v").rowsBetween(*up_to)
+    pick = (
+        vc.join(F.broadcast(sel), ["m", "bin"])
+        .withColumn("cumv", F.sum("vn").over(wv))
+        .filter("(cum_before + cumv) * den >= total * num")
+    )
+    return pick.agg(
+        *[F.min(F.when(F.col("alias") == a, F.col("v"))).alias(a) for _, a, *_ in rows]
+    )
 
 
 @register(
@@ -863,29 +858,22 @@ def orders_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "frequency",
             "monetary_cents",
         )
-        # One orders scan total: the rollup feeds three boundary helpers
-        # plus the final classification — checkpoint it instead of
-        # replaying the scan+shuffle in every branch.
+        # One orders scan total: the rollup feeds the one boundary plan
+        # and the final classification — checkpoint it instead of
+        # replaying the scan+shuffle in both branches.
         .localCheckpoint(eager=True)
     )
     quarts = [("1", 1, 4), ("2", 1, 2), ("3", 3, 4)]
-    b = (
-        _discrete_boundaries(
-            cust, "recency_days", 64, [(f"r{s}", n, d) for s, n, d in quarts]
-        )
-        .crossJoin(
-            _discrete_boundaries(
-                cust, "frequency", 4, [(f"f{s}", n, d) for s, n, d in quarts]
+    b = _discrete_boundaries(
+        cust,
+        [
+            (col, width, [(f"{p}{s}", n, d) for s, n, d in quarts])
+            for p, col, width in (
+                ("r", "recency_days", 64),
+                ("f", "frequency", 4),
+                ("m", "monetary_cents", 1_000_000),
             )
-        )
-        .crossJoin(
-            _discrete_boundaries(
-                cust,
-                "monetary_cents",
-                1_000_000,
-                [(f"m{s}", n, d) for s, n, d in quarts],
-            )
-        )
+        ],
     )
     j = cust.crossJoin(F.broadcast(b))
     r_q = (

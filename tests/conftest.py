@@ -5,7 +5,13 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers see PYTHONPATH, not sys.path: export the checkout
+# before the session starts, so the suite runs from any working directory.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from sig_etl_spark.session import get_spark
 
@@ -14,7 +20,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("sig_etl_spark_tests", shuffle_partitions=8)
+    # Workers start as `python -m`, which puts the working directory ahead
+    # of PYTHONPATH; PYTHONSAFEPATH drops it, so a sig_etl_spark in the
+    # working directory (another checkout) cannot shadow this one.
+    spark = get_spark(
+        "sig_etl_spark_tests",
+        shuffle_partitions=8,
+        extra_conf={"spark.executorEnv.PYTHONSAFEPATH": "1"},
+    )
     yield spark
 
 
