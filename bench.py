@@ -1,11 +1,17 @@
-"""Benchmark harness — the driver runs this per-round at sf0.1.
+"""Full-registry benchmark: per-query wall-clock medians.
 
-Runs every registered query at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[DEFAULT_CPUS]`` (``$SPARK_GRAFT_CPUS``,
-else the process's CPU affinity count) and prints ONE
-JSON line::
+Usage: python bench.py [name ...]
+
+Runs every registered query (or the named ones) at ``$SPARK_GRAFT_SF_DIR``
+(default: the sf0.1 fixture set of TESTDATA.md) on ``local[DEFAULT_CPUS]``
+(``$SPARK_GRAFT_CPUS``, else the process's CPU affinity count) and prints
+the result as the LAST stdout line, one JSON object::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+
+A full run also writes it to ``BENCH_FULL_latest_c<cpus>.json`` in the
+checkout (``$SPARK_GRAFT_BENCH_OUT`` overrides the path; a named subset
+persists only when that is set).
 
 Each query is forced end-to-end with a ``noop`` write — full execution on
 the executors, zero driver-side collect — so the timing reflects the plan
@@ -268,15 +274,13 @@ def main() -> int:
                 "isolated re-measure",
             }
 
-    # The driver's low-core scaling leg used to OVERWRITE the 32-core
-    # BENCH_FULL_latest.json (round-14 verdict); the FULL artifact is now
-    # keyed by the core count so each leg keeps its own record.
+    # Keyed by the core count so runs at different widths keep their own
+    # record.
     out = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT",
         os.path.join(os.path.dirname(os.path.abspath(__file__)),
                      f"BENCH_FULL_latest_c{DEFAULT_CPUS}.json"),
     )
-    full_name = os.path.basename(out)
     result = {
         "metric": "total_query_wall_seconds",
         "value": round(total, 3),
@@ -299,39 +303,9 @@ def main() -> int:
         # >10% steal/user marks the window untrustworthy for absolute
         # adjudication (the 74%-steal sweep read 1.6x across the board).
         result["cpu_steal_over_user"] = round(ds / du, 4)
-    # The driver records only a ~2000-char TAIL of stdout; at 240+
-    # registered queries the full envelope is ~9 KB, so the driver's
-    # BENCH_r*.json carried "parsed": null (VERDICT r13 task 8). The
-    # FINAL stdout line must therefore always fit the tail window:
-    # when the full line is too long, emit a compact envelope that
-    # keeps the totals plus the SLOWEST per-query rows up to a 1900-
-    # char budget and points at BENCH_FULL_latest.json for the rest.
-    line = json.dumps(result)
-    if len(line) > 1900:
-        compact = dict(result)
-        compact["queries_full"] = full_name
-        kept: dict[str, float] = {}
-        compact["queries"] = kept
-        compact["queries_truncated"] = len(timings)
-        for name, dt in sorted(timings.items(), key=lambda kv: (-kv[1], kv[0])):
-            kept[name] = dt
-            compact["queries_truncated"] = len(timings) - len(kept)
-            if len(json.dumps(compact)) > 1900:
-                del kept[name]
-                compact["queries_truncated"] = len(timings) - len(kept)
-                break
-        line = json.dumps(compact)
-    print(line)
-    # ALSO persist the full per-query JSON into the repo (VERDICT r7
-    # task 5): the driver records only a 2000-char tail of stdout, which
-    # made r6->r7 per-query regression diffs impossible. Every bench run
-    # refreshes BENCH_FULL_latest_c<cpus>.json (override the path with
-    # $SPARK_GRAFT_BENCH_OUT); the end-of-round sweep commits it, giving
-    # the judge a complete, diffable row set each round.
-    # Subset probes persist ONLY when a destination is explicitly set
-    # (e.g. the standing eval-disjoint span-family artifact,
-    # BENCH_SPAN_sf1ed.json) — an ad-hoc probe never clobbers the
-    # full-sweep artifact.
+    print(json.dumps(result))
+    # Subset probes persist ONLY when a destination is explicitly set, so
+    # an ad-hoc probe never clobbers the full-sweep artifact.
     if not sys.argv[1:] or os.environ.get("SPARK_GRAFT_BENCH_OUT"):
         try:
             with open(out, "w") as f:

@@ -263,8 +263,8 @@ def int8_topk(
     higher-order-function folds are interpreted (never whole-stage
     codegen), and Catalyst additionally re-inlines the ``array_max``
     scale INSIDE the per-element quantize lambda, so the expr cost is
-    O(dim) per element, not per vector (see
-    plans/r14/llm_knn_int8_before.txt (3)). Integer arithmetic makes
+    O(dim) per element, not per vector (visible in the expr tier's
+    formatted explain). Integer arithmetic makes
     bit-identity trivial: int64 dots are exact, and the only float ops
     (the elementwise quantize ladder and the final dot/sqrt(qn*cn)
     division) run the identical IEEE sequence. ``impl="expr"`` keeps the

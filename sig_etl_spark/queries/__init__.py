@@ -35,9 +35,14 @@ QUERIES: dict[str, RegisteredQuery] = {}
 
 
 def register(name: str, oracle: str | None, doc: str = ""):
-    """Decorator: add a (builder, oracle) pair to the registry."""
+    """Decorator: add a (builder, oracle) pair to the registry.
+
+    Raises ``ValueError`` if ``name`` is already registered: overwriting
+    would drop the first builder and its oracle check without a trace."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
         QUERIES[name] = RegisteredQuery(name=name, builder=fn, oracle=oracle, doc=doc)
         return fn
 
@@ -125,9 +130,7 @@ def float_seam_lint() -> list[str]:
 
 
 def _load_all() -> None:
-    # Import for side effect: each module registers its queries. Import
-    # order no longer determines driver coverage — _PRIORITY / _reorder()
-    # below do (see the rotation policy there).
+    # Import for side effect: each module registers its queries.
     from sig_etl_spark.queries import diag_demo  # noqa: F401
     from sig_etl_spark.queries import diag_seam  # noqa: F401
     from sig_etl_spark.queries import sketch_demo  # noqa: F401
@@ -150,98 +153,4 @@ def _load_all() -> None:
     from sig_etl_spark.queries import geo_demo  # noqa: F401
 
 
-# ---------------------------------------------------------------------------
-# DRIVER-ROW ROTATION POLICY (computed since round 6 — VERDICT r05 task
-# 2): the driver's correctness gate records only the FIRST
-# _DRIVER_CAP=50 registry entries each round, so the registry is
-# reordered after loading:
-#   (a) _DEBUTS — queries NEW this round or whose RESULTS changed this
-#       round — come first: every fresh/changed query gets a
-#       driver-visible row in the round it changes. Hand-listed, budget
-#       asserted <= _DEBUT_BUDGET so slot (b) never starves.
-#   (b) everything else, ordered by LAST DRIVER-GREEN ROUND ascending
-#       (oldest-unverified first; never-green = round 0 sorts first),
-#       ties broken by registration order. The per-query round comes
-#       from _driver_history.DRIVER_LAST_GREEN, regenerated each round
-#       from the driver's own CORRECTNESS_r*.json files by
-#       tools/gen_driver_history.py — the ordering is COMPUTED from the
-#       driver's record, not hand-maintained.
-#
-# Refresh guarantee (the honest, arithmetic one — round 5's "within two
-# rounds" claim was impossible at cap 50 with 148 queries and is hereby
-# retracted): with N registered queries, cap C=50 and debut budget D,
-# a non-debut query waits at most ceil((N - C) / (C - D)) rounds after
-# falling past the cap before regaining a driver row, because each round
-# promotes the (C - D) stalest entries and a just-verified query re-enters
-# behind at most N - C fresher-than-it entries. Round 14 (N=245, D=0):
-# ceil(195/50) = 4 rounds worst-case — no hand-listed debuts, so the
-# stale block drains at FULL width; the budget assert bounds how much a
-# debut-heavy round can slow the refresh.
-# Late-round _HOLDBACK entries sort last and only tighten this bound
-# for everyone else.
-# Round-14 drain arithmetic (VERDICT r13 task 4): the stalest cohort is
-# now the 43-entry r9 block (the flagship, the S2-S5 extract family,
-# most F-ops). Rank-0 newcomers (never driver-green — round 14 adds
-# jdbc_stage_roundtrip, the S12 evidence closer, and
-# llm_embedding_near_dup_ivf2, the linearized-assignment near-dup) sort
-# ahead of it, so the 50 slots hold: newcomers + the ENTIRE r9 block +
-# the oldest r10 entries, provided newcomers stay <= 7 (50 - 43). After round 14 no
-# query's last driver row predates r10, max union staleness 4 rounds;
-# tests/test_rotation_policy.py pins the sample composition.
-# tools/verify_local.py
-# still checks ALL queries locally every round, so the cap only limits
-# the external signal, never the verification itself.
-# ---------------------------------------------------------------------------
-
-_DRIVER_CAP = 50
-_DEBUT_BUDGET = 25
-
-# Round 13 debuts — none hand-listed: the round's NEW registrations
-# enter as rank-0 newcomers automatically, and the round's
-# result-preserving change (the WRatio whitespace-only cutoff-bound fix
-# — gate-equivalent by property + regression test, golden fixtures
-# unchanged) alters no registered query's output, so the full 50-slot
-# width goes to the r8-cohort drain.
-_DEBUTS: list[str] = []
-
-# Queries registered AFTER a round's debut budget was already spent
-# (late-round additions) sort LAST that round, yielding their slot to
-# the stale-block drain. Round 13: EMPTY so far.
-_HOLDBACK: list[str] = []
-
-# Round 8's _DIVERGENT_PROBES mechanism (expected-red probes yield their
-# slot after one driver observation) is GONE: the only such probe pair
-# (diag_seam_hugeint_raw/_cast) was deregistered in round 9 after its
-# CORRECTNESS_r08 observation — the pair remains a pytest fixture
-# (queries/diag_seam.py PROBE_QUERIES, tests/test_dtype_seam.py). The
-# registry now contains zero expected-red rows by construction.
-
-
-def _reorder() -> None:
-    from sig_etl_spark.queries._driver_history import DRIVER_LAST_GREEN
-
-    assert len(_DEBUTS) <= _DEBUT_BUDGET, (
-        f"debut list ({len(_DEBUTS)}) exceeds budget {_DEBUT_BUDGET}: "
-        "the stale block would starve — split across rounds instead"
-    )
-    missing = [n for n in _DEBUTS if n not in QUERIES]
-    if missing:  # a renamed/removed query must fail loudly, not silently
-        raise RuntimeError(f"_DEBUTS names not in registry: {missing}")
-    missing_hb = [n for n in _HOLDBACK if n not in QUERIES]
-    if missing_hb:
-        raise RuntimeError(f"_HOLDBACK names not in registry: {missing_hb}")
-    overlap = set(_DEBUTS) & set(_HOLDBACK)
-    if overlap:
-        raise RuntimeError(f"_DEBUTS/_HOLDBACK overlap: {sorted(overlap)}")
-    reg_index = {n: i for i, n in enumerate(QUERIES)}
-    rest = sorted(
-        (n for n in QUERIES if n not in _DEBUTS and n not in _HOLDBACK),
-        key=lambda n: (DRIVER_LAST_GREEN.get(n, 0), reg_index[n]),
-    )
-    ordered = {n: QUERIES[n] for n in [*_DEBUTS, *rest, *_HOLDBACK]}
-    QUERIES.clear()
-    QUERIES.update(ordered)
-
-
 _load_all()
-_reorder()

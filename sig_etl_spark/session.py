@@ -100,6 +100,11 @@ def get_spark(
             f"-Dderby.stream.error.file={scratch_dir('derby.log')}",
         )
         .config("spark.ui.enabled", "false")
+        # Python workers start as `python -m`, which puts the working
+        # directory ahead of PYTHONPATH; PYTHONSAFEPATH drops it, so a
+        # sig_etl_spark in the working directory (another checkout) cannot
+        # shadow the one the driver imported.
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
     )
     if master:
         builder = builder.master(master)

@@ -20,14 +20,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    # Workers start as `python -m`, which puts the working directory ahead
-    # of PYTHONPATH; PYTHONSAFEPATH drops it, so a sig_etl_spark in the
-    # working directory (another checkout) cannot shadow this one.
-    spark = get_spark(
-        "sig_etl_spark_tests",
-        shuffle_partitions=8,
-        extra_conf={"spark.executorEnv.PYTHONSAFEPATH": "1"},
-    )
+    spark = get_spark("sig_etl_spark_tests", shuffle_partitions=8)
     yield spark
 
 

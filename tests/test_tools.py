@@ -14,7 +14,12 @@ def test_verify_local_runs_from_any_working_directory(sf_dir, tmp_path):
     """llm_ann_recall runs library code in Spark's Python workers, which
     import sig_etl_spark through PYTHONPATH, not the calling process's sys.path:
     the tool must export the checkout itself, not rely on the working
-    directory (the query fails with ModuleNotFoundError otherwise)."""
+    directory (the query fails with ModuleNotFoundError otherwise). A
+    sig_etl_spark in the working directory must not shadow the checkout
+    in those workers either."""
+    shadow = tmp_path / "sig_etl_spark"
+    shadow.mkdir()
+    (shadow / "__init__.py").write_text('raise ImportError("shadow")\n')
     env = dict(os.environ)
     inherited = env.pop("PYTHONPATH", "").split(os.pathsep)
     kept = [p for p in inherited if p and os.path.abspath(p) != REPO]

@@ -1,10 +1,8 @@
-"""Round-over-round bench diff (round 8).
+"""Per-query diff of two bench.py sweeps.
 
-VERDICT r7 couldn't compute a single per-query regression delta because
-the driver records only a 2000-char stdout tail. bench.py now persists
-the FULL per-query JSON (BENCH_FULL_latest.json, snapshotted to
-BENCH_FULL_r{N}.json per round); this tool diffs two such files and
-prints the rows that moved, with the box-noise discipline built in:
+bench.py persists the full per-query JSON (BENCH_FULL_latest_c<cpus>.json,
+or $SPARK_GRAFT_BENCH_OUT); this tool diffs two such files and prints the
+rows that moved, with the box-noise discipline built in:
 
 - sub-second rows are never flagged (this box swings ±60% on them);
 - a row is a REGRESSION candidate only if it moved >1.5x AND >1s

@@ -1,8 +1,7 @@
-"""Scale-growth report: sf0.1 -> sf1 per-query ratio table (round 9).
+"""Scale-growth report: sf0.1 -> sf1 per-query ratio table.
 
-VERDICT r8 task 3 asks for a committed full-registry sf1 bench plus a
-BASELINE.md table of the rows that grow faster than the data. This tool
-computes that table mechanically from two BENCH_FULL files:
+Computes the table of rows that grow faster than the data from two
+bench.py sweeps (BENCH_FULL files) at two scale factors:
 
 - growth ratio = sf1_seconds / sf0.1_seconds on a 10x data step. A
   scale-linear operator shows <= ~10x; fixed-overhead-dominated rows
@@ -13,7 +12,7 @@ computes that table mechanically from two BENCH_FULL files:
   absolute floor, and the report says which rule fired.
 
 Usage:
-    python tools/bench_scale_report.py BENCH_FULL_r09.json BENCH_FULL_sf1.json
+    python tools/bench_scale_report.py BENCH_FULL_sf0.1.json BENCH_FULL_sf1.json
         [--super 10.0] [--abs-floor 5.0] [--markdown]
 
 Exit code is always 0 — a report, not a gate.

@@ -2,10 +2,9 @@
 
 Usage: python tools/dump_plans.py OUTDIR [--suffix SUF] [name ...]
 
-Writes ``OUTDIR/<name>_<SUF>.txt`` per query (default suffix ``after``).
-Used for the optimization-round plan evidence (plans/r14/...): the judge
-cannot run Spark, so every plan claim in OPTIMIZATION_r*.md is backed by
-these committed files.
+Writes ``OUTDIR/<name>_<SUF>.txt`` per query (default suffix ``after``),
+so the plans of two trees (``--suffix before`` / ``after``) can be diffed
+as text without rerunning Spark.
 """
 
 from __future__ import annotations
