@@ -7,7 +7,13 @@ Runs every registered query (or the named ones) at ``$SPARK_GRAFT_SF_DIR``
 (``$SPARK_GRAFT_CPUS``, else the process's CPU affinity count) and prints
 the result as the LAST stdout line, one JSON object::
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "...", "value": N, "unit": "sec", "queries": {...},
+     "codegen_compiles": {...}, "metaspace_mb": N, "sf": ...}
+
+``codegen_compiles`` holds, per query, the whole-stage-codegen classes
+compiled over its timed repeats: with the session's codegen cache holding
+the working set, a repeat compiles nothing. ``metaspace_mb`` is the
+driver JVM's Metaspace in use at the end of the sweep.
 
 A full run also writes it to ``BENCH_FULL_latest_c<cpus>.json`` in the
 checkout (``$SPARK_GRAFT_BENCH_OUT`` overrides the path; a named subset
@@ -35,6 +41,22 @@ from sig_etl_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 def run_query(df) -> None:
     # noop sink: materializes every row on the executors, discards output.
     df.write.format("noop").mode("overwrite").save()
+
+
+def _codegen_compiles(spark) -> int:
+    """Whole-stage-codegen classes compiled so far in this JVM (cache
+    misses of Spark's codegen class cache)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _metaspace_mb(spark) -> float | None:
+    """Metaspace in use in the driver JVM, where generated classes live."""
+    pools = spark._jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans()
+    for pool in pools:
+        if pool.getName() == "Metaspace":
+            return round(pool.getUsage().getUsed() / 2**20, 1)
+    return None
 
 
 def _cpu_jiffies() -> tuple[int, int] | None:
@@ -185,6 +207,9 @@ def main() -> int:
     warmup = int(os.environ.get("SPARK_GRAFT_WARMUP", "0"))
 
     timings: dict[str, float] = {}
+    # Per query: classes compiled over its timed repeats. With the session's
+    # codegen cache holding the working set, repeats 2..N compile nothing.
+    compiles: dict[str, int] = {}
     total = 0.0
     gc_overhead = 0.0
     for i, name in enumerate(names):
@@ -192,6 +217,7 @@ def main() -> int:
             run_query(QUERIES[name].builder(spark, sf_dir))
             spark.catalog.clearCache()
         runs = []
+        c0 = _codegen_compiles(spark)
         for _ in range(repeats):
             t0 = time.perf_counter()
             run_query(QUERIES[name].builder(spark, sf_dir))
@@ -207,6 +233,7 @@ def main() -> int:
             gc_overhead += time.perf_counter() - g0
         dt = round(sorted(runs)[len(runs) // 2], 3)
         timings[name] = dt
+        compiles[name] = _codegen_compiles(spark) - c0
         total += dt
         print(
             f"# {name}: {dt:.3f}s (runs: {', '.join(f'{r:.3f}' for r in runs)})",
@@ -247,6 +274,7 @@ def main() -> int:
             )
             for name in fresh_names:
                 runs = []
+                c0 = _codegen_compiles(spark)
                 for _ in range(repeats):
                     t0 = time.perf_counter()
                     run_query(QUERIES[name].builder(spark, sf_dir))
@@ -254,6 +282,7 @@ def main() -> int:
                     spark.catalog.clearCache()
                 dt = round(sorted(runs)[len(runs) // 2], 3)
                 timings[name] = dt
+                compiles[name] = _codegen_compiles(spark) - c0
                 total += dt
             fresh_meta = {
                 "names": fresh_names,
@@ -266,6 +295,7 @@ def main() -> int:
             for name, dt in child["queries"].items():
                 timings[name] = dt
                 total += dt
+            compiles.update(child["codegen_compiles"])
             gc_overhead += child.get("gc_overhead_seconds", 0.0)
             fresh_meta = {
                 "names": fresh_names,
@@ -286,6 +316,9 @@ def main() -> int:
         "value": round(total, 3),
         "unit": "sec",
         "queries": timings,
+        "codegen_compiles": compiles,
+        # The main process's JVM; the fresh-process child reports its own.
+        "metaspace_mb": _metaspace_mb(spark),
         "gc_overhead_seconds": round(gc_overhead, 3),
         "repeats_per_query": repeats,
         "warmup_per_query": warmup,

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sig_etl_spark.functions.text import normalize_via_map
+from sig_etl_spark.session import local_frame
 
 # votervoice/transform.py:7-10
 VOTERVOICE_VALUES_TO_REPLACE: dict[str, dict[str, str]] = {
@@ -93,12 +94,12 @@ def normalize_office(c: Column) -> Column:
 def normalize_via_join(
     df: DataFrame, col: str, mapping: dict[str, str]
 ) -> DataFrame:
-    """F5 via broadcast left join — the 100 TB route for dictionaries too
-    large to constant-fold into a literal MAP. Unmapped values pass
-    through via coalesce, mirroring Series.replace."""
-    spark = df.sparkSession
-    map_df = spark.createDataFrame(
-        list(mapping.items()), "_nv_key string, _nv_canon string"
+    """F5 via broadcast left join against the mapping as a driver-side
+    local relation — for dictionaries too large to constant-fold into a
+    literal MAP expression (the mapping itself still lives on the driver).
+    Unmapped values pass through via coalesce, mirroring Series.replace."""
+    map_df = local_frame(
+        df.sparkSession, list(mapping.items()), "_nv_key string, _nv_canon string"
     )
     return (
         df.join(F.broadcast(map_df), df[col] == map_df["_nv_key"], "left")

@@ -217,11 +217,11 @@ def fuzzy_match(x: DataFrame, y: DataFrame, config: MatchConfig) -> DataFrame:
     pairs = xr.join(yr, join_keys, "left")
 
     # Per-rule score: max over alternates, zeroed below threshold. The
-    # denominator needs only *participation* (x value present), never the
-    # score itself, so the Arrow-UDF score expression is referenced
-    # exactly once per rule in `num`; Spark dedups semantically-equal
-    # Python UDFs inside a projection (verified by accumulator probe), so
-    # no materialization barrier is needed and each pair is scored once.
+    # raw score is its own column before the gate reads it twice: a
+    # multi-use levenshtein is not cheap, so CollapseProject keeps it in
+    # its own projection instead of inlining it into both arms of the
+    # gate, and each pair is scored once per rule. The denominator needs
+    # only *participation* (x value present), never the score itself.
     num = F.lit(0.0)
     den = F.lit(0.0)
     for i, r in enumerate(config.rules):
@@ -237,6 +237,8 @@ def fuzzy_match(x: DataFrame, y: DataFrame, config: MatchConfig) -> DataFrame:
                 r.scorer, xcol, F.coalesce(_ycol(ycol), F.lit("")), gate=r.threshold
             )
             raw = s if raw is None else F.greatest(raw, s)
+        pairs = pairs.withColumn(f"_raw{i}", raw)
+        raw = F.col(f"_raw{i}")
         gated = F.when(raw >= F.lit(r.threshold), raw).otherwise(F.lit(0.0))
         participating = xcol.isNotNull() & (xcol != "")
         pairs = pairs.withColumn(f"_s{i}", F.when(participating, gated))

@@ -65,12 +65,17 @@ def banded_levenshtein_ratio(a: Column, b: Column, gate: float) -> Column:
     maxlen=100: 100*0.58 = 57.999999999999994, floor -> 57 instead of
     58), which would silently drop a pair whose score exactly meets the
     gate. ceil overestimates by at most one DP diagonal (negligible
-    cost) and can never underestimate, so gate-equivalence is exact."""
+    cost) and can never underestimate, so gate-equivalence is exact.
+
+    The sentinel goes through ``nullif``, which references the distance
+    once: Spark evaluates its operand in a projection of its own, so the
+    DP runs once per pair (``when(dist < 0, ...).otherwise(f(dist))``
+    ran it twice). A NULL input scores 0, like the sentinel; fuzzy_match
+    ignores the score of a NULL x value anyway (y is coalesced to '')."""
     denom = F.greatest(F.length(a), F.length(b), F.lit(1))
     band = F.ceil((denom * F.lit(100.0 - gate)) / F.lit(100.0)).cast("int")
-    dist = F.call_function("levenshtein", a, b, band)
-    score = F.lit(100.0) * (F.lit(1.0) - dist / denom)
-    return F.when(dist < 0, F.lit(0.0)).otherwise(score)
+    dist = F.nullif(F.call_function("levenshtein", a, b, band), F.lit(-1))
+    return F.coalesce(F.lit(100.0) * (F.lit(1.0) - dist / denom), F.lit(0.0))
 
 
 def exact_score(a: Column, b: Column) -> Column:
@@ -118,16 +123,17 @@ def _indel_ub_banded(a: Column, b: Column, needed: float) -> Column:
     true ratio. ratio >= needed  <=>  indel <= total*(100-needed)/100,
     and indel >= lev, so lev beyond that band proves failure. Band via
     ceil(): a float product 1 ulp low must widen, never narrow, the band
-    (the banded_levenshtein_ratio lesson)."""
+    (the banded_levenshtein_ratio lesson), and the sentinel nulled
+    with nullif, as there, so the DP runs once per pair."""
     total = F.length(a) + F.length(b)
     band = F.ceil(
         total * F.lit(max(100.0 - needed, 0.0)) / F.lit(100.0)
     ).cast("int")
-    dist = F.call_function("levenshtein", a, b, band)
+    dist = F.nullif(F.call_function("levenshtein", a, b, band), F.lit(-1))
     ub = F.lit(100.0) * (
         F.lit(1.0) - dist / F.greatest(total, F.lit(1))
     )
-    return F.when(dist < 0, F.lit(0.0)).otherwise(ub)
+    return F.coalesce(ub, F.lit(0.0))
 
 
 def wratio_can_clear(a: Column, b: Column, gate: float) -> Column:

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sig_etl_spark.session import local_frame
+
 # Tokenizer shared by builder and oracle: lowercase, keep [a-z]+ runs.
 WORD_SPLIT_RE = "[^a-z]+"
 
@@ -141,9 +143,10 @@ def train_merges(
 
 
 def merges_df(spark: SparkSession, merges) -> DataFrame:
-    """The learned merge table as a DataFrame (R rows, driver-built —
-    the loop already owns the rows)."""
-    return spark.createDataFrame(
+    """The learned merge table as a DataFrame: the R rows the training
+    loop already holds on the driver, as a local relation (no job)."""
+    return local_frame(
+        spark,
         merges,
         "round int, left_sym string, right_sym string, merged string,"
         " pair_count bigint",

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sig_etl_spark.llm.dedup import _dot_sql, _double_dot, _double_dot_expr
+from sig_etl_spark.session import local_frame
 
 
 def hyperplanes(dim: int, n: int, seed: int = 7) -> list[list[float]]:
@@ -1074,14 +1075,9 @@ def ivf_kmeans_topk(
         cents_local = kmeans_centroids(
             corpus, id_col, vec_col, n_centroids, sample_size, iters
         )
-    if not cents_local:
-        return _ivf_with_centroids(
-            queries, corpus,
-            spark.createDataFrame([], "cent_id long, cent_vec array<double>"),
-            id_col, vec_col, k, nprobe, impl=impl,
-        )
-    cents = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(cents_local)],
+    cents = local_frame(
+        spark,
+        list(enumerate(cents_local)),
         "cent_id long, cent_vec array<double>",
     )
     return _ivf_with_centroids(
@@ -1103,8 +1099,9 @@ def kmeans_cents_frame(
     cents_local = kmeans_centroids(
         corpus, id_col, vec_col, n_centroids, sample_size, iters
     )
-    return corpus.sparkSession.createDataFrame(
-        [(i, v) for i, v in enumerate(cents_local)],
+    return local_frame(
+        corpus.sparkSession,
+        list(enumerate(cents_local)),
         "cent_id long, cent_vec array<double>",
     )
 

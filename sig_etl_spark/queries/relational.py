@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sig_etl_spark.queries import register
+from sig_etl_spark.session import local_frame
 from sig_etl_spark.tables import load_table
 
 DEC = "decimal(38,10)"
@@ -802,8 +803,8 @@ def _discrete_boundaries(
         .withColumn("total", F.sum("bn").over(Window.partitionBy("m")))
     )
     rows = [(m, a, n, d) for m, (_, _, qs) in enumerate(metrics) for a, n, d in qs]
-    targets = df.sparkSession.createDataFrame(
-        rows, "m int, alias string, num bigint, den bigint"
+    targets = local_frame(
+        df.sparkSession, rows, "m int, alias string, num bigint, den bigint"
     )
     # Boundary bin = smallest bin whose cumulative count reaches the
     # target rank; the boundary VALUE then lies inside that bin.

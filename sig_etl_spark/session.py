@@ -18,7 +18,10 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 # Cores for local mode: SPARK_GRAFT_CPUS if set, else the CPUs this process
 # may run on (its affinity, which a container or taskset can narrow below
@@ -100,6 +103,17 @@ def get_spark(
             f"-Dderby.stream.error.file={scratch_dir('derby.log')}",
         )
         .config("spark.ui.enabled", "false")
+        # Generated whole-stage-codegen classes are cached by source text,
+        # so a plan that runs again reuses its compiled (and JIT-warmed)
+        # classes only while they are still cached. Spark's default of 100
+        # entries is below one pass of perfbench's sig_match (144 distinct
+        # classes at sf0.1, 139 of them compiled again on every steady
+        # pass). 256 holds either perfbench workload (sig_match 144,
+        # sql_analytics 91). Holding a whole bench.py sweep of the registry
+        # at sf0.01 (3,288 distinct classes, so 4,096 entries) was measured
+        # and not taken: that sweep ended with 232.6 MB of Metaspace against
+        # 207.9 MB at 100 entries (+11.9 %); at 256 it ends with 209.4 MB.
+        .config("spark.sql.codegen.cache.maxEntries", "256")
         # Python workers start as `python -m`, which puts the working
         # directory ahead of PYTHONPATH; PYTHONSAFEPATH drops it, so a
         # sig_etl_spark in the working directory (another checkout) cannot
@@ -113,3 +127,20 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A driver-side literal table (``rows`` of tuples in ``schema``'s
+    DDL column order) as a DataFrame whose plan is a ``LocalTableScan``.
+
+    ``spark.createDataFrame(list)`` ships the rows through a Python-worker
+    RDD that every action re-runs as a Spark job; an Arrow table typed by
+    the schema becomes a local relation instead, which starts neither a
+    job nor a Python worker."""
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)

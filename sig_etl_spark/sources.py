@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sig_etl_spark.session import local_frame
+
 
 def write_stage_csv(df: DataFrame, path: str) -> None:
     """K1: header CSV sink with the reference's missing-value encoding
@@ -225,7 +227,7 @@ def read_excel(
     """
     rows = _read_xlsx_rows(path, sheet)
     if not rows:
-        return spark.createDataFrame([], "value string")
+        return local_frame(spark, [], "value string")
     width = max(len(r) for r in rows)
     padded = [r + [None] * (width - len(r)) for r in rows]
     if header:
@@ -251,7 +253,7 @@ def read_excel(
         used.add(cand.casefold())
         uniq.append(cand)
     schema = ", ".join(f"`{n.replace('`', '``')}` string" for n in uniq)
-    return spark.createDataFrame([tuple(r) for r in data], schema)
+    return local_frame(spark, data, schema)
 
 
 def write_xlsx(path: str, columns: list[str], rows: list[list[str | None]]) -> None:

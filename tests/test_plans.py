@@ -437,6 +437,19 @@ def test_banded_levenshtein_in_linkage_plan(spark, sf_dir):
     )
 
 
+def test_fuzzy_match_scores_a_levenshtein_rule_once(spark, sf_dir):
+    """pipeline_e2e_ratings's match stage has one levenshtein rule, and
+    its optimized plan calls the distance once: the raw score is its own
+    column before the gate reads it twice, and the banded ratio nulls the
+    sentinel with nullif instead of testing the distance a second time."""
+    from sig_etl_spark.queries import pipeline_demo as demo
+
+    x = demo._transform_stage(spark, demo._extract_stage(sf_dir)(spark, None))
+    matched = demo._match_stage(sf_dir)(spark, x)
+    plan = matched._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("levenshtein(") == 1
+
+
 def _has_three_arg_call(plan: str, needle: str) -> bool:
     """True iff some occurrence of `needle` (e.g. 'levenshtein(') in the
     plan has exactly three TOP-LEVEL comma-separated arguments."""

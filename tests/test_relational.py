@@ -83,3 +83,18 @@ def _build_actions(spark, build) -> int:
 def test_rfm_builder_runs_only_the_rollup_checkpoint(spark, sf_dir):
     builder = QUERIES["orders_rfm_segmentation"].builder
     assert _build_actions(spark, lambda: builder(spark, sf_dir)) <= 1
+
+
+def test_rfm_plan_scans_no_python_rdd(spark, sf_dir):
+    """The quartile targets are a local relation: the only RDD the RFM
+    plan scans is the rollup checkpoint, never a Python-worker RDD."""
+    df = QUERIES["orders_rfm_segmentation"].builder(spark, sf_dir)
+    nodes, rdd_scans = [df._jdf.queryExecution().sparkPlan()], []
+    while nodes:
+        node = nodes.pop()
+        if node.getClass().getSimpleName() == "RDDScanExec":
+            rdd_scans.append(node.rdd().toDebugString())
+        kids = node.children()
+        nodes.extend(kids.apply(i) for i in range(kids.size()))
+    assert rdd_scans
+    assert not [s for s in rdd_scans if "PythonRDD" in s]
