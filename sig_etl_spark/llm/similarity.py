@@ -1,24 +1,38 @@
 """Similarity search over embedding columns.
 
-Two paths, same contract (query_id, corpus_id, cosine, rank):
+Eight top-k operators return (query_id, corpus_id, cosine, rank):
+``brute_force_topk`` (exact), ``int8_topk``, ``lsh_topk``, ``ivf_topk``,
+``ivf_kmeans_topk``, ``pq_topk``, ``pq_rerank_topk`` and
+``ivfpq_topk``. ``ivf_incremental_topk`` and
+``ivf_incremental_kmeans_topk`` maintain the IVF index under updates,
+and ``ivf_near_dup_pairs``, its two-level twin and the size-routing
+``ivf_near_dup_pairs_adaptive`` return near-dup pairs
+(id_a, id_b, cosine).
 
-- ``brute_force_topk``: score every (query, corpus) pair. The query set is
-  broadcast — the corpus streams through one scan, no shuffle of the big
-  side; only the scored rows shuffle into the per-query top-k window. This
-  is the exact baseline and the right plan whenever |queries| is small.
+Each operator has ONE implementation: the corpus-sized scoring runs in
+Arrow batches (numpy over left-to-right float64 folds), and only
+bucket-, cell- or shortlist-sized work (candidate joins, exact
+re-scores, top-k windows) stays in JVM expressions. Three JVM paths do
+the corpus-sized work instead, each because the Arrow pass cannot serve
+its input or its scale:
 
-- ``lsh_topk``: random-hyperplane LSH. Corpus and queries get per-band
-  sign-pattern buckets; candidates come from an equi-join on
-  (band, bucket) — at 100 TB this is the difference between scoring
-  |Q|·|C| pairs and scoring only same-bucket pairs. Recall is tunable via
-  (bands, planes_per_band): more bands -> higher recall, more candidates.
+- ``brute_force_topk`` scores a mixed-dimension query set with a
+  broadcast join (ragged vectors do not stack into one query matrix);
+- ``ivf_near_dup_pairs`` assigns through ``_ivf_assign_expr`` above
+  ``_ASSIGN_COLLECT_CEILING`` centroids (the Arrow pass would ship the
+  whole centroid list in every task closure);
+- ``ivf_near_dup_pairs_2level`` assigns through broadcast joins (it
+  serves corpora above the 10^6 knee, whose centroid list is
+  corpus-proportional and never collected to the driver).
 
 Dot products are strict left-to-right double folds (dedup._double_dot) —
 a per-row array fold has fixed evaluation order, so plain IEEE doubles are
 already deterministic across runs, partitionings, AND engines (DuckDB's
-list_reduce performs the identical operation sequence). Planes are
-generated from a fixed seed so runs — and the DuckDB oracle, which inlines
-the same plane literals — are deterministic.
+list_reduce performs the identical operation sequence). Planes, centroid
+samples and codebooks come from fixed seeds or md5 orderings, so runs —
+and the DuckDB oracle, which re-derives them — are deterministic. The
+oracle is the reference every registered configuration is checked
+against.
 """
 
 from __future__ import annotations
@@ -37,26 +51,19 @@ def hyperplanes(dim: int, n: int, seed: int = 7) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n)]
 
 
-def _cosine(a_vec, b_vec, a_norm2, b_norm2):
-    # try_divide: a zero-norm vector yields a NULL cosine (ranked last by
-    # the DESC windows) in BOTH ANSI modes, instead of DIVIDE_BY_ZERO
-    # under the repo session's ansi.enabled=true. nanvl: a NaN cosine
-    # (non-finite vector elements -> inf/inf or 0/0) ALSO normalizes to
-    # NULL — one policy for every undefined similarity, ranked last, the
-    # same rule streaming's stream_ivf_assign pinned in round 13 (NaN
-    # would otherwise rank FIRST under DESC, i.e. garbage rows would
-    # outrank every real neighbor; and the Arrow/numpy tiers cannot even
-    # represent a NaN distinct from NULL on the way back to the JVM).
-    return F.nanvl(
-        F.try_divide(_double_dot(a_vec, b_vec), F.sqrt(a_norm2 * b_norm2)),
-        F.lit(None).cast("double"),
-    )
-
-
 def _cosine_expr(a: str, b: str, a_norm2: str, b_norm2: str):
-    """:func:`_cosine` over plain column names in ONE parsed expression —
-    same try_divide / nanvl NULL policy, one py4j round-trip instead of
-    ~200 (round 15; see dedup._dot_sql)."""
+    """Cosine over plain column names in ONE parsed expression (one py4j
+    round-trip instead of ~200; see dedup._dot_sql).
+
+    try_divide: a zero-norm vector yields a NULL cosine (ranked last by
+    the DESC windows) in BOTH ANSI modes, instead of DIVIDE_BY_ZERO
+    under the repo session's ansi.enabled=true. nanvl: a NaN cosine
+    (non-finite vector elements -> inf/inf or 0/0) ALSO normalizes to
+    NULL — one policy for every undefined similarity, ranked last, the
+    same rule streaming's stream_ivf_assign follows (NaN would otherwise
+    rank FIRST under DESC, i.e. garbage rows would outrank every real
+    neighbor; and the Arrow/numpy passes cannot even represent a NaN
+    distinct from NULL on the way back to the JVM)."""
     return F.expr(
         f"nanvl(try_divide({_dot_sql(a, b)}, sqrt({a_norm2} * {b_norm2})), "
         f"CAST(NULL AS DOUBLE))"
@@ -77,32 +84,21 @@ def brute_force_topk(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    impl: str = "numpy",
 ) -> DataFrame:
-    """Exact top-k neighbors per query by cosine. Queries are broadcast
-    (expr tier) or collected (numpy tier — bounded by the same small-|Q|
-    contract the broadcast already assumes).
-
-    ``impl="numpy"`` (default) scores each corpus batch against the
-    whole query set in one Arrow pass (:func:`_brute_scored_np`) —
-    bit-identical to the expr tier in EVERY case: NULL / wrong-length
-    vectors give a NULL cosine (exactly like the NULL-poisoned zip_with
-    fold), try_divide's zero-divisor NULL is reproduced explicitly, and
-    non-finite elements run the same left-to-right IEEE sequence into
-    the shared NaN-cosine-normalizes-to-NULL policy (see ``_cosine``);
-    the only exception is a mixed-dimension query set, which falls back
-    to the expr tier (ragged stacks).
-    The expr tier's interpreted fold measured ~0.07 ms/pair in the
-    round-14 profile — at |Q| x |corpus| pairs that made the exact
-    baseline the most expensive part of llm_ann_recall. Either tier is
+    """Exact top-k neighbors per query by cosine. The query set is
+    collected (bounded by the small-|Q| contract) and each corpus batch
+    is scored against all of it in one Arrow pass
+    (:func:`_brute_scored_np`): NULL / wrong-length vectors give a NULL
+    cosine, a zero divisor gives NULL (try_divide), and non-finite
+    elements run the left-to-right IEEE fold into the shared
+    NaN-cosine-normalizes-to-NULL policy (see :func:`_cosine_expr`).
     O(|Q| * |corpus|) by definition; the approximate paths are the
     scale answer, this is their ground truth."""
-    scored = None
-    if impl == "numpy":
-        # None = mixed-dimension query set, the one case the numpy tier
-        # cannot reproduce bit-for-bit (ragged stack) -> expr fallback
-        scored = _brute_scored_np(queries, corpus, id_col, vec_col)
+    scored = _brute_scored_np(queries, corpus, id_col, vec_col)
     if scored is None:
+        # Kept JVM path: a mixed-dimension query set cannot be stacked
+        # into one query matrix, so it is scored by a broadcast join
+        # with the same fold and the same NULL policy.
         q = _with_norm2(queries, id_col, vec_col, "query_id")
         c = _with_norm2(corpus, id_col, vec_col, "corpus_id")
         scored = c.join(F.broadcast(q)).select(
@@ -119,13 +115,12 @@ def brute_force_topk(
 def _brute_scored_np(
     queries: DataFrame, corpus: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame | None:
-    """(query_id, corpus_id, cosine) for every pair — the Arrow/numpy
-    twin of the expr tier's broadcast-join + ``_cosine`` fold, or None
-    for a ragged (mixed-dimension) query set the caller must route to
-    the expr tier. See :func:`brute_force_topk` for the bit-identity
-    argument; the dot and both norms run as sequential left-to-right
-    float64 accumulations over double-cast elements, mirroring
-    ``_double_dot`` exactly."""
+    """(query_id, corpus_id, cosine) for every pair, or None for a
+    ragged (mixed-dimension) query set the caller scores in the JVM.
+    The dot and both norms run as sequential left-to-right float64
+    accumulations over double-cast elements — the ``_double_dot`` fold
+    DuckDB's ``list_reduce`` also performs, so the oracle re-derives
+    every cosine bit for bit."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -138,7 +133,7 @@ def _brute_scored_np(
     qvals = [r["qvec"] for r in qrows]
     dims = {len(v) for v in qvals if v is not None}
     if len(dims) > 1:
-        return None  # ragged query set: caller falls back to expr tier
+        return None  # ragged query set: the caller's broadcast join
     dim = dims.pop() if dims else None
     qgood = np.array(
         [v is not None and dim is not None and len(v) == dim for v in qvals],
@@ -197,7 +192,7 @@ def _brute_scored_np(
                     vals_np = dots / denom
                 # try_divide: NULL when the divisor is zero; nanvl: NULL
                 # for any NaN result (the shared undefined-similarity
-                # policy — see _cosine). ±inf results (if a dot overflows
+                # policy — see _cosine_expr). ±inf results (if a dot overflows
                 # while the norms stay finite) pass through as IEEE.
                 nm = (denom == 0.0) | np.isnan(vals_np)
                 gi = np.flatnonzero(good)
@@ -218,37 +213,12 @@ def _brute_scored_np(
     return src.mapInPandas(score, out_schema)
 
 
-def _int_dot(a, b):
-    """Exact integer dot product (zip_with + aggregate over BIGINTs) —
-    order-independent and engine-exact, no float scaffolding needed."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-
-def int8_quantize(vec):
-    """Symmetric per-vector int8 quantization: q_i = floor(v_i * 127 /
-    max|v| + 0.5) in [-127, 127]. Half-up floor rounding (not round()) so
-    Spark and DuckDB produce identical codes. All-zero vectors map to
-    all-zero codes."""
-    v = F.transform(vec, lambda x: x.cast("double"))
-    maxabs = F.array_max(F.transform(v, F.abs))
-    return F.when(
-        maxabs == 0, F.transform(v, lambda x: F.lit(0).cast("bigint"))
-    ).otherwise(
-        F.transform(v, lambda x: F.floor(x * 127 / maxabs + F.lit(0.5)).cast("bigint"))
-    )
-
-
 def int8_topk(
     queries: DataFrame,
     corpus: DataFrame,
     id_col: str,
     vec_col: str,
     k: int = 5,
-    impl: str = "numpy",
 ) -> DataFrame:
     """Top-k by SCALAR-QUANTIZED (int8) cosine — the memory-bound scale
     path: 4x smaller vectors than float32, and because cosine is
@@ -259,77 +229,40 @@ def int8_topk(
     the quantization itself — recall vs the float scan is measured by
     ``llm_ann_recall``'s int8 arm.
 
-    ``impl="numpy"`` (default, round 14): quantization + integer dots in
-    one Arrow pass (:func:`_int8_scored_np`) — the expr tier's
-    higher-order-function folds are interpreted (never whole-stage
-    codegen), and Catalyst additionally re-inlines the ``array_max``
-    scale INSIDE the per-element quantize lambda, so the expr cost is
-    O(dim) per element, not per vector (visible in the expr tier's
-    formatted explain). Integer arithmetic makes
-    bit-identity trivial: int64 dots are exact, and the only float ops
-    (the elementwise quantize ladder and the final dot/sqrt(qn*cn)
-    division) run the identical IEEE sequence. ``impl="expr"`` keeps the
-    pure-JVM chain selectable."""
-    if impl == "numpy":
-        scored = _int8_scored_np(queries, corpus, id_col, vec_col)
-    elif impl == "expr":
-        q = queries.select(
-            F.col(id_col).alias("query_id"), int8_quantize(F.col(vec_col)).alias("qv")
-        )
-        q = q.withColumn("qn", _int_dot(F.col("qv"), F.col("qv")))
-        c = corpus.select(
-            F.col(id_col).alias("corpus_id"), int8_quantize(F.col(vec_col)).alias("cv")
-        )
-        c = c.withColumn("cn", _int_dot(F.col("cv"), F.col("cv")))
-        dot = _int_dot(F.col("qv"), F.col("cv"))
-        scored = c.join(F.broadcast(q)).select(
-            "query_id",
-            "corpus_id",
-            # integer dot / sqrt(integer norms): deterministic double; zero
-            # norms (all-zero vectors) score 0 rather than dividing by zero.
-            F.when(
-                (F.col("qn") > 0) & (F.col("cn") > 0),
-                dot / F.sqrt((F.col("qn") * F.col("cn")).cast("double")),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("cosine"),
-        )
-    else:
-        raise ValueError(f"unknown impl {impl!r}")
-    return _topk_by_cosine(scored, k)
+    Quantization and the integer dots run in one Arrow pass
+    (:func:`_int8_scored_np`); int64 dots are exact, and the only float
+    ops (the elementwise quantize ladder and the final dot/sqrt(qn*cn)
+    division) run the IEEE sequence the DuckDB oracle runs."""
+    return _topk_by_cosine(_int8_scored_np(queries, corpus, id_col, vec_col), k)
 
 
 def _int8_scored_np(
     queries: DataFrame, corpus: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
-    """(query_id, corpus_id, cosine) for every pair — the Arrow/numpy
-    twin of the int8 expr tier's broadcast join. Bit-identity argument:
+    """(query_id, corpus_id, cosine) for every pair, in the arithmetic
+    of the SQL quantize-then-integer-dot the DuckDB oracle spells out:
 
-    - quantize: ``floor(x*127/maxabs + 0.5)`` runs the identical
-      elementwise IEEE double sequence (float32 inputs widen exactly);
-      ``max(abs(v))`` propagates NaN over inf exactly like
-      ``array_max`` (NaN greatest); ``floor(NaN)`` -> 0 and
+    - quantize: ``floor(x*127/maxabs + 0.5)`` as an elementwise IEEE
+      double sequence (float32 inputs widen exactly); ``max(abs(v))``
+      propagates NaN over inf (NaN greatest); ``floor(NaN)`` -> 0 and
       ``floor(±inf)`` -> long saturation reproduce the JVM
-      (long)(double) cast (probed round 14). A saturated (>127) code
-      means the expr tier's ANSI self-dot fold throws
-      ARITHMETIC_OVERFLOW — this tier raises instead of wrapping.
-    - dots/norms: int64 matmul is exact integer arithmetic, identical
-      to the BIGINT zip_with/aggregate folds (codes <= 127 so a dot
-      fits with astronomic headroom; qn*cn fits BIGINT for any
-      dim < ~7e5, beyond which the expr tier's ANSI multiply throws
-      too).
-    - edge policy (matches the expr tier's when/otherwise, probed):
-      NULL / empty / all-zero / NaN-scaled vectors have qn or cn not
-      > 0 -> cosine 0.0; both norms positive but dimensions unequal ->
-      the zip_with fold NULL-pads -> NULL cosine (ranked last).
+      (long)(double) cast. A saturated (>127) code would overflow an
+      ANSI BIGINT self-dot, so this pass raises ARITHMETIC_OVERFLOW
+      instead of wrapping.
+    - dots/norms: int64 matmul is exact integer arithmetic (codes <= 127
+      so a dot fits with astronomic headroom; qn*cn fits BIGINT for any
+      dim < ~7e5).
+    - edge policy: NULL / empty / all-zero / NaN-scaled vectors have qn
+      or cn not > 0 -> cosine 0.0; both norms positive but dimensions
+      unequal -> NULL cosine (ranked last).
     """
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     def codes_of(v):
-        # None -> None: qn stays NULL, the norm condition is NULL,
-        # cosine 0.0 via the otherwise branch
+        # None -> None: qn stays NULL, the norm condition fails,
+        # cosine 0.0
         if v is None:
             return None
         a = np.asarray(v, dtype=np.float64)
@@ -342,9 +275,9 @@ def _int8_scored_np(
             f = np.floor(a * 127.0 / m + 0.5)
         f = np.where(np.isnan(f), 0.0, f)
         if np.any(np.abs(f) > 127.0):
-            # only an x*127 double overflow saturates past 127; its
-            # ANSI BIGINT self-dot then overflows in the expr tier —
-            # same input, same failure, honest error instead of a wrap
+            # only an x*127 double overflow saturates past 127; an ANSI
+            # BIGINT self-dot of that code overflows — honest error
+            # instead of a wrap
             raise ArithmeticError(
                 "[ARITHMETIC_OVERFLOW] long overflow in int8 cosine"
             )
@@ -392,8 +325,8 @@ def _int8_scored_np(
             null_mask = np.zeros((n, nq), dtype=bool)
             cpos = [j for j in range(n) if cn[j] is not None and cn[j] > 0]
             if cpos and qpos:
-                # both norms positive: NULL (poisoned fold) unless the
-                # dimensions match, in which case the exact dot fills in
+                # both norms positive: NULL unless the dimensions
+                # match, in which case the exact dot fills in
                 null_mask[np.ix_(cpos, qpos_arr)] = True
                 by_len: dict[int, list[int]] = {}
                 for j in cpos:
@@ -425,42 +358,6 @@ def _int8_scored_np(
     return src.mapInPandas(score, out_schema)
 
 
-def bucket_signature(vec, planes: list[list[float]]):
-    """Sign-pattern bucket string for one band of hyperplanes (the double
-    fold is order-fixed, so the sign is engine-independent).
-
-    Each plane is ONE array literal (``F.lit(plane)``), not an
-    element-wise ``F.array(*map(F.lit, ...))``: the old form cost one
-    py4j round-trip PER COORDINATE — 64 per plane, ~3k per LSH build at
-    the 8-band config, which made DataFrame CONSTRUCTION (not execution)
-    the dominant cost of llm_ann_recall's LSH arms (measured 56s cold /
-    4.8s warm for the b8p3 build alone; guide §1.2 "time what you think
-    you're timing"). The literal value — and therefore every bucket and
-    every result row — is identical."""
-    bits = []
-    for plane in planes:
-        lit = F.lit(plane)
-        bits.append(
-            F.when(_double_dot(vec, lit) >= 0, F.lit("1")).otherwise(F.lit("0"))
-        )
-    return F.concat(*bits)
-
-
-def _with_buckets(
-    df: DataFrame, vec_out: str, bands: list[list[list[float]]]
-) -> DataFrame:
-    entries = [
-        F.struct(
-            F.lit(i).alias("band"),
-            bucket_signature(F.col(vec_out), planes).alias("bucket"),
-        )
-        for i, planes in enumerate(bands)
-    ]
-    return df.withColumn("bb", F.explode(F.array(*entries))).select(
-        *df.columns, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-
-
 def _with_buckets_np(
     df: DataFrame,
     id_col: str,
@@ -468,23 +365,19 @@ def _with_buckets_np(
     out_id: str,
     bands: list[list[list[float]]],
 ) -> DataFrame:
-    """Arrow/numpy twin of ``_with_norm2 -> _with_buckets``: one
-    mapInArrow pass emitting (out_id, {out_id}_vec, {out_id}_norm2,
-    band, bucket), bit-identical to the expr ladder. The expr tier ran
-    bands x planes interpreted ``_double_dot`` folds per row (HOF
-    lambdas never codegen) — the dominant cost of every LSH build.
+    """Per-band LSH buckets in one mapInArrow pass emitting (out_id,
+    {out_id}_vec, {out_id}_norm2, band, bucket), one row per band.
 
-    Bit-identity: each bucket bit is ``fold(vec . plane) >= 0`` — the
-    numpy fold runs the identical left-to-right float64 sequence, so the
-    sign matches bit-for-bit. Edge rules reproduced from the expr tier:
-    a NULL vector, NULL element, or length mismatch vs the plane yields
-    a NULL comparison -> bit "0" (when/otherwise); a NaN fold compares
-    ``>= 0`` as TRUE under Spark's NaN-greatest rule -> bit "1" (numpy
-    needs an explicit isnan OR); +inf -> "1". norm2 is the row's own-length
-    self-fold: NULL for NULL vec/element, 0.0 for empty, NaN/inf kept.
-
-    Requires uniform band width (both callers use one planes_per_band);
-    the expr tier remains for anything else."""
+    Each bucket bit is ``fold(vec . plane) >= 0`` with the
+    left-to-right float64 fold of ``_double_dot``, so signs are
+    engine-exact (the DuckDB oracle inlines the same plane literals).
+    Edge rules: a NULL vector, NULL element, or length mismatch vs the
+    plane has no dot -> bit "0"; a NaN fold compares ``>= 0`` as TRUE
+    under Spark's and DuckDB's NaN-greatest ordering -> bit "1" (numpy
+    needs an explicit isnan OR); +inf -> "1". norm2 is the row's
+    own-length self-fold: NULL for NULL vec/element, 0.0 for empty,
+    NaN/inf kept. Requires uniform band width (``lsh_topk`` uses one
+    planes_per_band)."""
     import numpy as np
     from pyspark.sql.types import (
         DoubleType,
@@ -496,7 +389,7 @@ def _with_buckets_np(
 
     widths = {len(b) for b in bands}
     if len(widths) != 1:
-        raise ValueError("numpy bucket tier requires uniform band width")
+        raise ValueError("LSH bucketing requires uniform band width")
     w = widths.pop()
     nbands = len(bands)
     P = np.asarray([p for band in bands for p in band], dtype=np.float64)
@@ -554,7 +447,7 @@ def _with_buckets_np(
                         bits[ridx] = (dots >= 0.0) | np.isnan(dots)
             # (n, nbands, w) '0'/'1' bytes, row-major -> one zero-copy
             # StringArray of n*nbands w-char buckets (row0 band0, row0
-            # band1, ... — the expr explode's row-major order).
+            # band1, ...).
             chars = np.where(bits, np.uint8(49), np.uint8(48)).reshape(-1)
             total = n * nbands
             offsets = np.arange(0, (total + 1) * w, w, dtype=np.int32)
@@ -601,29 +494,19 @@ def lsh_topk(
     bands: int = 2,
     planes_per_band: int = 4,
     seed: int = 7,
-    impl: str = "numpy",
 ) -> DataFrame:
     """Approximate top-k: candidates share a hyperplane-sign bucket in at
-    least one band; only candidates are scored.
-
-    ``impl="numpy"`` (default, round 14): bucket signatures + norm2 run
-    in one :func:`_with_buckets_np` Arrow pass per side (the corpus-sized
-    interpreted plane folds were the dominant cost); candidate scoring
-    stays in the JVM — it is bucket-sized, not corpus x planes.
-    ``impl="expr"`` keeps the pure-JVM ladder selectable."""
+    least one band; only candidates are scored. Bucket signatures and
+    norm2 run in one :func:`_with_buckets_np` Arrow pass per side;
+    candidate scoring stays in the JVM — it is bucket-sized, not
+    corpus x planes."""
     all_planes = hyperplanes(dim, bands * planes_per_band, seed)
     band_planes = [
         all_planes[i * planes_per_band : (i + 1) * planes_per_band]
         for i in range(bands)
     ]
-    if impl == "numpy":
-        q = _with_buckets_np(queries, id_col, vec_col, "query_id", band_planes)
-        c = _with_buckets_np(corpus, id_col, vec_col, "corpus_id", band_planes)
-    elif impl == "expr":
-        q = _with_buckets(_with_norm2(queries, id_col, vec_col, "query_id"), "query_id_vec", band_planes)
-        c = _with_buckets(_with_norm2(corpus, id_col, vec_col, "corpus_id"), "corpus_id_vec", band_planes)
-    else:
-        raise ValueError(f"unknown impl {impl!r}")
+    q = _with_buckets_np(queries, id_col, vec_col, "query_id", band_planes)
+    c = _with_buckets_np(corpus, id_col, vec_col, "corpus_id", band_planes)
     cands = (
         c.join(F.broadcast(q), ["band", "bucket"])
         .dropDuplicates(["query_id", "corpus_id"])
@@ -647,7 +530,6 @@ def ivf_topk(
     k: int = 5,
     n_centroids: int = 16,
     nprobe: int = 3,
-    impl: str = "numpy",
     cent_rows: list | None = None,
 ) -> DataFrame:
     """IVF-flat approximate top-k: inverted-file cells from sampled
@@ -677,22 +559,22 @@ def ivf_topk(
     a caller that builds several IVF arms over the same corpus
     (llm_ann_recall: nprobe=3 and nprobe=12) pay the takeOrdered sample
     job ONCE instead of once per arm. Results are identical by
-    construction (same sample definition). numpy tier only; the eager
-    collect otherwise runs at DataFrame-construction time per call.
+    construction (same sample definition). Without it the sample is
+    collected at DataFrame-construction time, once per call.
 
-    Scale shape: centroids are broadcast twice (cell assignment for the
-    corpus scan; probe list for the query set); the only shuffle of
+    Scale shape: the collected centroids ride the assignment pass of
+    the corpus scan and of the query set; the only shuffle of
     corpus-sized data is the equi-join on cell id — candidates per query
     are |probed cells| * cell size, never |corpus|. Exactly the FAISS IVF
     contract, expressed as DataFrame ops.
     """
-    if cent_rows is not None and impl == "numpy":
-        return _ivf_with_cent_rows(
-            queries, corpus, cent_rows, id_col, vec_col, k, nprobe
+    if cent_rows is None:
+        cent_rows = _collect_cent_rows(
+            _hash_sample(corpus, id_col, vec_col, n_centroids, "cent_id", "cent_vec")
         )
-    cents = _hash_sample(corpus, id_col, vec_col, n_centroids, "cent_id", "cent_vec")
-    return _ivf_with_centroids(
-        queries, corpus, cents, id_col, vec_col, k, nprobe, impl=impl
+    return _ivf_with_cent_rows(
+        queries, corpus, cent_rows, id_col, vec_col, k, nprobe,
+        cent_id_type=corpus.schema[id_col].dataType,
     )
 
 
@@ -726,36 +608,10 @@ def _cent_norm_frame(cents: DataFrame) -> DataFrame:
     )
 
 
-def _nearest_cells(
-    df: DataFrame, out_id: str, n: int, cent_norm: DataFrame
-) -> DataFrame:
-    """Rank every row of ``df`` (a _with_norm2 frame) against the
-    broadcast centroid set; keep the ``n`` nearest cells per row."""
-    scored = df.join(F.broadcast(cent_norm)).select(
-        out_id,
-        f"{out_id}_vec",
-        f"{out_id}_norm2",
-        "cent_id",
-        _cosine_expr(
-            f"{out_id}_vec", "cent_vec",
-            f"{out_id}_norm2", "cent_norm2",
-        ).alias("_csim"),
-    )
-    w = Window.partitionBy(out_id).orderBy(
-        F.col("_csim").desc(), F.col("cent_id")
-    )
-    return (
-        scored.withColumn("_crank", F.row_number().over(w))
-        .filter(F.col("_crank") <= n)
-        .drop("_csim", "_crank")
-    )
-
-
 def _collect_cent_rows(cents: DataFrame) -> list:
-    """Centroid frame -> driver-side [(cent_id, cent_vec)] for the numpy
-    assignment tier. Bounded by construction: every caller's ``cents``
-    is centroid-count-sized (a takeOrdered sample or trained means) —
-    the same frames the expr tier collects implicitly via broadcast."""
+    """Centroid frame -> driver-side [(cent_id, cent_vec)] for the Arrow
+    assignment pass. Bounded by construction: every caller's ``cents``
+    is centroid-count-sized (a takeOrdered sample or trained means)."""
     return [(r["cent_id"], r["cent_vec"]) for r in cents.collect()]
 
 
@@ -768,10 +624,11 @@ def _nearest_cells_np(
     cent_rows: list,
     cent_id_type=None,
 ) -> DataFrame:
-    """Arrow/numpy twin of ``_with_norm2 -> _nearest_cells``: one
-    mapInArrow pass replacing the broadcast join + interpreted
-    ``_cosine`` folds + per-row window (``policy="cosine_null"``
-    reproduces ``_cosine``'s NULL-for-undefined rule bit-for-bit)."""
+    """(out_id, {out_id}_vec, {out_id}_norm2, cent_id) for the ``n``
+    nearest cells of every row of ``df``: one mapInArrow pass that
+    scores against every centroid and keeps the top ``n`` by (cosine
+    DESC, cent_id) under :func:`_cosine_expr`'s NULL-for-undefined rule
+    (``policy="cosine_null"``)."""
     assigned = _ivf_assign_np(
         df, id_col, vec_col, cent_rows, n, policy="cosine_null",
         cent_id_type=cent_id_type,
@@ -784,47 +641,6 @@ def _nearest_cells_np(
     )
 
 
-def _ivf_with_centroids(
-    queries: DataFrame,
-    corpus: DataFrame,
-    cents: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    nprobe: int,
-    impl: str = "numpy",
-) -> DataFrame:
-    """Shared IVF cell machinery: assign corpus rows to their nearest
-    centroid, probe the ``nprobe`` nearest cells per query, exact-score
-    only same-cell candidates. ``cents`` must be (cent_id, cent_vec) and
-    centroid-count-sized (it is broadcast twice in the expr tier, or
-    collected once for the numpy tier — same bounded frame either way).
-
-    ``impl="numpy"`` (default, round 14): corpus and query cell
-    assignment run through :func:`_nearest_cells_np` — the corpus-sized
-    interpreted ``_cosine`` folds (|corpus| x |centroids| zip_with/
-    aggregate lambdas, never codegen'd) were the dominant cost of every
-    IVF-flat top-k query. The candidate re-rank stays in the JVM: it is
-    |probed cells| x cell-sized, not corpus x centroids. ``impl="expr"``
-    keeps the pure-JVM ladder selectable (plan-shape tests, tier
-    equality)."""
-    if impl == "numpy":
-        return _ivf_with_cent_rows(
-            queries, corpus, _collect_cent_rows(cents), id_col, vec_col, k,
-            nprobe, cent_id_type=cents.schema["cent_id"].dataType,
-        )
-    if impl != "expr":
-        raise ValueError(f"unknown impl {impl!r}")
-    cent_norm = _cent_norm_frame(cents)
-    c = _nearest_cells(
-        _with_norm2(corpus, id_col, vec_col, "corpus_id"), "corpus_id", 1, cent_norm
-    )
-    q = _nearest_cells(
-        _with_norm2(queries, id_col, vec_col, "query_id"), "query_id", nprobe, cent_norm
-    )
-    return _ivf_topk_tail(c, q, k)
-
-
 def _ivf_with_cent_rows(
     queries: DataFrame,
     corpus: DataFrame,
@@ -835,9 +651,11 @@ def _ivf_with_cent_rows(
     nprobe: int,
     cent_id_type=None,
 ) -> DataFrame:
-    """The numpy-tier IVF serve path over an already-collected quantizer
-    list — the shared tail of :func:`_ivf_with_centroids` and the
-    ``cent_rows`` fast path of :func:`ivf_topk`."""
+    """Shared IVF cell machinery over a collected quantizer list
+    [(cent_id, cent_vec)]: assign corpus rows to their nearest
+    centroid, probe the ``nprobe`` nearest cells per query, exact-score
+    only same-cell candidates. The candidate re-rank stays in the JVM:
+    it is |probed cells| x cell-sized, not corpus x centroids."""
     c = _nearest_cells_np(
         corpus, id_col, vec_col, "corpus_id", 1, cent_rows,
         cent_id_type=cent_id_type,
@@ -882,7 +700,6 @@ def ivf_incremental_topk(
     checkpoint_static: bool = True,
     deletes: DataFrame | None = None,
     cents: DataFrame | None = None,
-    impl: str = "numpy",
 ) -> DataFrame:
     """Top-k ANN maintenance under updates (round 9 — VERDICT r8 task 5):
     serve queries over ``corpus ∪ delta`` WITHOUT re-clustering or
@@ -899,8 +716,7 @@ def ivf_incremental_topk(
     ``checkpoint_static=True`` localCheckpoints the static assignment,
     the materialized-inverted-file stand-in: the query probe and any
     subsequent delta batch reuse the materialization instead of
-    replaying the corpus-sized assignment scan (the same pattern the
-    checkpointed IVF cluster builders use; plan-guarded in
+    replaying the corpus-sized assignment scan (plan-guarded in
     tests/test_plans.py).
 
     Correctness shape: because centroids come only from the static
@@ -923,62 +739,31 @@ def ivf_incremental_topk(
     static corpus only, or the assign(static) ∪ assign(delta) ≡
     assign(static ∪ delta) equality breaks.
 
-    NOTE (numpy tier): builds eagerly — the centroid frame is collected
-    at DataFrame-construction time, once per call, not lazily at action
-    time (the expr tier localCheckpoints the same frame instead).
+    NOTE: builds eagerly — the centroid frame is collected at
+    DataFrame-construction time, once per call, not lazily at action
+    time. The collected rows ARE the persisted quantizer.
     """
     if cents is None:
         cents = _hash_sample(
             corpus, id_col, vec_col, n_centroids, "cent_id", "cent_vec"
         )
-    if impl == "numpy":
-        # The collected centroid rows ARE the persisted quantizer: one
-        # bounded collect replaces the expr tier's cent_norm
-        # localCheckpoint + three broadcasts (same takeOrdered plan,
-        # executed once at build).
-        cent_rows = _collect_cent_rows(cents)
-        ctype = cents.schema["cent_id"].dataType
-        static_assign = _nearest_cells_np(
-            corpus, id_col, vec_col, "corpus_id", 1, cent_rows,
-            cent_id_type=ctype,
-        )
-        if checkpoint_static:
-            static_assign = static_assign.localCheckpoint()
-        delta_assign = _nearest_cells_np(
-            delta, id_col, vec_col, "corpus_id", 1, cent_rows,
-            cent_id_type=ctype,
-        )
-        merged = static_assign.unionByName(delta_assign)
-        if deletes is not None:
-            tomb = deletes.select(F.col(id_col).alias("corpus_id")).distinct()
-            merged = merged.join(F.broadcast(tomb), "corpus_id", "left_anti")
-        q = _nearest_cells_np(
-            queries, id_col, vec_col, "query_id", nprobe, cent_rows,
-            cent_id_type=ctype,
-        )
-        return _ivf_topk_tail(merged, q, k)
-    if impl != "expr":
-        raise ValueError(f"unknown impl {impl!r}")
-    cent_norm = _cent_norm_frame(cents)
-    if checkpoint_static:
-        # the persisted index is centroids + inverted file: materialize
-        # BOTH, or every later broadcast of the (centroid-count-sized)
-        # quantizer replays a static-corpus scan to re-derive the sample
-        cent_norm = cent_norm.localCheckpoint()
-    static_assign = _nearest_cells(
-        _with_norm2(corpus, id_col, vec_col, "corpus_id"), "corpus_id", 1, cent_norm
+    cent_rows = _collect_cent_rows(cents)
+    ctype = cents.schema["cent_id"].dataType
+    static_assign = _nearest_cells_np(
+        corpus, id_col, vec_col, "corpus_id", 1, cent_rows, cent_id_type=ctype
     )
     if checkpoint_static:
         static_assign = static_assign.localCheckpoint()
-    delta_assign = _nearest_cells(
-        _with_norm2(delta, id_col, vec_col, "corpus_id"), "corpus_id", 1, cent_norm
+    delta_assign = _nearest_cells_np(
+        delta, id_col, vec_col, "corpus_id", 1, cent_rows, cent_id_type=ctype
     )
     merged = static_assign.unionByName(delta_assign)
     if deletes is not None:
         tomb = deletes.select(F.col(id_col).alias("corpus_id")).distinct()
         merged = merged.join(F.broadcast(tomb), "corpus_id", "left_anti")
-    q = _nearest_cells(
-        _with_norm2(queries, id_col, vec_col, "query_id"), "query_id", nprobe, cent_norm
+    q = _nearest_cells_np(
+        queries, id_col, vec_col, "query_id", nprobe, cent_rows,
+        cent_id_type=ctype,
     )
     return _ivf_topk_tail(merged, q, k)
 
@@ -1054,7 +839,6 @@ def ivf_kmeans_topk(
     nprobe: int = 3,
     sample_size: int = 2048,
     iters: int = 8,
-    impl: str = "numpy",
     cents_local: list | None = None,
 ) -> DataFrame:
     """IVF-flat with a trained k-means quantizer — the production variant
@@ -1070,18 +854,17 @@ def ivf_kmeans_topk(
     return) so multi-arm callers (llm_ann_recall_kmeans: nprobe=3 and
     12) train once instead of once per arm — identical results by
     construction."""
-    spark = corpus.sparkSession
+    from pyspark.sql.types import LongType
+
     if cents_local is None:
         cents_local = kmeans_centroids(
             corpus, id_col, vec_col, n_centroids, sample_size, iters
         )
-    cents = local_frame(
-        spark,
-        list(enumerate(cents_local)),
-        "cent_id long, cent_vec array<double>",
-    )
-    return _ivf_with_centroids(
-        queries, corpus, cents, id_col, vec_col, k, nprobe, impl=impl
+    # trained cent_ids are the list positions: long whatever the corpus
+    # id type (the cent_id type of kmeans_cents_frame)
+    return _ivf_with_cent_rows(
+        queries, corpus, list(enumerate(cents_local)), id_col, vec_col, k,
+        nprobe, cent_id_type=LongType(),
     )
 
 
@@ -1094,8 +877,8 @@ def kmeans_cents_frame(
     iters: int = 8,
 ) -> DataFrame:
     """The trained k-means quantizer as a (cent_id, cent_vec) frame —
-    the shared handoff between :func:`ivf_kmeans_topk` and the
-    incremental maintenance path."""
+    the handoff to the incremental maintenance path and the streaming
+    index."""
     cents_local = kmeans_centroids(
         corpus, id_col, vec_col, n_centroids, sample_size, iters
     )
@@ -1119,7 +902,6 @@ def ivf_incremental_kmeans_topk(
     iters: int = 8,
     checkpoint_static: bool = True,
     deletes: DataFrame | None = None,
-    impl: str = "numpy",
 ) -> DataFrame:
     """The production ANN maintenance composition (round 10 — VERDICT r9
     task 1): a TRAINED k-means coarse quantizer (:func:`kmeans_centroids`,
@@ -1143,17 +925,6 @@ def ivf_incremental_kmeans_topk(
         queries, corpus, delta, id_col, vec_col,
         k=k, n_centroids=n_centroids, nprobe=nprobe,
         checkpoint_static=checkpoint_static, deletes=deletes, cents=cents,
-        impl=impl,
-    )
-
-
-def _double_l2(a, b):
-    """Squared L2 distance as a strict left-to-right double fold (the
-    distance twin of dedup._double_dot, same engine-exactness argument)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
 
 
@@ -1166,7 +937,6 @@ def pq_topk(
     m_subs: int = 8,
     ksub: int = 16,
     dim: int = 64,
-    impl: str = "numpy",
     cb_entries: list | None = None,
 ) -> DataFrame:
     """Product-quantization ADC top-k — the canonical memory-bound ANN
@@ -1175,10 +945,10 @@ def pq_topk(
     ``cb_entries`` (round 15): a pre-collected codebook entry list (the
     ``cbook`` structs of :func:`_pq_codebook`) — lets a caller sharing
     one corpus across several PQ arms (llm_ann_recall: pq + ivfpq) pay
-    the codebook build/collect job once. numpy tier only; identical
-    results by construction. NOTE (numpy tier): builds eagerly — the
-    bounded codebook collect runs at DataFrame-construction time, once
-    per call, not lazily at action time.
+    the codebook build/collect job once; identical results by
+    construction. NOTE: builds eagerly — the bounded codebook collect
+    runs at DataFrame-construction time, once per call, not lazily at
+    action time.
 
     The vector space is split into ``m_subs`` subspaces of dim/m_subs
     dims. Each subspace has a ``ksub``-entry codebook; a corpus vector is
@@ -1204,25 +974,17 @@ def pq_topk(
     scored rows — identical to brute_force_topk's plan but over codes
     instead of vectors.
     """
-    if impl == "numpy":
-        # ONE codebook expression build + ONE bounded collect shared by
-        # the encode pass and the LUT pass (round 14: the first numpy
-        # cut built the codebook tree three times — encode, LUT, and the
-        # schema twin — at ~0.5 s of py4j HOF construction each; build
-        # time, not execution, dominated every pq-family adjudication).
-        dsub = dim // m_subs
-        if cb_entries is None:
-            cb_rows = _pq_codebook(
-                corpus, id_col, vec_col, ksub, m_subs=m_subs, dsub=dsub
-            ).collect()
-            cb_entries = list(cb_rows[0]["cbook"]) if cb_rows else []
-        ccodes = _pq_encode_np(
-            corpus, id_col, vec_col, m_subs, ksub, dim, cb_entries=cb_entries
+    # ONE codebook build + ONE bounded collect shared by the encode pass
+    # and the LUT pass
+    dsub = dim // m_subs
+    if cb_entries is None:
+        cb_entries = _pq_codebook_entries(
+            corpus, id_col, vec_col, ksub, m_subs, dsub
         )
-        qlut = _pq_luts_np(queries, id_col, vec_col, cb_entries, m_subs, dsub)
-    else:
-        ccodes = _pq_encode(corpus, id_col, vec_col, m_subs, ksub, dim)
-        qlut = _pq_luts(queries, corpus, id_col, vec_col, m_subs, ksub, dim)
+    ccodes = _pq_encode_np(
+        corpus, id_col, vec_col, m_subs, ksub, dim, cb_entries=cb_entries
+    )
+    qlut = _pq_luts_np(queries, id_col, vec_col, cb_entries, m_subs, dsub)
     scored = _adc_scored(ccodes.crossJoin(F.broadcast(qlut)), m_subs)
     return _topk_by_cosine(scored, k)
 
@@ -1249,7 +1011,7 @@ def _pq_codebook(
 
     NULL vectors are excluded from the sample: a NULL cent_vec inside
     the collect_list struct NPEs Spark's UnsafeProjection during
-    array_sort (round 14, hit by the numpy-tier edge tests), and a NULL
+    array_sort (hit by the bad-row edge tests), and a NULL
     codebook entry could never be a meaningful centroid anyway. Clean
     corpora sample identically."""
     cents = _hash_sample(
@@ -1278,68 +1040,16 @@ def _pq_codebook(
     )
 
 
-def _pq_sub(col, m: int, dsub: int):
-    return F.slice(col, m * dsub + 1, dsub)
-
-
-def _pq_encode(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m_subs: int,
-    ksub: int,
-    dim: int,
-    extra_cols: list | None = None,
-    extra_bcast: DataFrame | None = None,
-) -> DataFrame:
-    """Corpus scan -> (corpus_id, codes, recon_norm2 [, extras]): m_subs
-    argmins per row over the broadcast codebook. ``extra_cols`` are
-    additional column expressions evaluated in the SAME scan (ivfpq uses
-    this to compute the coarse-cell assignment without a second pass);
-    ``extra_bcast`` is an additional one-row broadcast frame crossJoined
-    into the scan so extra_cols can reference its columns (ivfpq passes
-    the coarse-centroid array here — round 14: previously the cell
-    assignment ran as a SECOND corpus scan joined back on corpus_id, a
-    corpus-sized SMJ shuffle the profile showed costing more than the
-    encode itself).
-
-    NOTE: the per-subspace lambdas MUST take exactly one parameter.
-    PySpark's higher-order F.transform passes (element, index) to any
-    two-parameter callable, so a `lambda cent, m=m:` default is silently
-    overwritten by the array index — these factories bind m safely."""
-    dsub = dim // m_subs
-    assert dsub * m_subs == dim, "dim must divide evenly into subspaces"
-    cb = _pq_codebook(corpus, id_col, vec_col, ksub, m_subs=m_subs, dsub=dsub)
-
-    def _mk_encode(m):
-        # n2 comes from the broadcast codebook (cent["n2s"][m]) — the
-        # per-row transform computes ONLY the query-dependent L2 fold.
-        return lambda cent: F.struct(
-            _double_l2(
-                _pq_sub(F.col("cvec"), m, dsub), _pq_sub(cent["cent_vec"], m, dsub)
-            ).alias("d"),
-            cent["j"].alias("j"),
-            cent["n2s"][m].alias("n2"),
-        )
-
-    c = corpus.select(
-        F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cvec")
-    ).crossJoin(F.broadcast(cb))
-    if extra_bcast is not None:
-        c = c.crossJoin(F.broadcast(extra_bcast))
-    code_cols, n2_cols = [], []
-    for m in range(m_subs):
-        pick = F.array_min(F.transform("cbook", _mk_encode(m)))
-        code_cols.append(pick["j"])
-        n2_cols.append(pick["n2"])
-    from functools import reduce as _reduce
-
-    return c.select(
-        "corpus_id",
-        F.array(*code_cols).alias("codes"),
-        _reduce(lambda a, b: a + b, n2_cols).alias("recon_norm2"),
-        *(extra_cols or []),
-    )
+def _pq_codebook_entries(
+    corpus: DataFrame, id_col: str, vec_col: str, ksub: int, m_subs: int,
+    dsub: int,
+) -> list:
+    """The ``cbook`` structs of :func:`_pq_codebook` on the driver —
+    bounded: one row of <= ksub entries."""
+    cb_rows = _pq_codebook(
+        corpus, id_col, vec_col, ksub, m_subs=m_subs, dsub=dsub
+    ).collect()
+    return list(cb_rows[0]["cbook"]) if cb_rows else []
 
 
 def _pq_encode_np(
@@ -1352,47 +1062,32 @@ def _pq_encode_np(
     cents_arr: DataFrame | None = None,
     cb_entries: list | None = None,
 ) -> DataFrame:
-    """Arrow/numpy tier of :func:`_pq_encode` — same output, vectorized.
-
-    The expr tier's per-row cost is interpreted higher-order-function
-    evaluation (F.transform lambdas are never codegen'd): the round-14
-    profile measured ~0.35 ms/row for the 8x16 L2-argmin tree, which
-    made a 20k-row corpus cost ~7 s per scan and made llm_knn_ivfpq the
-    family's swingiest adjudication (JIT-path-dependent 11-18 s). This
-    tier does the identical arithmetic in numpy inside one mapInPandas
+    """Corpus scan -> (corpus_id, codes, recon_norm2 [, cent_id]): m_subs
+    L2 argmins per row over the collected codebook, in one mapInPandas
     pass — including the coarse-cell assignment when ``cents_arr`` is
-    given, so ivfpq needs neither a second corpus scan nor the
-    corpus-sized self-join the expr path used to pay.
+    given, so ivfpq needs no second corpus scan.
 
-    BIT-IDENTITY (same contract as streaming.pipeline's stream_ivf_assign
-    numpy tier): every fold replicates the expr tier's operation sequence
-    on clean vectors —
-      * code argmin: per-subspace L2 is float32 subtract/multiply
-        (``_double_l2``'s zip_with carries the column's FLOAT element
-        type) accumulated left-to-right into a float64 seeded 0.0; ties
-        break to the smallest codebook index (np.argmin first-minimum ==
-        the expr struct-min's (d, j) order, cbook sorted by j).
+    Arithmetic (hash-checked against the DuckDB oracle's SQL folds):
+      * code argmin: per-subspace L2 subtracts/multiplies in the
+        column's element type (float32 for array<float>) and
+        accumulates left-to-right into a float64 seeded 0.0; ties break
+        to the smallest codebook index (np.argmin first-minimum, cbook
+        sorted by j).
       * recon_norm2: left-associated sum of the chosen entries' n2s,
         the n2 values taken VERBATIM from the collected codebook (they
         are computed once in Spark, not re-derived here).
       * cell argmax: dots/norms are float64 folds over double-cast
         elements (``_double_dot``), negsim = -(dot/sqrt(vnorm*cnorm2));
-        NaN cells (zero norms) rank last exactly like Spark's
-        NaN-greatest struct ordering, with equal-NaN ties resolving to
-        the smallest cent_id in both tiers.
-    POLICY DIVERGENCE (documented, tested): a NULL, wrong-length, or
-    non-finite-element CORPUS vector gets NULL codes/recon_norm2/cent_id
-    here; a malformed SAMPLED codebook/centroid entry is dropped (its
-    surviving neighbors keep their original j / cent_id). The expr tier
-    instead propagates NULL/NaN through the folds into
-    implementation-defined (but deterministic) picks. Fixtures and
-    oracles contain only clean vectors, so the registered queries hash
-    identically under either tier (tests/test_similarity.py pins
-    bitwise tier equality on the fixture plus a zero vector).
+        NaN cells (zero norms) rank last (Spark's NaN-greatest struct
+        ordering), equal-NaN ties resolving to the smallest cent_id.
+    Bad-row policy: a NULL, wrong-length, or non-finite-element CORPUS
+    vector gets NULL codes/recon_norm2/cent_id; a malformed SAMPLED
+    codebook/centroid entry is dropped (its surviving neighbors keep
+    their original j / cent_id). Fixtures contain only clean vectors.
 
     Scale shape: the codebook (ksub rows) and centroid array are bounded
-    driver collects (the same frames the expr tier broadcasts); the
-    corpus streams through one Arrow pass, ~n*dim*ksub flops per batch.
+    driver collects; the corpus streams through one Arrow pass,
+    ~n*dim*ksub flops per batch.
     """
     import numpy as np
     import pandas as pd
@@ -1400,9 +1095,8 @@ def _pq_encode_np(
 
     dsub = dim // m_subs
     assert dsub * m_subs == dim, "dim must divide evenly into subspaces"
-    # _double_l2's zip_with computes (x-y)*(x-y) in the COLUMN'S element
-    # type (no cast) before the float64 accumulate — mirror it exactly:
-    # float32 arithmetic for array<float> columns, float64 otherwise.
+    # (x-y)*(x-y) in the COLUMN'S element type before the float64
+    # accumulate: float32 arithmetic for array<float>, float64 otherwise.
     elem_np = (
         np.float32
         if isinstance(corpus.schema[vec_col].dataType.elementType, FloatType)
@@ -1416,15 +1110,12 @@ def _pq_encode_np(
         )
 
     if cb_entries is None:
-        cb_rows = _pq_codebook(
-            corpus, id_col, vec_col, ksub, m_subs=m_subs, dsub=dsub
-        ).collect()  # bounded: one row of <= ksub structs
-        cb_entries = list(cb_rows[0]["cbook"]) if cb_rows else []
+        cb_entries = _pq_codebook_entries(
+            corpus, id_col, vec_col, ksub, m_subs, dsub
+        )
     # malformed sampled entries (NULL / wrong-length / non-finite) are
     # DROPPED here, keeping the surviving entries' original j indices —
-    # the expr tier would propagate their NULL distances into the
-    # struct-min (NULLS FIRST) and pick the garbage entry for every row.
-    # Divergence only on dirty corpora; clean corpora are bit-identical.
+    # a NULL distance would otherwise win every argmin.
     entries = [e for e in cb_entries if _valid_vec(e["cent_vec"])]
     n_entries = len(entries)
     J = np.array([e["j"] for e in entries], dtype=np.int64).reshape(n_entries)
@@ -1448,16 +1139,11 @@ def _pq_encode_np(
         CN2 = np.array([c["cent_norm2"] for c in cents], dtype=np.float64)
         CIDS = [c["cent_id"] for c in cents]
 
-    # Static schema matching the expr twin's (codes elements are the
-    # IntegerType row_number-derived j; recon_norm2 a double sum) with
-    # every field forced nullable: the bad-row policy emits NULLs where
-    # the expr tier's types are non-null, and a None in a non-nullable
-    # array field NPEs UnsafeProjection. Round-14 build-cost fix: the
-    # first cut BUILT the whole expr twin just to read its schema —
-    # ~1.7 s of py4j HOF-lambda construction per call, pure driver
-    # overhead (the profile showed pq/ivfpq builds dominated by exactly
-    # this). The twin-equality invariant is pinned by a schema test
-    # instead of being re-derived per build.
+    # Static schema (codes elements are the IntegerType
+    # row_number-derived j; recon_norm2 a double sum) with every field
+    # nullable: the bad-row policy emits NULLs, and a None in a
+    # non-nullable array field NPEs UnsafeProjection. Pinned by a
+    # literal-schema test.
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -1538,36 +1224,6 @@ def _pq_encode_np(
     return src.mapInPandas(encode, out_schema)
 
 
-def _pq_luts(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m_subs: int,
-    ksub: int,
-    dim: int,
-) -> DataFrame:
-    """Query side of ADC: (query_id, lut, qnorm2) — LUT[m][j] is the exact
-    dot of the query's m-th subvector with codebook entry j."""
-    dsub = dim // m_subs
-    cb = _pq_codebook(corpus, id_col, vec_col, ksub)
-
-    def _mk_lut(m):
-        return lambda cent: _double_dot(
-            _pq_sub(F.col("qvec"), m, dsub), _pq_sub(cent["cent_vec"], m, dsub)
-        )
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    ).crossJoin(F.broadcast(cb))
-    lut = F.array(*[F.transform("cbook", _mk_lut(m)) for m in range(m_subs)])
-    return q.select(
-        "query_id",
-        lut.alias("lut"),
-        _double_dot(F.col("qvec"), F.col("qvec")).alias("qnorm2"),
-    )
-
-
 def _pq_luts_np(
     queries: DataFrame,
     id_col: str,
@@ -1576,33 +1232,26 @@ def _pq_luts_np(
     m_subs: int,
     dsub: int,
 ) -> DataFrame:
-    """Arrow/numpy twin of :func:`_pq_luts` over a pre-collected codebook
-    (round 14 build-cost fix): the expr tier's 8 ``F.transform`` LUT
-    trees cost ~1.2 s of py4j lambda construction PER BUILD while the
-    execution itself is query-count-sized — the opposite of where the
-    time should go. One mapInPandas pass computes the identical LUTs.
+    """Query side of ADC: (query_id, lut, qnorm2) over a pre-collected
+    codebook — LUT[m][j] is the exact dot of the query's m-th subvector
+    with codebook entry j. One mapInArrow pass (the LUTs are
+    query-count-sized, so building them must cost no py4j work per
+    entry).
 
-    Bit-identity with the expr ladder, edge rules included:
     ``lut[m][j] = fold(slice(qvec, m*dsub+1, dsub) .
     slice(cbook[j].cent_vec, ...))`` where the fold is the strict
-    left-to-right float64 zip_with/aggregate sequence. zip_with pads the
-    shorter side with NULL, so slices of UNEQUAL length yield NULL;
-    slices of equal length fold over that length (two slices past both
-    vectors' ends are empty -> 0.0, Spark's aggregate seed); a NULL
-    vector or NULL element poisons to NULL; NaN/inf run the same IEEE
+    left-to-right float64 sequence of ``_double_dot``. Slices of
+    UNEQUAL length yield NULL; slices of equal length fold over that
+    length (two slices past both vectors' ends are empty -> 0.0); a
+    NULL vector or NULL element gives NULL; NaN/inf run plain IEEE
     arithmetic. ``qnorm2`` is the query's own-length self-fold. The
-    codebook entries are used IN ARRAY ORDER (array_sort by j), exactly
-    as the expr transform sees them — malformed entries produce the same
-    NULL/garbage elements positionally, so ADC's positional element_at
-    stays aligned between tiers.
+    codebook entries are used IN ARRAY ORDER (array_sort by j), so
+    malformed entries stay positionally aligned with ADC's element_at.
 
-    Emits via ``mapInArrow`` (round 15 — ADVICE r14): the earlier
-    mapInPandas return bridge collapsed a NaN lut/qnorm2 value to NULL,
-    so a NaN-element query ranked its candidates last in this tier while
-    the expr tier's NaN ranked them first. Building the record batches
-    straight in pyarrow keeps NaN distinct from NULL, so the two tiers
-    are now bit-identical INCLUDING NaN queries (pinned in
-    tests/test_similarity.py — the old exclusion is gone)."""
+    Emits via ``mapInArrow``: building the record batches straight in
+    pyarrow keeps a NaN lut/qnorm2 distinct from NULL (a mapInPandas
+    return would collapse it to NULL and rank a NaN query's candidates
+    last instead of first)."""
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -1741,7 +1390,6 @@ def ivfpq_topk(
     ksub: int = 16,
     dim: int = 64,
     shortlist: int = 50,
-    impl: str = "numpy",
     cb_entries: list | None = None,
 ) -> DataFrame:
     """IVF + PQ + exact rerank — the composed FAISS-IVFPQ(+refine)
@@ -1759,17 +1407,11 @@ def ivfpq_topk(
        exact cosine fold, so the final ordering is exact over the
        shortlist.
 
-    One corpus scan computes BOTH the cell assignment and the PQ codes —
-    ``impl="numpy"`` (default) in a vectorized Arrow pass
-    (:func:`_pq_encode_np`; the expr tier's interpreted HOF folds
-    measured ~0.35 ms/row in the round-14 profile and made this the
-    family's swingiest row), ``impl="expr"`` as per-row folds over two
-    broadcast literals in the same projection (round 14: the expr cell
-    pick previously ran as a second corpus scan SMJ-joined back on
-    corpus_id; both tiers are now genuinely single-scan). The only
+    One corpus scan computes BOTH the cell assignment and the PQ codes,
+    in one vectorized Arrow pass (:func:`_pq_encode_np`). The only
     corpus-sized shuffle left is the bounded top-k window. Deterministic
-    end to end — the whole three-stage index is hash-checkable against
-    SQL (tier bit-equality pinned in tests/test_similarity.py).
+    end to end — the whole three-stage index is hash-checked against
+    the DuckDB oracle.
     """
     # broadcastable coarse-centroid array (one row, n_centroids structs)
     cents = _hash_sample(
@@ -1785,55 +1427,24 @@ def ivfpq_topk(
         ).alias("cents")
     )
 
-    def _cell_pick(vec_col_name: str):
-        # argmax cosine -> array_min over (-cosine, cent_id) structs;
-        # single-parameter lambda (see _pq_encode note on F.transform).
-        vnorm = _double_dot(F.col(vec_col_name), F.col(vec_col_name))
-        return F.array_min(
-            F.transform(
-                "cents",
-                lambda ct: F.struct(
-                    (
-                        -_double_dot(F.col(vec_col_name), ct["cent_vec"])
-                        / F.sqrt(vnorm * ct["cent_norm2"])
-                    ).alias("negsim"),
-                    ct["cent_id"].alias("cent_id"),
-                ),
-            )
+    # corpus: codes + recon norm + cell id, all from ONE scan; a
+    # caller-supplied cb_entries (llm_ann_recall shares it with the pq
+    # arm) skips the codebook job
+    if cb_entries is None:
+        cb_entries = _pq_codebook_entries(
+            corpus, id_col, vec_col, ksub, m_subs, dim // m_subs
         )
-
-    # corpus: codes + recon norm + cell id, all from ONE scan — numpy
-    # tier folds the cell argmax into the Arrow encode pass; expr tier
-    # evaluates it as an extra column over the same projection (via
-    # extra_bcast). Neither pays the corpus self-join the pre-r14 shape
-    # had (profile: the SMJ's two interpreted sides were the whole cost).
-    if impl == "numpy":
-        # shared single codebook build + collect (see pq_topk note);
-        # a caller-supplied cb_entries (round 15 — llm_ann_recall shares
-        # it with the pq arm) skips even that one job
-        if cb_entries is None:
-            cb_rows = _pq_codebook(
-                corpus, id_col, vec_col, ksub, m_subs=m_subs, dsub=dim // m_subs
-            ).collect()
-            cb_entries = list(cb_rows[0]["cbook"]) if cb_rows else []
-        ccodes = _pq_encode_np(
-            corpus, id_col, vec_col, m_subs, ksub, dim,
-            cents_arr=cents_arr, cb_entries=cb_entries,
-        )
-    else:
-        ccodes = _pq_encode(
-            corpus, id_col, vec_col, m_subs, ksub, dim,
-            extra_cols=[_cell_pick("cvec")["cent_id"].alias("cent_id")],
-            extra_bcast=cents_arr,
-        )
+    ccodes = _pq_encode_np(
+        corpus, id_col, vec_col, m_subs, ksub, dim,
+        cents_arr=cents_arr, cb_entries=cb_entries,
+    )
 
     # queries: probe list (nprobe nearest cells) + ADC LUT. The probe
     # tree is ONE parsed SQL expression (round 15): the Column-DSL HOF
     # build cost ~800 py4j round-trips PER CALL (~0.3 s of the arm's
     # build term measured in the llm_ann_recall profile); F.expr parses
     # the identical aggregate/zip_with/array_sort ladder in one trip.
-    # Equivalence is pinned by the DuckDB oracle hash and the
-    # numpy/expr tier-equality tests.
+    # Equivalence is pinned by the DuckDB oracle hash.
     qbase = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     ).crossJoin(F.broadcast(cents_arr))
@@ -1849,12 +1460,9 @@ def ivfpq_topk(
             s -> s.cent_id))"""
         ).alias("cent_id"),
     )
-    if impl == "numpy":
-        qlut = _pq_luts_np(
-            queries, id_col, vec_col, cb_entries, m_subs, dim // m_subs
-        )
-    else:
-        qlut = _pq_luts(queries, corpus, id_col, vec_col, m_subs, ksub, dim)
+    qlut = _pq_luts_np(
+        queries, id_col, vec_col, cb_entries, m_subs, dim // m_subs
+    )
     qside = probes.join(F.broadcast(qlut), "query_id")
 
     # candidates = same-cell pairs, scored by ADC, top-L shortlist
@@ -1873,7 +1481,6 @@ def pq_rerank_topk(
     m_subs: int = 8,
     ksub: int = 16,
     dim: int = 64,
-    impl: str = "numpy",
 ) -> DataFrame:
     """PQ-ADC shortlist + exact rerank — the production two-stage scan
     (FAISS's IVFPQR / "refine" pattern). Stage 1 runs :func:`pq_topk`
@@ -1897,7 +1504,7 @@ def pq_rerank_topk(
     """
     short = pq_topk(
         queries, corpus, id_col, vec_col,
-        k=shortlist, m_subs=m_subs, ksub=ksub, dim=dim, impl=impl,
+        k=shortlist, m_subs=m_subs, ksub=ksub, dim=dim,
     )
     return _exact_rerank(short, queries, corpus, id_col, vec_col, k)
 
@@ -1905,9 +1512,9 @@ def pq_rerank_topk(
 def _fold_dot_np(A, B):
     """Pairwise dot matrix |A| x |B| as a strict left-to-right float64
     accumulation along the dimension axis — per (i, j) the additions run
-    d=0,1,2,..., the exact IEEE sequence ``_double_dot`` performs, so the
-    results are bit-identical to the expr tier (same argument as
-    :func:`_brute_scored_np` / streaming's numpy IVF scorer)."""
+    d=0,1,2,..., the exact IEEE sequence ``_double_dot`` (and DuckDB's
+    ``list_reduce``) performs, so the results are bit-identical to the
+    JVM and oracle folds."""
     import numpy as np
 
     dots = np.zeros((A.shape[0], B.shape[0]), dtype=np.float64)
@@ -1930,7 +1537,7 @@ def _vec_class(v):
     """(kind, length): 'null' = no dot is ever defined vs ANY vector
     (NULL vec or a NULL element — zip_with's NULL poisons every fold,
     including the self-dot), 'ok' = stackable floats (NaN/inf allowed:
-    they run the same IEEE arithmetic in both tiers)."""
+    they run plain IEEE arithmetic)."""
     if v is None:
         return ("null", -1)
     lst = list(v)
@@ -1948,21 +1555,22 @@ def _ivf_assign_np(
     policy: str = "raw",
     cent_id_type=None,
 ) -> DataFrame:
-    """Arrow/numpy twin of the flat IVF assignment (corpus x centroids
-    scoring + per-vid top-``nassign`` window): one mapInPandas pass that
-    emits (vid, vid_vec, vid_norm2, cent_id), bit-identical to the expr
-    tier including every edge case:
+    """The flat IVF assignment (corpus x centroids scoring + per-vid
+    top-``nassign`` by (csim DESC, cent_id)) in one mapInArrow pass that
+    emits (vid, vid_vec, vid_norm2, cent_id). Bit-identical to the JVM
+    broadcast-join assignment :func:`_ivf_assign_expr` under
+    ``policy="raw"``, including every edge case:
 
     - ``policy="raw"`` (the near-dup scorer): csim is the RAW
       ``dot/sqrt(norm2_v*norm2_c)`` (no try_divide, no nanvl): a zero
-      divisor raises, exactly like ANSI's DIVIDE_BY_ZERO kills the expr
+      divisor raises, exactly like ANSI's DIVIDE_BY_ZERO kills the JVM
       plan; NaN csims sort FIRST under the desc window (Double.compare).
-    - ``policy="cosine_null"`` (the top-k ladder, round 14): csim is
-      ``_cosine`` = ``nanvl(try_divide(dot, sqrt(...)), NULL)`` — a zero
-      divisor OR a NaN result yields NULL (one rule for every undefined
-      similarity, ranked last), reproducing ``_nearest_cells``'s expr
-      scoring bit-for-bit: the division runs the identical IEEE sequence
-      and only its NULL-replacement policy differs from "raw".
+    - ``policy="cosine_null"`` (the top-k ladder): csim is
+      :func:`_cosine_expr`'s ``nanvl(try_divide(dot, sqrt(...)), NULL)``
+      — a zero divisor OR a NaN result yields NULL (one rule for every
+      undefined similarity, ranked last); the division runs the same
+      IEEE sequence and only its NULL-replacement policy differs from
+      "raw".
     - ordering is Spark's ``desc(csim), cent_id``: NaN above +inf above
       finite, NULLs last (a NULL csim = NULL vec / NULL element /
       length-mismatched fold);
@@ -1980,9 +1588,8 @@ def _ivf_assign_np(
         raise ValueError(f"unknown policy {policy!r}")
     src = df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vid_vec"))
     # cent_id carries the CENTROID frame's id type when the caller knows
-    # it (round 15 — ADVICE r14: a trained-k-means quantizer has long
-    # cent_ids by construction, and reusing the corpus id type diverged
-    # the numpy tier's schema from the expr tier on non-long-id corpora)
+    # it: a trained-k-means quantizer has long cent_ids by construction,
+    # whatever the corpus id type
     cent_type = cent_id_type or src.schema["vid"].dataType
     out_schema = StructType(
         [
@@ -2064,14 +1671,14 @@ def _ivf_assign_np(
                     if (denom == 0.0).any():
                         raise ArithmeticError(
                             "[DIVIDE_BY_ZERO] zero-norm vector in IVF "
-                            "assignment (the expr tier raises identically "
-                            "under ANSI); clean the corpus or drop zero "
-                            "vectors upstream"
+                            "assignment (the JVM assignment raises "
+                            "identically under ANSI); clean the corpus or "
+                            "drop zero vectors upstream"
                         )
                     block = dots / denom
                     csim[np.ix_(ridx, np.asarray(cj))] = block
                     isnull[np.ix_(ridx, np.asarray(cj))] = False
-                else:  # cosine_null: _cosine's nanvl(try_divide(...), NULL)
+                else:  # cosine_null: nanvl(try_divide(...), NULL)
                     dz = denom == 0.0
                     with np.errstate(divide="ignore", invalid="ignore"):
                         block = dots / np.where(dz, 1.0, denom)
@@ -2122,8 +1729,6 @@ def ivf_near_dup_pairs(
     n_centroids: int | None = None,
     nassign: int = 2,
     target_cell: int = 256,
-    checkpoint: bool = True,
-    impl: str = "numpy",
 ) -> DataFrame:
     """Near-dup pairs via IVF cell blocking — the corpus-scale twin of
     ``embedding_near_dup_pairs``. Label blocks grow with the corpus (the
@@ -2155,8 +1760,8 @@ def ivf_near_dup_pairs(
     engines.
 
     Scale shape: centroids are a hash-ordered sample (takeOrdered, no
-    shuffle), broadcast once for assignment; the only corpus-sized
-    shuffle is the cell equi-join. When ``n_centroids`` is None it is
+    shuffle), collected once for assignment; the only corpus-sized
+    shuffle is the per-cell grouping. When ``n_centroids`` is None it is
     sized ADAPTIVELY as max(8, corpus // target_cell) — the constant-
     cell-population rule the linearity claim depends on. (The first cut
     registered a constant 8 cells; at sf1 that meant 19k-vector cells,
@@ -2166,56 +1771,33 @@ def ivf_near_dup_pairs(
     production near-dup thresholds (>=0.8) co-locate pairs and keep
     recall high at any scale.
 
-    ``impl="numpy"`` (default, round 14): both corpus-sized phases run
-    as Arrow/numpy passes with bit-identical left-to-right float64
-    folds — assignment in one ``mapInPandas`` (:func:`_ivf_assign_np`,
-    no window exchange of vector-carrying rows, no checkpoint barrier
-    since the single consumer reads it once), pair scoring per cell in
-    ``applyInPandas`` (:func:`_pairs_from_assignment`). The expr tier
-    measured ~5-7 us/candidate-pair in its interpreted zip_with/
-    aggregate folds (HOF lambdas never enter whole-stage codegen) —
-    at ~2.3M sf0.1 / ~23M sf1 cell co-occurrences that interpreted
-    fold was the whole cost of the operator. ``impl="expr"`` keeps the
-    pure-JVM plan selectable (plan-shape tests, tier-equality arms)."""
+    Both corpus-sized phases run as Arrow/numpy passes with
+    left-to-right float64 folds: assignment in one ``mapInArrow``
+    (:func:`_ivf_assign_np`, no window exchange of vector-carrying
+    rows), pair scoring per cell in ``applyInPandas``
+    (:func:`_pairs_from_assignment`)."""
     if n_centroids is None:
         n_centroids = max(8, df.count() // target_cell)
     cents = _hash_sample(df, id_col, vec_col, n_centroids, "cent_id", "cent_vec")
-    if impl == "numpy":
-        if n_centroids > _ASSIGN_COLLECT_CEILING:
-            # Driver-memory guard (round 15 — VERDICT r14 item 3): the
-            # numpy tier ships the collected centroid list in the Arrow
-            # closure, which is fine at the adaptive-switch knee
-            # (<= ~4k centroids = ~2 MB) but a driver/closure ceiling
-            # beyond. Above the ceiling, assign via the broadcast-
-            # DataFrame expr ladder (bit-identical to _ivf_assign_np —
-            # pinned by the tier-equality tests) and keep the numpy pair
-            # phase, which is cell-sized either way. No registered
-            # bench-scale query reaches this arm; it exists so the flat
-            # path cannot OOM the driver when called directly at scale.
-            assigned = _ivf_assign_expr(df, id_col, vec_col, cents, nassign)
-            return _pairs_from_assignment(assigned, threshold, impl="numpy")
-        cent_rows = [(r["cent_id"], r["cent_vec"]) for r in cents.collect()]
-        assigned = _ivf_assign_np(df, id_col, vec_col, cent_rows, nassign)
-        return _pairs_from_assignment(assigned, threshold, impl="numpy")
-    if impl != "expr":
-        raise ValueError(f"unknown impl {impl!r}")
-    # Checkpoint BEFORE the cell self-join: Spark reuses no common
-    # subplan across self-join sides (ReusedExchange never fires here —
-    # verified on the formatted plan), so without the barrier both
-    # sides re-run the corpus x centroids scoring pass — the dominant
-    # cost of the whole operator. Materializing |corpus| * nassign
-    # assignment rows once is strictly cheaper than recomputing that
-    # pass at any scale (measured: llm_embedding_near_dup_ivf
-    # 15.6s -> 6.5s at sf0.1, median-of-3).
-    assigned = _ivf_assign_expr(df, id_col, vec_col, cents, nassign)
-    if checkpoint:
-        # checkpoint=False exists for plan-shape tests, which need the
-        # pre-barrier assignment stage visible in one explain.
-        assigned = assigned.localCheckpoint()
-    return _pairs_from_assignment(assigned, threshold, impl="expr")
+    if n_centroids > _ASSIGN_COLLECT_CEILING:
+        # Kept JVM path, a driver-memory guard: the Arrow assignment
+        # ships the collected centroid list in its task closure, fine at
+        # the adaptive-switch knee (<= ~4k centroids = ~2 MB) but a
+        # driver/closure ceiling beyond. Above the ceiling, assign via
+        # the broadcast-DataFrame ladder (bit-identical to
+        # _ivf_assign_np, pinned by a test that lowers the ceiling) and
+        # keep the Arrow pair phase, which is cell-sized either way. No
+        # registered bench-scale query reaches this arm; it exists so the
+        # flat path cannot OOM the driver when called directly at scale.
+        assigned = _ivf_assign_expr(df, id_col, vec_col, cents, nassign)
+    else:
+        assigned = _ivf_assign_np(
+            df, id_col, vec_col, _collect_cent_rows(cents), nassign
+        )
+    return _pairs_from_assignment(assigned, threshold)
 
 
-# The numpy assignment tier ships the collected centroids in its Arrow
+# The Arrow assignment ships the collected centroids in its task
 # closure; above this count the flat path assigns via the broadcast-
 # DataFrame ladder instead (a correctness/robustness guard — the
 # adaptive near-dup switch routes to the 2-level assignment well below
@@ -2227,15 +1809,11 @@ _ASSIGN_COLLECT_CEILING = 1 << 16
 def _ivf_assign_expr(
     df: DataFrame, id_col: str, vec_col: str, cents: DataFrame, nassign: int
 ) -> DataFrame:
-    """The expr-tier flat assignment (broadcast centroid join + raw-csim
-    window), shared by the expr pair path and the numpy path's
-    above-ceiling fallback. Bit-identical to :func:`_ivf_assign_np` with
-    policy="raw" (pinned by the tier-equality tests)."""
-    cent_norm = _with_norm2(cents, "cent_id", "cent_vec", "cent_id").select(
-        "cent_id",
-        F.col("cent_id_vec").alias("cent_vec"),
-        F.col("cent_id_norm2").alias("cent_norm2"),
-    )
+    """The JVM flat assignment (broadcast centroid join + raw-csim
+    window) :func:`ivf_near_dup_pairs` uses above
+    ``_ASSIGN_COLLECT_CEILING`` centroids. Bit-identical to
+    :func:`_ivf_assign_np` with policy="raw"."""
+    cent_norm = _cent_norm_frame(cents)
     e = _with_norm2(df, id_col, vec_col, "vid")
     scored = e.join(F.broadcast(cent_norm)).select(
         "vid",
@@ -2264,7 +1842,6 @@ def ivf_near_dup_pairs_adaptive(
     target_cell: int = 256,
     mprobe: int = 2,
     knee: int = 1_000_000,
-    impl: str = "numpy",
 ) -> DataFrame:
     """Scale-adaptive IVF near-dup pairs (round 15 — VERDICT r14 item 4):
     ONE reachable entry point that routes the pair layer by corpus size.
@@ -2296,12 +1873,12 @@ def ivf_near_dup_pairs_adaptive(
         return ivf_near_dup_pairs(
             df, id_col, vec_col,
             threshold=threshold, n_centroids=n_centroids, nassign=nassign,
-            target_cell=target_cell, impl=impl,
+            target_cell=target_cell,
         )
     return ivf_near_dup_pairs_2level(
         df, id_col, vec_col,
         threshold=threshold, n_centroids=n_centroids, nassign=nassign,
-        target_cell=target_cell, mprobe=mprobe, impl=impl,
+        target_cell=target_cell, mprobe=mprobe,
     )
 
 
@@ -2314,8 +1891,6 @@ def ivf_near_dup_pairs_2level(
     nassign: int = 2,
     target_cell: int = 256,
     mprobe: int = 2,
-    checkpoint: bool = True,
-    impl: str = "numpy",
 ) -> DataFrame:
     """IVF near-dup pairs with a TWO-LEVEL (coarse-quantizer)
     assignment — the production path above ~10^6 vectors, where flat
@@ -2346,7 +1921,10 @@ def ivf_near_dup_pairs_2level(
 
     Scale shape: metas and the centroid->meta map are sqrt(C)- and
     C-sized broadcasts; the only corpus-sized shuffles are the two
-    per-vid top-k windows and the (skinny) pair dedup."""
+    per-vid top-k windows and the (skinny) pair dedup. The assignment
+    is a kept JVM path: this operator serves corpora above the 10^6
+    knee, where the centroid list is corpus-proportional, so it stays
+    in broadcast joins and never collects that list to the driver."""
     import math
 
     if n_centroids is None:
@@ -2413,105 +1991,35 @@ def ivf_near_dup_pairs_2level(
         .filter(F.col("rn") <= nassign)
         .select("vid", "vid_vec", "vid_norm2", "cent_id")
     )
-    if impl == "numpy":
-        # single consumer (the per-cell groupBy) — no self-join, so the
-        # checkpoint barrier that stopped double evaluation is moot
-        return _pairs_from_assignment(assigned, threshold, impl="numpy")
-    if checkpoint:
-        assigned = assigned.localCheckpoint()
-    return _pairs_from_assignment(assigned, threshold, impl="expr")
+    return _pairs_from_assignment(assigned, threshold)
 
 
-def _pairs_from_assignment(
-    assigned: DataFrame, threshold: float, impl: str = "numpy"
-) -> DataFrame:
-    """Shared pair phase over an (vid, vid_vec, vid_norm2, cent_id) cell
+def _pairs_from_assignment(assigned: DataFrame, threshold: float) -> DataFrame:
+    """Shared pair phase over a (vid, vid_vec, vid_norm2, cent_id) cell
     assignment — used by both the flat and the two-level IVF near-dup.
+    One ``applyInPandas`` per cell scores the cell's full candidate
+    triangle with the left-to-right float64 dim-fold
+    (:func:`_fold_dot_np`), emits only (id_a, id_b, cosine) survivors,
+    and dedups across shared cells. ONE vector-carrying exchange (the
+    groupBy); the dedup shuffles skinny rows.
 
-    ``impl="numpy"`` (default, round 14): one ``applyInPandas`` per cell
-    scores the cell's full candidate triangle with the bit-identical
-    left-to-right float64 dim-fold (:func:`_fold_dot_np`) and emits only
-    the skinny survivors — the expr tier's cell self-join evaluated the
-    same cosine as an interpreted zip_with/aggregate fold per candidate
-    row (~5-7 us/pair; HOF lambdas never enter codegen), which was the
-    entire cost of the operator at every measured scale. Shuffle bytes
-    also drop ~2x: ONE vector-carrying exchange (the groupBy) instead of
-    the self-join's two. Bit-equality with the expr tier is pinned by
-    tests on clean + edge rows (NULL/NaN/inf/wrong-length vectors); a
-    zero divisor raises like ANSI kills the expr plan.
-
-    ``impl="expr"``: cell self-join + JVM fold + skinny dedup (the
-    round-14 score-then-dedup order — see the inline comment)."""
-    if impl == "numpy":
-        return _pairs_from_assignment_np(assigned, threshold)
-    if impl != "expr":
-        raise ValueError(f"unknown impl {impl!r}")
-    a = assigned.select(
-        F.col("vid").alias("id_a"),
-        F.col("vid_vec").alias("vec_a"),
-        F.col("vid_norm2").alias("norm2_a"),
-        "cent_id",
-    )
-    b = assigned.select(
-        F.col("vid").alias("id_b"),
-        F.col("vid_vec").alias("vec_b"),
-        F.col("vid_norm2").alias("norm2_b"),
-        "cent_id",
-    )
-    cands = a.join(b, "cent_id").filter(F.col("id_a") < F.col("id_b"))
-    cos = _double_dot(F.col("vec_a"), F.col("vec_b")) / F.sqrt(
-        F.col("norm2_a") * F.col("norm2_b")
-    )
-    # Cosine + threshold BEFORE the dedup shuffle (round 14 — VERDICT
-    # r13 task 3, the diagnosed variance mechanism): with nassign cells
-    # per vector a pair co-occurs in up to nassign cells, so dedup is
-    # needed — but deduping FIRST shuffles every co-occurrence row WITH
-    # both embedded vectors (~1 KB/row; ~23M rows = ~20 GB shuffle at
-    # sf1, spill-bound and page-cache-sensitive — the measured 32-45s
-    # swing lived entirely in this exchange). Scoring first costs one
-    # extra dot product per duplicate co-occurrence (JVM codegen,
-    # map-side, cheap) and shrinks the dedup shuffle to the SURVIVING
-    # pairs as 3-column skinny rows (~600k rows = ~15 MB at sf1, a
-    # ~1000x exchange cut). Result-identical: cosine is deterministic
-    # per (id_a, id_b) whichever cell generated the row, so keeping any
-    # one duplicate yields the same output. Measured at sf1: pair phase
-    # 32-45s -> 14-16s; three fresh-process medians of the registered
-    # query 23.3/28.6/24.4s (spread 1.23x, was 28-67s = 2.3x across
-    # rounds 11-13).
-    return (
-        cands.withColumn("cosine", cos)
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-def _pairs_from_assignment_np(assigned: DataFrame, threshold: float) -> DataFrame:
-    """Arrow/numpy pair phase: group the assignment by cell, score each
-    cell's candidate triangle with the left-to-right float64 dim-fold
-    (bit-identical to the expr tier's ``_double_dot``-based cosine on
-    every pair both tiers define — see :func:`_pairs_from_assignment`),
-    emit only (id_a, id_b, cosine) survivors, dedup across shared cells.
-
-    Edge semantics mirror the expr tier's raw ``dot/sqrt(n2a*n2b)``:
+    Edge semantics are the raw ``dot/sqrt(n2a*n2b)`` the DuckDB oracle
+    computes:
 
     - NULL vec / NULL element => NULL dot => pair dropped (excluded from
       the matrices — such a row can never emit);
     - length-mismatched pair => NULL dot => dropped (rows are grouped by
       exact vector length; cross-length pairs are never generated, but
       two clean same-nonstandard-length rows in one cell DO pair);
-    - NaN / inf elements run the identical IEEE arithmetic; a NaN
-      cosine pair is KEPT — Spark and DuckDB both order NaN above every
-      double, so ``NaN >= threshold`` is true in BOTH engines (the expr
-      tier emits such pairs, and the oracle re-derives them). The one
-      representational seam: the Arrow return path cannot carry a NaN
-      distinct from NULL (repo-wide bridge limitation), so the kept
-      pair arrives with cosine NULL where the expr tier reads NaN —
-      the oracle canonicalizer maps both to NULL, so hashes agree; an
-      inf cosine passes through as plain IEEE;
-    - a zero divisor raises, as ANSI's DIVIDE_BY_ZERO kills the expr
-      plan (sqrt(NULL)=NULL never hits the divisor check, same as expr
-      where Divide returns NULL before testing the divisor).
+    - NaN / inf elements run plain IEEE arithmetic; a NaN cosine pair is
+      KEPT — Spark and DuckDB both order NaN above every double, so
+      ``NaN >= threshold`` is true in BOTH engines. The Arrow return
+      path cannot carry a NaN distinct from NULL (repo-wide bridge
+      limitation), so the kept pair arrives with cosine NULL — the
+      oracle canonicalizer maps both to NULL, so hashes agree; an inf
+      cosine passes through as plain IEEE;
+    - a zero divisor raises, as ANSI's DIVIDE_BY_ZERO would
+      (sqrt(NULL)=NULL never hits the divisor check).
 
     Memory is bounded: the dot block is computed in row-chunks of
     ~4M elements against the cell, so a pathological hot cell degrades
@@ -2563,8 +2071,7 @@ def _pairs_from_assignment_np(assigned: DataFrame, threshold: float) -> DataFram
                     if (denom == 0.0).any():
                         raise ArithmeticError(
                             "[DIVIDE_BY_ZERO] zero-norm vector in near-dup "
-                            "pair scoring (the expr tier raises identically "
-                            "under ANSI)"
+                            "pair scoring"
                         )
                     cosm = dots / denom
                 # Spark/DuckDB comparison semantics: NaN is GREATER than
@@ -2586,12 +2093,11 @@ def _pairs_from_assignment_np(assigned: DataFrame, threshold: float) -> DataFram
         )
 
     # JVM-side pre-filter: a NULL id, NULL vector or NULL ELEMENT row can
-    # never emit a pair in the expr tier (NULL id fails id_a < id_b; a
-    # NULL element poisons every zip_with fold into a NULL cosine, which
-    # the threshold filter drops) — and the Arrow hop would erase the
-    # NULL-element / NaN-element distinction (both arrive as np.nan), so
-    # the classification MUST happen before the Python boundary. NaN
-    # elements stay in: their IEEE arithmetic is tier-identical.
+    # never emit a pair (NULL id fails id_a < id_b; a NULL element makes
+    # every dot NULL, which the threshold drops) — and the Arrow hop
+    # would erase the NULL-element / NaN-element distinction (both
+    # arrive as np.nan), so the classification MUST happen before the
+    # Python boundary. NaN elements stay in: plain IEEE arithmetic.
     clean = assigned.filter(
         F.col("vid").isNotNull()
         & F.col("vid_vec").isNotNull()

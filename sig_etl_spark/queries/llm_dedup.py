@@ -1869,151 +1869,87 @@ FROM chunks GROUP BY source ORDER BY source
 """
 
 
-def _cdc_chunk_rows(docs: DataFrame, impl: str = "numpy") -> DataFrame:
+def _cdc_chunk_rows(docs: DataFrame) -> DataFrame:
     """Exploded ``(source, ch)`` chunk-hash rows — the per-document CDC
     pipeline (boundary positions from the rolling-window mask hash, then
-    one 60-bit md5 hash per chunk), shared by both tiers.
+    one 60-bit md5 hash per chunk).
 
-    ``impl="numpy"`` (default, round 14): one ``mapInArrow`` pass over
-    ``(source, toks)`` computes every window hash and chunk hash with
-    ``hashlib.md5`` over the identical UTF-8 bytes the JVM hashes —
-    tokens are still produced by the JVM ``tokens()`` expression (Java
-    and Python regex ``\\s`` classes differ on Unicode whitespace, so
-    tokenization must not cross the boundary), and the 60-bit value is
-    the top 15 hex digits of the same digest, so every emitted row is
-    bit-identical to the expr tier and the DuckDB oracle. Motivation
-    (guide §4.1/§4.2): the expr tier runs one interpreted
-    position-filter lambda + md5 PER TOKEN POSITION (HOF lambdas never
-    enter whole-stage codegen), and Catalyst additionally re-inlines the
-    whole ``split(trim(text))`` tokenization into every consumer — the
-    measured cost was ~20 us per window position vs ~0.6 us for the
-    hashlib loop. ``impl="expr"`` keeps the pure-JVM chain selectable
-    (the plan-shape and tier-equality tests use it)."""
-    from sig_etl_spark.functions.hashing import portable_hash60
+    One ``mapInArrow`` pass over ``(source, toks)`` computes every
+    window hash and chunk hash with ``hashlib.md5`` over the UTF-8
+    bytes of the space-joined tokens, the bytes DuckDB's
+    ``array_to_string`` hashes — tokens are still produced by the JVM
+    ``tokens()`` expression (Java and Python regex ``\\s`` classes
+    differ on Unicode whitespace, so tokenization must not cross the
+    boundary), and the 60-bit value is the top 15 hex digits of the
+    same digest, so every emitted row matches the DuckDB oracle. A
+    per-position JVM chain would run one interpreted lambda + md5 PER
+    TOKEN POSITION (~20 us per window position vs ~0.6 us for the
+    hashlib loop)."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
     from sig_etl_spark.llm.text_analysis import tokens
 
-    toks = tokens(F.col("text"))
-    if impl == "numpy":
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        base = docs.select("source", toks.alias("toks"))
-        out_schema = StructType(
-            [
-                StructField("source", base.schema["source"].dataType, True),
-                StructField("ch", LongType(), True),
-            ]
-        )
-        win, mask = _CDC_WINDOW, _CDC_MASK
-
-        def chunk(batches):
-            import hashlib
-
-            import pyarrow as pa
-
-            md5 = hashlib.md5
-            for batch in batches:
-                srcs = batch.column(0).to_pylist()
-                toks_col = batch.column(1).to_pylist()
-                o_src: list = []
-                o_ch: list = []
-                for s, tk in zip(srcs, toks_col):
-                    if not tk:
-                        continue  # NULL text or n == 0: no chunks
-                    n = len(tk)
-                    btoks = [t.encode("utf-8") for t in tk]
-                    joined = b" ".join(btoks)
-                    # byte offsets of token i in the joined string
-                    starts = []
-                    ends = []
-                    pos = 0
-                    for b in btoks:
-                        starts.append(pos)
-                        pos += len(b)
-                        ends.append(pos)
-                        pos += 1
-                    # boundary positions: 1-based 2..n-win+1 where the
-                    # window hash (top 60 md5 bits) is 0 mod mask; the
-                    # 60-bit value is digest[:8] >> 4 big-endian ==
-                    # int(hexdigest[:15], 16)
-                    cuts = [1]
-                    for i1 in range(2, n - win + 2):
-                        w = joined[starts[i1 - 1] : ends[i1 + win - 2]]
-                        h = int.from_bytes(md5(w).digest()[:8], "big") >> 4
-                        if h % mask == 0:
-                            cuts.append(i1)
-                    cuts.append(n + 1)
-                    for j in range(len(cuts) - 1):
-                        c = joined[starts[cuts[j] - 1] : ends[cuts[j + 1] - 2]]
-                        o_ch.append(
-                            int.from_bytes(md5(c).digest()[:8], "big") >> 4
-                        )
-                        o_src.append(s)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(o_src, type=batch.column(0).type),
-                        pa.array(o_ch, type=pa.int64()),
-                    ],
-                    names=["source", "ch"],
-                )
-
-        return base.mapInArrow(chunk, out_schema)
-    if impl != "expr":
-        raise ValueError(f"unknown impl {impl!r}")
-
-    base = docs.select("source", toks.alias("toks")).withColumn(
-        "n", F.size("toks")
+    base = docs.select("source", tokens(F.col("text")).alias("toks"))
+    out_schema = StructType(
+        [
+            StructField("source", base.schema["source"].dataType, True),
+            StructField("ch", LongType(), True),
+        ]
     )
-    win_hash = lambda i: F.pmod(  # noqa: E731
-        portable_hash60(
-            F.array_join(F.slice(F.col("toks"), i, _CDC_WINDOW), " ")
-        ),
-        F.lit(_CDC_MASK),
-    )
-    # Positions start at 2 (see the oracle comment: a boundary at 1
-    # would make an empty first chunk — an engine seam and a useless
-    # cut). Spark sequence(a, x) DESCENDS for x < a — guard to empty.
-    positions = F.when(
-        F.col("n") >= _CDC_WINDOW + 1,
-        F.expr(f"sequence(2, n - {_CDC_WINDOW - 1})"),
-    ).otherwise(F.array().cast("array<int>"))
-    g = base.withColumn(
-        "bpos", F.filter(positions, lambda i: win_hash(i) == 0)
-    ).filter(F.col("n") > 0)
-    w = g.withColumn(
-        "cuts",
-        F.concat(
-            F.array(F.lit(1)),
-            F.col("bpos").cast("array<int>"),
-            F.array((F.col("n") + 1).cast("int")),
-        ),
-    )
-    # 60-bit bigint chunk hash: the countDistinct shuffle carries 8-byte
-    # keys, not 32-char md5 strings (same portable bits both engines).
-    chunk_hashes = F.transform(
-        F.expr("sequence(1, size(cuts) - 1)"),
-        lambda j: F.conv(
-            F.substring(
-                F.md5(
-                    F.array_join(
-                        F.slice(
-                            F.col("toks"),
-                            F.element_at(F.col("cuts"), j),
-                            F.element_at(F.col("cuts"), j + F.lit(1))
-                            - F.element_at(F.col("cuts"), j),
-                        ),
-                        " ",
+    win, mask = _CDC_WINDOW, _CDC_MASK
+
+    def chunk(batches):
+        import hashlib
+
+        import pyarrow as pa
+
+        md5 = hashlib.md5
+        for batch in batches:
+            srcs = batch.column(0).to_pylist()
+            toks_col = batch.column(1).to_pylist()
+            o_src: list = []
+            o_ch: list = []
+            for s, tk in zip(srcs, toks_col):
+                if not tk:
+                    continue  # NULL text or n == 0: no chunks
+                n = len(tk)
+                btoks = [t.encode("utf-8") for t in tk]
+                joined = b" ".join(btoks)
+                # byte offsets of token i in the joined string
+                starts = []
+                ends = []
+                pos = 0
+                for b in btoks:
+                    starts.append(pos)
+                    pos += len(b)
+                    ends.append(pos)
+                    pos += 1
+                # boundary positions: 1-based 2..n-win+1 where the
+                # window hash (top 60 md5 bits) is 0 mod mask; the
+                # 60-bit value is digest[:8] >> 4 big-endian ==
+                # int(hexdigest[:15], 16)
+                cuts = [1]
+                for i1 in range(2, n - win + 2):
+                    w = joined[starts[i1 - 1] : ends[i1 + win - 2]]
+                    h = int.from_bytes(md5(w).digest()[:8], "big") >> 4
+                    if h % mask == 0:
+                        cuts.append(i1)
+                cuts.append(n + 1)
+                for j in range(len(cuts) - 1):
+                    c = joined[starts[cuts[j] - 1] : ends[cuts[j + 1] - 2]]
+                    o_ch.append(
+                        int.from_bytes(md5(c).digest()[:8], "big") >> 4
                     )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint"),
-    )
-    return w.filter(F.size("cuts") > 1).select(
-        "source", F.explode(chunk_hashes).alias("ch")
-    )
+                    o_src.append(s)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(o_src, type=batch.column(0).type),
+                    pa.array(o_ch, type=pa.int64()),
+                ],
+                names=["source", "ch"],
+            )
+
+    return base.mapInArrow(chunk, out_schema)
 
 
 @register(
@@ -2021,7 +1957,7 @@ def _cdc_chunk_rows(docs: DataFrame, impl: str = "numpy") -> DataFrame:
     oracle=_CDC_ORACLE,
     doc="content-defined chunking (rolling-window hash mask boundaries,"
         " insertion-stable) + chunk-hash dedup per source — the storage-"
-        "dedup primitive, chunked in-row, one explode + one combinable"
+        "dedup primitive, chunked in one Arrow pass + one combinable"
         " aggregate; fully oracle-checked",
 )
 def llm_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

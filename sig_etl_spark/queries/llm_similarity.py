@@ -40,8 +40,8 @@ def _norm_cte(src: str, id_col: str) -> str:
 
 
 def _bucket_expr(planes: list[list[float]]) -> str:
-    """Sign-pattern bucket over inlined plane literals (matches
-    similarity.bucket_signature exactly)."""
+    """Sign-pattern bucket over inlined plane literals (matches the
+    bucket bits of similarity._with_buckets_np exactly)."""
     bits = []
     for plane in planes:
         lit = "[" + ", ".join(repr(v) for v in plane) + "]"
@@ -1088,11 +1088,9 @@ def llm_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             corpus, "vec_id", "embedding", _N_CENTROIDS, "cent_id", "cent_vec"
         )
     )
-    cb_rows = S._pq_codebook(
-        corpus, "vec_id", "embedding", _PQ_KSUB,
-        m_subs=_PQ_M, dsub=_DIM // _PQ_M,
-    ).collect()
-    cb_entries = list(cb_rows[0]["cbook"]) if cb_rows else []
+    cb_entries = S._pq_codebook_entries(
+        corpus, "vec_id", "embedding", _PQ_KSUB, _PQ_M, _DIM // _PQ_M
+    )
     lsh = lambda b, p: S.lsh_topk(  # noqa: E731
         queries, corpus, "vec_id", "embedding",
         k=_K, dim=_DIM, bands=b, planes_per_band=p, seed=_SEED,

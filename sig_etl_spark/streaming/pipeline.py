@@ -917,17 +917,15 @@ def stream_interval_union(events: DataFrame) -> DataFrame:
 #
 # Stream-shape notes:
 # - streaming frames cannot run rank windows, so the per-row
-#   nearest-cell pick is expressed as pure column algebra over the
-#   INLINED centroid literals: an array of (negated cosine, cent_id)
-#   structs, array_sort (field-order comparison = sim DESC, cent_id ASC
-#   — the exact batch tiebreak), slice(n_cells), posexplode. Fully
-#   codegen'd, stateless, append-mode, trivially checkpoint-resumable.
-# - the quantizer rides the PLAN (centroid literals), the streaming
-#   analogue of the batch broadcast; collect_ivf_index bounds it at
-#   n_centroids x dim (the same ~1 MB bound the k-means trainer
-#   documents) and collects cent_norm2 from the ENGINE's own double
-#   fold, so streamed cosines are bit-identical to the batch
-#   assignment's.
+#   nearest-cell pick is one Arrow-batched map that scores every
+#   centroid and keeps the top n_cells by (sim DESC, cent_id ASC) — the
+#   exact batch tiebreak. Stateless, append-mode, trivially
+#   checkpoint-resumable.
+# - the quantizer rides the task closure, the streaming analogue of
+#   the batch collect; collect_ivf_index bounds it at n_centroids x dim
+#   (the same ~1 MB bound the k-means trainer documents) and collects
+#   cent_norm2 from the ENGINE's own double fold, so streamed cosines
+#   are bit-identical to the batch assignment's.
 # ---------------------------------------------------------------------------
 
 EMBEDDING_SCHEMA = StructType(
@@ -1020,8 +1018,7 @@ def stream_quality_gate(
     streaming operator): per-record gate-v2 signals computed STATELESSLY
     on arriving records — ttr and duplicate-3-gram ratio are pure column
     algebra; bigram-model coverage scores against the INLINED bounded
-    model (the literal-riding pattern stream_ivf_assign uses for
-    centroids — streams cannot re-train a model, so production pipelines
+    model (streams cannot re-train a model, so production pipelines
     score live data against a model trained on a static reference
     corpus). Append-mode, stateless, trivially checkpoint-resumable;
     defaults mirror llm_quality_gate_v2's thresholds (pinned by test).
@@ -1272,160 +1269,97 @@ def stream_ivf_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_cells: int = 1,
-    scorer: str = "numpy",
 ) -> DataFrame:
     """(vec_id, cent_id, cell_rank, cosine) per arriving vector — its
     ``n_cells`` nearest cells in the existing index. Sink the output to
     the inverted-file store and the batch probe path serves the merged
     index (the contract llm_knn_incremental's batch-equality test pins).
 
-    ``scorer='numpy'`` (default, round 13): one Arrow-batched mapInPandas
-    scores ALL centroids per batch with float64 tensor algebra —
-    BIT-IDENTICAL to the expression tier because every step is the same
+    One Arrow-batched mapInPandas scores ALL centroids per batch with
+    float64 tensor algebra — bit-identical to the batch assignment
+    (similarity._nearest_cells_np) because every step is the same
     IEEE-double operation sequence: elementwise float->double cast and
-    multiply, then np.cumsum along the vector axis, whose last element
-    IS the strict left-to-right fold _double_dot performs (probed
-    bitwise, and pinned by the tier-equality test).
+    multiply, accumulated left-to-right along the vector axis, the
+    strict fold _double_dot performs.
 
-    Missing-data policy (BOTH tiers, round 14): a NULL vector, a
-    wrong-length vector, or a vector containing ANY NULL or NaN element
+    Missing-data policy: a NULL vector, a wrong-length vector, a
+    zero-norm vector, or a vector containing ANY NULL or NaN element
     yields cosine NULL for every cell, ranked last (emitted cells = the
-    k lowest cent_ids). The expr tier normalizes a NaN sim to NULL via
-    nanvl because the Arrow path cannot distinguish a NULL element from
-    NaN — NULL is the one policy both tiers can share bit-identically. The expression tier
-    inlines 2x len(index) interpreted array-fold lambdas PER ROW, which
-    capped the r13 throughput floor at ~224 rows_in/s regardless of
-    scale; the numpy tier amortizes the same arithmetic across the
-    batch. ``scorer='expr'`` keeps the literal-expression plan as the
-    reference arm.
+    k lowest cent_ids) — the NULL-for-undefined rule of the batch
+    cosine (similarity._cosine_expr). The Arrow path cannot distinguish
+    a NULL element from NaN, so NULL is the one policy it can state.
     """
-    from sig_etl_spark.llm.dedup import _double_dot
+    import numpy as np
 
-    if scorer == "numpy":
-        import numpy as np
+    # Pre-sort by cent_id so a STABLE argsort over the sort key
+    # breaks exact ties by ascending cent_id — the batch window's
+    # (cosine DESC, cent_id) order.
+    idx_sorted = sorted(index, key=lambda t: int(t[0]))
+    cids = np.array([int(c) for c, _, _ in idx_sorted], dtype=np.int64)
+    cents = np.array([v for _, v, _ in idx_sorted], dtype=np.float64)
+    cnorm2 = np.array([float(n) for _, _, n in idx_sorted], dtype=np.float64)
+    k = min(n_cells, len(idx_sorted))
 
-        # Pre-sort by cent_id so a STABLE argsort over the sort key
-        # breaks exact ties by ascending cent_id — the expression tier's
-        # array_sort over (sortkey, cent_id) struct ordering.
-        idx_sorted = sorted(index, key=lambda t: int(t[0]))
-        cids = np.array([int(c) for c, _, _ in idx_sorted], dtype=np.int64)
-        cents = np.array([v for _, v, _ in idx_sorted], dtype=np.float64)
-        cnorm2 = np.array([float(n) for _, _, n in idx_sorted], dtype=np.float64)
-        k = min(n_cells, len(idx_sorted))
+    dim = cents.shape[1] if len(cents) else 0
 
-        dim = cents.shape[1] if len(cents) else 0
+    def _assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            for lo in range(0, len(pdf), 2048):
+                chunk = pdf.iloc[lo : lo + 2048]
+                ids = chunk[id_col].to_numpy()
+                n = len(chunk)
+                # NULL-embedding policy: a NULL vector, a wrong-length
+                # vector (no dot defined) or a vector containing a
+                # null/NaN element all yield NULL sim for EVERY cell
+                # -> sortkey +inf everywhere -> the emitted cells are
+                # the k lowest cent_ids with cosine NULL.
+                v = np.zeros((n, dim), dtype=np.float64)
+                bad = np.zeros(n, dtype=bool)
+                for i, x in enumerate(chunk[vec_col]):
+                    if x is None:
+                        bad[i] = True
+                        continue
+                    arr = np.asarray(x, dtype=np.float64)
+                    if arr.ndim != 1 or len(arr) != dim or np.isnan(arr).any():
+                        bad[i] = True
+                    else:
+                        v[i] = arr
+                # In-place dim-axis accumulation: per (row, cent) the
+                # additions run d=0,1,2,... — the SAME strict
+                # left-to-right IEEE fold as _double_dot / cumsum's
+                # last element, with O(n x C) memory instead of the
+                # O(n x C x D) broadcast temporary (3.2 GB per chunk
+                # at C=256, D=768).
+                dots = np.zeros((n, len(cents)), dtype=np.float64)
+                for d in range(dim):
+                    dots += v[:, d, None] * cents[None, :, d]
+                vnorm2 = np.cumsum(v * v, axis=1)[:, -1] if dim else np.zeros(n)
+                denom = np.sqrt(vnorm2[:, None] * cnorm2[None, :])
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    sim = dots / denom
+                # try_divide: zero norm -> NULL sim, ranked last
+                null_sim = (denom == 0.0) | bad[:, None]
+                sortkey = np.where(null_sim, np.inf, -sim)
+                order = np.argsort(sortkey, axis=1, kind="stable")[:, :k]
+                rowsel = np.arange(n)[:, None]
+                cos = sim[rowsel, order].reshape(-1)
+                isnull = null_sim[rowsel, order].reshape(-1)
+                yield pd.DataFrame(
+                    {
+                        "vec_id": np.repeat(ids, k),
+                        "cent_id": cids[order].reshape(-1),
+                        "cell_rank": np.tile(
+                            np.arange(1, k + 1, dtype=np.int64), n
+                        ),
+                        "cosine": pd.Series(cos).mask(isnull),
+                    }
+                )
 
-        def _assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                for lo in range(0, len(pdf), 2048):
-                    chunk = pdf.iloc[lo : lo + 2048]
-                    ids = chunk[id_col].to_numpy()
-                    n = len(chunk)
-                    # NULL-embedding policy, matching the expr tier: a
-                    # NULL vector, a wrong-length vector (zip_with pads
-                    # with nulls -> NULL dot) or a vector containing a
-                    # null/NaN element all yield NULL sim for EVERY cell
-                    # -> sortkey +inf everywhere -> the emitted cells are
-                    # the k lowest cent_ids with cosine NULL.
-                    v = np.zeros((n, dim), dtype=np.float64)
-                    bad = np.zeros(n, dtype=bool)
-                    for i, x in enumerate(chunk[vec_col]):
-                        if x is None:
-                            bad[i] = True
-                            continue
-                        arr = np.asarray(x, dtype=np.float64)
-                        if arr.ndim != 1 or len(arr) != dim or np.isnan(arr).any():
-                            bad[i] = True
-                        else:
-                            v[i] = arr
-                    # In-place dim-axis accumulation: per (row, cent) the
-                    # additions run d=0,1,2,... — the SAME strict
-                    # left-to-right IEEE fold as _double_dot / cumsum's
-                    # last element, with O(n x C) memory instead of the
-                    # O(n x C x D) broadcast temporary (3.2 GB per chunk
-                    # at C=256, D=768 — the scale this tier exists for).
-                    dots = np.zeros((n, len(cents)), dtype=np.float64)
-                    for d in range(dim):
-                        dots += v[:, d, None] * cents[None, :, d]
-                    vnorm2 = np.cumsum(v * v, axis=1)[:, -1] if dim else np.zeros(n)
-                    denom = np.sqrt(vnorm2[:, None] * cnorm2[None, :])
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        sim = dots / denom
-                    # try_divide: zero norm -> NULL sim, ranked last
-                    null_sim = (denom == 0.0) | bad[:, None]
-                    sortkey = np.where(null_sim, np.inf, -sim)
-                    order = np.argsort(sortkey, axis=1, kind="stable")[:, :k]
-                    rowsel = np.arange(n)[:, None]
-                    cos = sim[rowsel, order].reshape(-1)
-                    isnull = null_sim[rowsel, order].reshape(-1)
-                    yield pd.DataFrame(
-                        {
-                            "vec_id": np.repeat(ids, k),
-                            "cent_id": cids[order].reshape(-1),
-                            "cell_rank": np.tile(
-                                np.arange(1, k + 1, dtype=np.int64), n
-                            ),
-                            "cosine": pd.Series(cos).mask(isnull),
-                        }
-                    )
-
-        return new_vecs.select(F.col(id_col).alias(id_col), vec_col).mapInPandas(
-            _assign,
-            "vec_id bigint, cent_id bigint, cell_rank int, cosine double",
-        )
-
-    if scorer != "expr":
-        raise ValueError(f"unknown scorer {scorer!r}")
-
-    vec = F.col(vec_col)
-    norm2 = _double_dot(vec, vec)
-
-    def _negsim(cvec, cnorm2):
-        # try_divide mirrors the batch _cosine: zero norms -> NULL sim in
-        # both ANSI modes, never DIVIDE_BY_ZERO. nanvl normalizes a NaN
-        # sim (a NaN vector element poisons every dot) to NULL so both
-        # tiers implement ONE policy — any NULL/NaN element => NULL
-        # cosine ranked last. The Arrow path cannot distinguish a NULL
-        # element from NaN (both arrive as np.nan), so NULL is the only
-        # policy the numpy tier can share.
-        return F.nanvl(
-            -F.try_divide(
-                _double_dot(vec, F.array(*[F.lit(float(x)) for x in cvec])),
-                F.sqrt(norm2 * F.lit(cnorm2)),
-            ),
-            F.lit(None).cast("double"),
-        )
-
-    # Sort key coalesces NULL sims (zero-norm vector or centroid: Spark
-    # double division by zero yields NULL) to +inf so they rank LAST —
-    # the batch _nearest_cells orders _csim DESC, which is NULLS LAST.
-    # negsim rides along as a third struct field (never reached by the
-    # comparison: sortkey+cent_id is unique) so the emitted cosine stays
-    # NULL, bit-identical to the batch assignment's.
-    scored = F.array(
-        *[
-            F.struct(
-                F.coalesce(_negsim(cvec, cnorm2), F.lit(float("inf"))).alias(
-                    "sortkey"
-                ),
-                F.lit(int(cid)).cast("bigint").alias("cent_id"),
-                _negsim(cvec, cnorm2).alias("negsim"),
-            )
-            for cid, cvec, cnorm2 in index
-        ]
-    )
-    top = F.slice(F.array_sort(scored), 1, min(n_cells, len(index)))
-    return (
-        new_vecs.select(F.col(id_col).alias("vec_id"), top.alias("_cells"))
-        .select("vec_id", F.posexplode("_cells").alias("_pos", "_cell"))
-        .select(
-            "vec_id",
-            F.col("_cell.cent_id").alias("cent_id"),
-            (F.col("_pos") + 1).alias("cell_rank"),
-            (-F.col("_cell.negsim")).alias("cosine"),
-        )
+    return new_vecs.select(F.col(id_col).alias(id_col), vec_col).mapInPandas(
+        _assign,
+        "vec_id bigint, cent_id bigint, cell_rank int, cosine double",
     )
 
 

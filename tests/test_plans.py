@@ -106,22 +106,19 @@ def test_ivf_centroids_take_ordered_not_global_sort(spark, sf_dir):
     limit would shuffle the whole corpus just to pick K rows."""
     from pyspark.sql import functions as F
 
-    from sig_etl_spark.llm.similarity import ivf_topk
+    from sig_etl_spark.llm.similarity import _hash_sample
     from sig_etl_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
     c = emb.filter(F.col("vec_id") >= 10)
     import contextlib
     import io
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        # expr tier: the numpy tier (default) COLLECTS the same
-        # takeOrdered sample eagerly at build time, so its plan is not
-        # part of the returned DataFrame's explain — the guard pins the
-        # ladder both tiers share.
-        ivf_topk(q, c, "vec_id", "embedding", impl="expr").explain(
+        # the sample itself: ivf_topk collects it at build time, so no
+        # query frame's explain can show it
+        _hash_sample(c, "vec_id", "embedding", 16, "cent_id", "cent_vec").explain(
             mode="formatted"
         )
     plan = buf.getvalue()
@@ -323,47 +320,10 @@ def test_q5_join_tree_plan_shape(spark, sf_dir):
 
 
 def test_ivf_near_dup_plan_shape(spark, sf_dir):
-    """Round 14, numpy production tier: NO join at all — assignment is
-    one MapInPandas over the corpus scan (centroids ride the task
-    closure), the pair phase is one FlatMapGroupsInPandas behind the
-    single cent_id exchange, and the only other exchange is the skinny
-    pair dedup. The expr tier (impl='expr', still selectable) keeps its
-    original guards: centroid broadcast into the assignment join, both
-    self-join sides fed from the checkpoint scan."""
-    import contextlib
-    import io
-
-    from sig_etl_spark.llm import similarity as S
-    from sig_etl_spark.queries import llm_similarity as LS
-    from sig_etl_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    df = S.ivf_near_dup_pairs(
-        emb, "vec_id", "embedding",
-        threshold=0.3, nassign=LS._ND_ASSIGN, target_cell=LS._ND_CELL,
-        checkpoint=False, impl="expr",
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
-    full = buf.getvalue()
-    assert _count_op(full, "CartesianProduct") == 0
-    assert _count_op(full, "BroadcastNestedLoopJoin") >= 1  # vec x centroid
-    assert "PushedFilters" in full
-    # expr production variant: self-join sides are checkpoint scans
-    exprq = S.ivf_near_dup_pairs(
-        emb, "vec_id", "embedding",
-        threshold=0.3, nassign=LS._ND_ASSIGN, target_cell=LS._ND_CELL,
-        impl="expr",
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        exprq.explain(mode="formatted")
-    eplan = buf.getvalue()
-    assert _count_op(eplan, "Scan ExistingRDD") >= 2
-    # numpy production plan (the registered query): no joins, no
-    # checkpoint scans — one Python assignment pass, one grouped-map
-    # pair pass, and only the cent_id + dedup exchanges
+    """NO join at all — assignment is one MapInArrow over the corpus
+    scan (centroids ride the task closure), the pair phase is one
+    FlatMapGroupsInPandas behind the single cent_id exchange, and the
+    only other exchange is the skinny pair dedup."""
     plan = _plan(spark, sf_dir, "llm_embedding_near_dup_ivf")
     assert _count_op(plan, "CartesianProduct") == 0
     assert _count_op(plan, "BroadcastNestedLoopJoin") == 0
@@ -675,28 +635,12 @@ def test_session2_final_batch_plan_shapes(spark, sf_dir):
     assert _count_op(plan, "BroadcastNestedLoopJoin") == 0
     assert _count_op(plan, "CartesianProduct") == 0
 
-    # CDC chunking, round-14 numpy tier (the registered query): the
-    # whole per-document window-hash + chunk-hash pipeline is ONE
-    # MapInArrow pass — no Generate (explode) and none of the expr
-    # tier's interpreted HOF folds reach the plan at all.
+    # CDC chunking: the whole per-document window-hash + chunk-hash
+    # pipeline is ONE MapInArrow pass — no Generate (explode) and no
+    # interpreted per-position HOF folds.
     plan = _plan(spark, sf_dir, "llm_cdc_chunk_dedup")
     assert _count_op(plan, "MapInArrow") == 1, plan
     assert _count_op(plan, "Generate") == 0, plan
-    # The expr tier stays selectable and keeps its in-row guard: its
-    # ONLY Generate is the final chunk-hash explode — token/position
-    # work never explodes.
-    import contextlib
-    import io
-
-    from sig_etl_spark.queries.llm_dedup import _cdc_chunk_rows
-    from sig_etl_spark.tables import load_table
-
-    edf = _cdc_chunk_rows(load_table(spark, sf_dir, "documents"), impl="expr")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        edf.explain(mode="formatted")
-    eplan = buf.getvalue()
-    assert _count_op(eplan, "Generate") == 1, "expr chunking leaked an explode"
 
     # Interval union: every window is user-keyed.
     plan = _plan(spark, sf_dir, "events_interval_union")
@@ -707,32 +651,6 @@ def test_session2_final_batch_plan_shapes(spark, sf_dir):
     # shuffle key; no single-partition exchange anywhere.
     plan = _plan(spark, sf_dir, "events_new_vs_returning")
     assert "SinglePartition" not in plan
-
-
-def test_registered_clusters_query_uses_checkpointed_ivf(spark, sf_dir, monkeypatch):
-    """VERDICT r7 task 3: the IVF-checkpoint fix must engage in the
-    REGISTERED llm_embedding_dedup_clusters query, not only in the A/B
-    harness. The builder's final plan starts from CC's own checkpoints
-    (which hide the IVF subtree), so the guard is at the call layer: the
-    builder must invoke ivf_near_dup_pairs with checkpoint LEFT AT ITS
-    TRUE DEFAULT — never checkpoint=False (which exists only for plan
-    introspection). Re-measured r8: isolated median-of-3 at sf0.1 is
-    ~10.5s, matching BASELINE's post-fix 10.11s claim; the 16.8s driver
-    row was bench-sequence warm-up noise (first-run 25s -> warm 8-10s)."""
-    from sig_etl_spark.llm import similarity as S
-    from sig_etl_spark.queries import llm_similarity as LS
-
-    calls: list[bool] = []
-    orig = S.ivf_near_dup_pairs
-
-    def spy(*a, **k):
-        calls.append(k.get("checkpoint", True))
-        return orig(*a, **k)
-
-    monkeypatch.setattr(S, "ivf_near_dup_pairs", spy)
-    assert LS.llm_embedding_dedup_clusters.__module__ == LS.__name__
-    QUERIES["llm_embedding_dedup_clusters"].builder(spark, sf_dir)
-    assert calls == [True], calls
 
 
 def test_incremental_ivf_delta_assignment_touches_only_delta(spark, sf_dir):

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sig_etl_spark.llm import similarity as S
@@ -437,8 +438,9 @@ def test_incremental_equals_full_scan_with_static_centroids(spark, sf_dir):
         checkpoint_static=False,
     )
     cents = S._hash_sample(static, "vec_id", "embedding", 8, "cent_id", "cent_vec")
-    full = S._ivf_with_centroids(
-        q, static.unionByName(delta), cents, "vec_id", "embedding", k=5, nprobe=3
+    full = S._ivf_with_cent_rows(
+        q, static.unionByName(delta), S._collect_cent_rows(cents),
+        "vec_id", "embedding", k=5, nprobe=3,
     )
     a = sorted(map(tuple, inc.collect()))
     b = sorted(map(tuple, full.collect()))
@@ -562,8 +564,9 @@ def test_incremental_kmeans_equals_full_trained_scan(spark, sf_dir):
         checkpoint_static=False,
     )
     cents = S.kmeans_cents_frame(static, "vec_id", "embedding", n_centroids=8)
-    full = S._ivf_with_centroids(
-        q, static.unionByName(delta), cents, "vec_id", "embedding", k=5, nprobe=3
+    full = S._ivf_with_cent_rows(
+        q, static.unionByName(delta), S._collect_cent_rows(cents),
+        "vec_id", "embedding", k=5, nprobe=3,
     )
     a = sorted(map(tuple, inc.collect()))
     b = sorted(map(tuple, full.collect()))
@@ -614,80 +617,167 @@ def test_incremental_kmeans_deletes_and_determinism(spark, sf_dir):
     assert all(sorted(v) == [1, 2, 3, 4, 5] for v in by_q.values())
 
 
-def _pq_tier_frames(spark, sf_dir, with_cell):
+
+
+# ---------------------------------------------------------------------------
+# References for the single implementation of each ANN operator: the
+# DuckDB oracle for every registered configuration, and golden rows or
+# value hashes for the configurations and edge frames no oracle runs.
+# Goldens were captured at commit 2766b98, where each was also checked
+# equal between two independent implementations of the operator.
+# ---------------------------------------------------------------------------
+
+_ANN_ORACLE_NAMES = [
+    "llm_knn_bruteforce",
+    "llm_knn_lsh",
+    "llm_knn_ivf",
+    "llm_knn_incremental",
+    "llm_knn_incremental_deletes",
+    "llm_knn_incremental_kmeans",
+    "llm_knn_int8",
+    "llm_knn_pq",
+    "llm_knn_pq_rerank",
+    "llm_knn_ivfpq",
+    "llm_knn_ivf_kmeans",
+    "llm_embedding_near_dup_ivf",
+    "llm_embedding_near_dup_ivf2",
+    "llm_cdc_chunk_dedup",
+    "llm_ann_recall",
+]
+
+
+@pytest.fixture(scope="module")
+def oracle_con(sf_dir):
+    from tools.verify_local import oracle_connection
+
+    con = oracle_connection(sf_dir)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", _ANN_ORACLE_NAMES)
+def test_ann_family_matches_oracle(spark, sf_dir, oracle_con, name):
+    """Every registered ANN, near-dup and CDC query matches its DuckDB
+    oracle: row count, column names and the order-insensitive value
+    hash (the same comparison tools/verify_local.py runs)."""
+    from sig_etl_spark.queries import QUERIES
+    from tools.verify_local import check
+
+    assert QUERIES[name].oracle is not None, name
+    assert check(spark, oracle_con, sf_dir, name) == []
+
+
+def test_no_implementation_tier_option_in_library():
+    """Each operator has one implementation: no function under
+    sig_etl_spark/ takes an ``impl`` parameter, and no string literal
+    "expr" names a second tier."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(S.__file__).resolve().parents[1]
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                names = [x.arg for x in a.posonlyargs + a.args + a.kwonlyargs]
+                if "impl" in names:
+                    found.append(f"{path.name}:{node.lineno} def {node.name}(impl=...)")
+            elif isinstance(node, ast.Constant) and node.value == "expr":
+                found.append(f'{path.name}:{node.lineno} "expr"')
+    assert not found, found
+
+
+# Value hashes (tools/verify_local.frame_hash) of fixture configurations
+# no registered query runs, per fixture set.
+_FIXTURE_HASHES = {
+    "sf0.001": {
+        "near_dup_flat_cell64": "8c9565c6a2e127c473d7a21bf8ad9981",
+        "near_dup_2level_cell64": "500672268bae278b58244582d2e4afbb",
+        "ivf_nprobe12": "2ba0a5b9daa279b18fc519937ec203ee",
+        "incremental_deletes11_c8": "4acdf5b5bc89db0e0f5890af489da33e",
+        "ivf_kmeans_c8": "bf09d3f0208289a946534187a075557d",
+        "lsh_b8p3": "c1d43c0da8f49cd35e1c3cde959c0610",
+        "pq_encode_cell8": "e3192ccf18d97dce173c7113af38def9",
+        # str() rows, md5 of the sorted lines: keeps NaN apart from NULL
+        "pq_luts": "bff546df2768f01a13f82f89e97d0ffd",
+    },
+}
+
+
+def _fixture_hash(sf_dir, key):
+    import os
+
+    pinned = _FIXTURE_HASHES.get(os.path.basename(os.path.normpath(sf_dir)))
+    if pinned is None:
+        pytest.skip(f"no pinned hash for fixture set {sf_dir}")
+    return pinned[key]
+
+
+def _frame_hash(df):
+    """tools.verify_local.frame_hash of a Spark frame (array cells as
+    lists)."""
+    import pandas as pd
+
+    from tools.verify_local import frame_hash
+
+    return frame_hash(
+        pd.DataFrame(
+            [r.asDict(recursive=True) for r in df.collect()], columns=df.columns
+        )
+    )
+
+
+def _repr_hash(df):
+    """md5 of the sorted str() rows — unlike frame_hash it tells a NaN
+    cell from a NULL one."""
+    import hashlib
+
+    return hashlib.md5(
+        "\n".join(sorted(str(tuple(r)) for r in df.collect())).encode()
+    ).hexdigest()
+
+
+def _fixture_split(spark, sf_dir):
     from sig_etl_spark.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    cents_arr = None
-    cell_cols, cell_bcast = [], None
-    if with_cell:
-        cents = S._hash_sample(
-            corpus, "vec_id", "embedding", 8, "cent_id", "cent_vec"
-        ).select(
-            "cent_id", "cent_vec",
-            S._double_dot(F.col("cent_vec"), F.col("cent_vec")).alias("cent_norm2"),
-        )
-        cents_arr = cents.groupBy().agg(
-            F.array_sort(
-                F.collect_list(F.struct("cent_id", "cent_vec", "cent_norm2"))
-            ).alias("cents")
-        )
-        vnorm = S._double_dot(F.col("cvec"), F.col("cvec"))
-        cell_cols = [
-            F.array_min(
-                F.transform(
-                    "cents",
-                    lambda ct: F.struct(
-                        (
-                            -S._double_dot(F.col("cvec"), ct["cent_vec"])
-                            / F.sqrt(vnorm * ct["cent_norm2"])
-                        ).alias("negsim"),
-                        ct["cent_id"].alias("cent_id"),
-                    ),
-                )
-            )["cent_id"].alias("cent_id")
-        ]
-        cell_bcast = cents_arr
-    np_df = S._pq_encode_np(
+    return emb, emb.filter(F.col("vec_id") < 10), emb.filter(F.col("vec_id") >= 10)
+
+
+def _cents_arr(corpus, n):
+    """(cents) one-row array of the n hash-sampled centroids with their
+    norms — the coarse quantizer ivfpq_topk hands the encoder."""
+    cents = S._hash_sample(
+        corpus, "vec_id", "embedding", n, "cent_id", "cent_vec"
+    ).select(
+        "cent_id", "cent_vec",
+        S._double_dot(F.col("cent_vec"), F.col("cent_vec")).alias("cent_norm2"),
+    )
+    return cents, cents.groupBy().agg(
+        F.array_sort(
+            F.collect_list(F.struct("cent_id", "cent_vec", "cent_norm2"))
+        ).alias("cents")
+    )
+
+
+def test_pq_encode_fixture_codes_pinned(spark, sf_dir):
+    """Codes, reconstructed norms and the coarse cell of every fixture
+    corpus row under an 8-cell quantizer (llm_knn_ivfpq runs 16 cells)."""
+    _, _, corpus = _fixture_split(spark, sf_dir)
+    _, cents_arr = _cents_arr(corpus, 8)
+    df = S._pq_encode_np(
         corpus, "vec_id", "embedding", 8, 16, 64, cents_arr=cents_arr
     )
-    ex_df = S._pq_encode(
-        corpus, "vec_id", "embedding", 8, 16, 64,
-        extra_cols=cell_cols, extra_bcast=cell_bcast,
-    )
-    return np_df, ex_df
-
-
-def test_pq_encode_numpy_tier_bitwise_equals_expr(spark, sf_dir):
-    """The Arrow/numpy encode tier must reproduce the expr tier's codes,
-    reconstructed norms, and coarse-cell assignment BIT-EXACTLY on clean
-    vectors — same float32 L2 arithmetic, same float64 accumulation
-    order, same (d, j) / (negsim, cent_id) tiebreaks. This is what lets
-    the registered PQ queries switch tiers without a debut slot: the
-    DuckDB oracle mirrors the expr fold, and this test pins numpy == expr."""
-    np_df, ex_df = _pq_tier_frames(spark, sf_dir, with_cell=True)
-    # same names/types; the numpy tier is deliberately all-nullable (its
-    # bad-row policy emits NULLs where the expr tier's types are non-null)
-    assert [(f.name, f.dataType) for f in np_df.schema.fields] == [
-        (f.name, f.dataType) for f in ex_df.schema.fields
-    ]
-    a = {r["corpus_id"]: r for r in (r.asDict() for r in np_df.collect())}
-    b = {r["corpus_id"]: r for r in (r.asDict() for r in ex_df.collect())}
-    assert set(a) == set(b) and a
-    for cid, ra in a.items():
-        rb = b[cid]
-        assert ra["codes"] == rb["codes"], cid
-        assert ra["recon_norm2"] == rb["recon_norm2"], cid  # bitwise
-        assert ra["cent_id"] == rb["cent_id"], cid
+    assert _frame_hash(df) == _fixture_hash(sf_dir, "pq_encode_cell8")
 
 
 def test_pq_encode_numpy_tier_zero_vector_and_bad_rows(spark):
-    """Tier policy on edge rows: a ZERO vector (all-NaN negsims) must
-    pick the same cell in both tiers (Spark's equal-NaN ordering ties to
-    the min cent_id; the numpy tier's NaN->inf mapping reproduces it).
-    A NULL, wrong-length, or non-finite vector gets NULL
-    codes/recon/cent_id from the numpy tier by documented policy."""
+    """Encoder policy on edge rows: a ZERO vector (all-NaN negsims)
+    picks the min cent_id (Spark's equal-NaN ordering; the NaN->inf
+    mapping reproduces it). A NULL, wrong-length, or non-finite vector
+    gets NULL codes/recon/cent_id by documented policy. Clean rows keep
+    their pinned codes."""
     import math
 
     dim = 64
@@ -703,25 +793,11 @@ def test_pq_encode_numpy_tier_zero_vector_and_bad_rows(spark):
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     corpus = df.filter(F.col("vec_id").isNotNull())
-
-    cents = S._hash_sample(
-        corpus.filter(F.col("vec_id") < 100), "vec_id", "embedding", 4,
-        "cent_id", "cent_vec",
-    ).select(
-        "cent_id", "cent_vec",
-        S._double_dot(F.col("cent_vec"), F.col("cent_vec")).alias("cent_norm2"),
+    cents, cents_arr = _cents_arr(corpus.filter(F.col("vec_id") < 100), 4)
+    enc = S._pq_encode_np(
+        corpus, "vec_id", "embedding", 8, 4, dim, cents_arr=cents_arr
     )
-    cents_arr = cents.groupBy().agg(
-        F.array_sort(
-            F.collect_list(F.struct("cent_id", "cent_vec", "cent_norm2"))
-        ).alias("cents")
-    )
-    out = {
-        r.vec_id: r
-        for r in S._pq_encode_np(
-            corpus, "vec_id", "embedding", 8, 4, dim, cents_arr=cents_arr
-        ).withColumnRenamed("corpus_id", "vec_id").collect()
-    }
+    out = {r.corpus_id: r for r in enc.collect()}
     # bad rows: NULL everything
     for bad in (101, 102, 103, 104):
         assert out[bad].codes is None
@@ -731,51 +807,28 @@ def test_pq_encode_numpy_tier_zero_vector_and_bad_rows(spark):
     min_cent = min(r.cent_id for r in cents.collect())
     assert out[100].codes is not None
     assert out[100].cent_id == min_cent
-    # clean rows: spot-check one against the expr tier on the same frame
-    clean = corpus.filter(F.col("vec_id") < 100)
-    ex = {
-        r.corpus_id: r
-        for r in S._pq_encode(clean, "vec_id", "embedding", 8, 4, dim).collect()
+    # clean rows: row i's vector depends only on i % 5
+    ones, zeros = [1] * 8, [0] * 8
+    want = {
+        0: ([0, 1, 0, 0, 1, 0, 1, 0], 119.0),
+        1: (zeros, 129.0),
+        2: (ones, 130.0),
+        3: (zeros, 129.0),
+        4: (ones, 130.0),
     }
     for i in range(20):
-        assert list(out[i].codes) == list(ex[i].codes)
-        assert out[i].recon_norm2 == ex[i].recon_norm2
+        assert (list(out[i].codes), out[i].recon_norm2) == want[i % 5], i
+    assert _frame_hash(enc) == "3ba9ef5a3b14a087f494a08962d1f9be"
 
 
-def test_ivfpq_tiers_identical_full_query(spark, sf_dir):
-    """ivfpq_topk(impl='numpy') == ivfpq_topk(impl='expr') row-for-row
-    (ids, bit-exact cosines, ranks) at the registered demo config."""
-    from sig_etl_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    c = emb.filter(F.col("vec_id") >= 10)
-    a = sorted(
-        map(tuple, S.ivfpq_topk(q, c, "vec_id", "embedding", impl="numpy").collect())
-    )
-    b = sorted(
-        map(tuple, S.ivfpq_topk(q, c, "vec_id", "embedding", impl="expr").collect())
-    )
-    assert a == b and a
-
-
-def test_brute_force_tiers_identical_and_nan_policy(spark, sf_dir):
-    """brute_force_topk(impl='numpy') == impl='expr' row-for-row on the
-    fixture, AND on a pathological frame (zero vectors, NULL vectors,
-    wrong lengths, NaN/inf elements) — both tiers share the
-    undefined-similarity policy: zero-norm OR NaN cosine => NULL,
-    ranked last. A mixed-dimension query set silently falls back to the
-    expr tier and must stay identical too."""
+def test_brute_force_tiers_identical_and_nan_policy(spark):
+    """brute_force_topk's undefined-similarity policy on a pathological
+    frame (zero vectors, NULL vectors, wrong lengths, NaN/inf elements):
+    zero-norm OR NaN cosine => NULL, ranked last. A mixed-dimension
+    query set takes the broadcast-join path and follows the same
+    policy. Full row sets pinned; the fixture is oracle-checked
+    (llm_knn_bruteforce)."""
     import math
-
-    from sig_etl_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    c = emb.filter(F.col("vec_id") >= 10)
-    a = sorted(map(tuple, S.brute_force_topk(q, c, "vec_id", "embedding", k=7, impl="numpy").collect()))
-    b = sorted(map(tuple, S.brute_force_topk(q, c, "vec_id", "embedding", k=7, impl="expr").collect()))
-    assert a == b and a
 
     dim = 4
     rows = [
@@ -793,11 +846,15 @@ def test_brute_force_tiers_identical_and_nan_policy(spark, sf_dir):
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     qq = df.filter(F.col("vec_id") < 10)
     cc = df.filter(F.col("vec_id") >= 10)
-    an = S.brute_force_topk(qq, cc, "vec_id", "embedding", k=10, impl="numpy")
-    bn = S.brute_force_topk(qq, cc, "vec_id", "embedding", k=10, impl="expr")
-    ra = sorted(map(tuple, an.collect()))
-    rb = sorted(map(tuple, bn.collect()))
-    assert ra == rb and ra
+    ra = sorted(map(tuple, S.brute_force_topk(qq, cc, "vec_id", "embedding", k=10).collect()))
+    null_ranked = [
+        (q, c, None, r) for q in (1, 2, 3) for r, c in enumerate(range(10, 16), 1)
+    ]
+    assert ra == sorted(
+        [(0, 10, 0.9950371902099893, 1), (0, 15, -1.0, 2)]
+        + [(0, c, None, r) for r, c in enumerate(range(11, 15), 3)]
+        + null_ranked
+    )
     by_pair = {(r[0], r[1]): r[2] for r in ra}
     # undefined-similarity policy: every pathological pair is NULL...
     for qid in (0, 1, 2, 3):
@@ -811,30 +868,22 @@ def test_brute_force_tiers_identical_and_nan_policy(spark, sf_dir):
     qm = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [1.0, 0.0, 0.0, 0.0])], ["vec_id", "embedding"]
     )
-    fm = sorted(map(tuple, S.brute_force_topk(qm, cc, "vec_id", "embedding", k=3, impl="numpy").collect()))
-    fe = sorted(map(tuple, S.brute_force_topk(qm, cc, "vec_id", "embedding", k=3, impl="expr").collect()))
-    assert fm == fe
+    fm = sorted(map(tuple, S.brute_force_topk(qm, cc, "vec_id", "embedding", k=3).collect()))
+    assert fm == [
+        (0, 10, None, 1), (0, 11, None, 2), (0, 12, None, 3),
+        (1, 10, 0.9950371902099893, 1), (1, 11, None, 3), (1, 15, -1.0, 2),
+    ]
 
 
-def test_int8_tiers_identical_and_edge_policy(spark, sf_dir):
-    """int8_topk(impl='numpy') == impl='expr' row-for-row (bit-exact
-    cosines) on the fixture, AND on a pathological frame. Edge policy
-    (probed round 14, shared by both tiers): NULL / empty / all-zero /
-    NaN-scaled vectors have a non-positive norm -> cosine 0.0 for every
-    partner; dimension-mismatched pairs with BOTH norms positive hit the
-    NULL-padded integer fold -> NULL cosine, ranked last. A vector
-    containing -inf quantizes to all-zero codes (x*127/inf -> 0 or NaN,
-    floor(NaN) -> 0) -> 0.0, same as the expr tier."""
+def test_int8_tiers_identical_and_edge_policy(spark):
+    """int8_topk's edge policy on a pathological frame: NULL / empty /
+    all-zero / NaN-scaled vectors have a non-positive norm -> cosine 0.0
+    for every partner; dimension-mismatched pairs with BOTH norms
+    positive -> NULL cosine, ranked last. A vector containing -inf
+    quantizes to all-zero codes (x*127/inf -> 0 or NaN, floor(NaN) -> 0)
+    -> 0.0. Full row set pinned; the fixture is oracle-checked
+    (llm_knn_int8)."""
     import math
-
-    from sig_etl_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    c = emb.filter(F.col("vec_id") >= 10)
-    a = sorted(map(tuple, S.int8_topk(q, c, "vec_id", "embedding", k=7, impl="numpy").collect()))
-    b = sorted(map(tuple, S.int8_topk(q, c, "vec_id", "embedding", k=7, impl="expr").collect()))
-    assert a == b and a
 
     rows = [
         (1, [1.0, 2.0, -3.0, 0.5]),
@@ -850,9 +899,16 @@ def test_int8_tiers_identical_and_edge_policy(spark, sf_dir):
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     qq = df.filter(F.col("vec_id").isin(1, 2, 3, 5, 6))
     cc = df.filter(~F.col("vec_id").isin(1, 2, 3, 5, 6))
-    ra = sorted(map(tuple, S.int8_topk(qq, cc, "vec_id", "embedding", k=10, impl="numpy").collect()))
-    rb = sorted(map(tuple, S.int8_topk(qq, cc, "vec_id", "embedding", k=10, impl="expr").collect()))
-    assert ra == rb and ra
+    ra = sorted(map(tuple, S.int8_topk(qq, cc, "vec_id", "embedding", k=10).collect()))
+    assert ra == sorted(
+        [
+            (1, 4, 0.0, 2), (1, 7, 0.0, 3), (1, 9, 0.0693669544556868, 1),
+            (1, 10, None, 4),
+            (5, 4, 0.0, 2), (5, 7, 0.0, 3), (5, 9, None, 4),
+            (5, 10, 0.8076362609689222, 1),
+        ]
+        + [(q, c, 0.0, r) for q in (2, 3, 6) for r, c in enumerate((4, 7, 9, 10), 1)]
+    )
     by_pair = {(r[0], r[1]): r[2] for r in ra}
     assert by_pair[(1, 9)] is not None and by_pair[(1, 9)] != 0.0
     assert by_pair[(5, 10)] is not None      # matching 2-dim pair scores
@@ -867,107 +923,106 @@ def test_int8_tiers_identical_and_edge_policy(spark, sf_dir):
         assert by_pair[(qid, 7)] == 0.0      # -inf corpus
 
 
-def test_ivf_near_dup_numpy_tier_bitwise_equals_expr(spark, sf_dir):
-    """Round 14: ivf_near_dup_pairs / _2level(impl='numpy') must equal
-    impl='expr' BITWISE — same pair set, bit-identical cosines — on the
-    fixture AND on a pathological frame (NULL vector, NULL element,
-    wrong length, NaN / inf elements). The numpy tier replaces the
-    interpreted zip_with/aggregate folds (never codegen'd) with the
-    same left-to-right float64 dim-fold in Arrow batches; this test is
-    the bit-identity contract."""
-    import math
+_ND_EDGE_ROWS = [
+    (0, [1.0, 0.0, 0.0, 0.0]),
+    (1, [0.9, 0.1, 0.0, 0.0]),
+    (2, [0.0, 1.0, 0.0, 0.0]),
+    (3, None),                          # NULL vector: no pairs
+    (4, [1.0, None, 0.0, 0.0]),         # NULL element: no pairs
+    (5, [1.0] * 8),                     # wrong length vs the rest
+    (6, [0.95] * 8),                    # ...but pairs with vec 5
+    (7, [float("nan"), 1.0, 1.0, 1.0]), # NaN: cosine NaN, kept
+    (8, [float("inf"), 1.0, 0.0, 0.0]), # inf arithmetic
+    (9, [-1.0, 0.0, 0.0, 0.0]),
+]
+
+
+def _nd_pairs(df, fn):
+    """{(id_a, id_b): cosine bytes} at nassign=3, target_cell=64. NaN
+    cosines arrive as NULL (the Arrow return path cannot carry a NaN
+    distinct from NULL; the oracle canonicalizer maps both to NULL)."""
     import struct
 
-    from sig_etl_spark.tables import load_table
+    out = fn(
+        df, "vec_id", "embedding", threshold=0.3, nassign=3, target_cell=64
+    ).collect()
+    return {
+        (r.id_a, r.id_b): None if r.cosine is None else struct.pack("d", r.cosine)
+        for r in out
+    }
 
-    def pairs(df_, fn, impl):
-        out = fn(
-            df_, "vec_id", "embedding",
-            threshold=0.3, nassign=3, target_cell=64, impl=impl,
-        ).collect()
-        # NaN-cosine pairs ARE emitted (Spark/DuckDB order NaN above
-        # every double, so NaN >= threshold holds in both engines). The
-        # expr tier returns a true NaN; the numpy tier's Arrow return
-        # path cannot represent NaN distinct from NULL (the repo-wide
-        # bridge limitation) so the same pair arrives with cosine NULL.
-        # The oracle canonicalizer maps BOTH to NULL — canonicalize the
-        # same way here and require the pair SET to match exactly.
-        return {
-            (r.id_a, r.id_b): (
-                b"NAN"
-                if r.cosine is None or math.isnan(r.cosine)
-                else struct.pack("d", r.cosine)
-            )
-            for r in out
-        }
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    for fn in (S.ivf_near_dup_pairs, S.ivf_near_dup_pairs_2level):
-        a = pairs(emb, fn, "expr")
-        b = pairs(emb, fn, "numpy")
-        assert a == b and a, fn.__name__
+def test_ivf_near_dup_jvm_assignment_bitwise_equals_arrow(spark, sf_dir, monkeypatch):
+    """Above _ASSIGN_COLLECT_CEILING centroids ivf_near_dup_pairs
+    assigns through the JVM broadcast join (_ivf_assign_expr) instead of
+    the Arrow pass: the two must give the same pair set with bitwise
+    equal cosines, on the fixture AND on a pathological frame (NULL
+    vector, NULL element, wrong length, NaN / inf elements). Also pins
+    both near-dup operators at target_cell=64 (the registered queries
+    run 256) and the edge frame's full pair set."""
+    import struct
 
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),
-        (1, [0.9, 0.1, 0.0, 0.0]),
-        (2, [0.0, 1.0, 0.0, 0.0]),
-        (3, None),                          # NULL vector: no pairs
-        (4, [1.0, None, 0.0, 0.0]),         # NULL element: no pairs
-        (5, [1.0] * 8),                     # wrong length vs the rest
-        (6, [0.95] * 8),                    # ...but pairs with vec 5
-        (7, [math.nan, 1.0, 1.0, 1.0]),     # NaN: cosine NaN -> dropped
-        (8, [math.inf, 1.0, 0.0, 0.0]),     # inf arithmetic, both tiers
-        (9, [-1.0, 0.0, 0.0, 0.0]),
-    ]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    a = pairs(df, S.ivf_near_dup_pairs, "expr")
-    b = pairs(df, S.ivf_near_dup_pairs, "numpy")
-    assert a == b and a
+    emb, _, _ = _fixture_split(spark, sf_dir)
+    edge = spark.createDataFrame(_ND_EDGE_ROWS, ["vec_id", "embedding"])
+    arrow = {
+        "fixture": _nd_pairs(emb, S.ivf_near_dup_pairs),
+        "edge": _nd_pairs(edge, S.ivf_near_dup_pairs),
+    }
+    monkeypatch.setattr(S, "_ASSIGN_COLLECT_CEILING", 0)
+    jvm = {
+        "fixture": _nd_pairs(emb, S.ivf_near_dup_pairs),
+        "edge": _nd_pairs(edge, S.ivf_near_dup_pairs),
+    }
+    monkeypatch.undo()
+    assert jvm == arrow and arrow["fixture"]
+
+    b = arrow["edge"]
+    assert b == {
+        (0, 1): struct.pack("d", 0.9938837346736189),
+        (5, 6): struct.pack("d", 1.0000000000000002),
+        **{p: None for p in ((0, 7), (0, 8), (1, 7), (1, 8), (2, 7), (2, 8), (7, 8))},
+    }
     ids_in_pairs = {i for k in b for i in k}
     assert not ids_in_pairs & {3, 4}         # NULL dots never pair
     assert 7 in ids_in_pairs                 # NaN cosine IS kept (NaN >= thr)
-    assert b[(5, 6)] != b"NAN"               # same-nonstandard-length pair
+    assert b[(5, 6)] is not None             # same-nonstandard-length pair
+
+    for fn, key in (
+        (S.ivf_near_dup_pairs, "near_dup_flat_cell64"),
+        (S.ivf_near_dup_pairs_2level, "near_dup_2level_cell64"),
+    ):
+        df = fn(emb, "vec_id", "embedding", threshold=0.3, nassign=3, target_cell=64)
+        assert _frame_hash(df) == _fixture_hash(sf_dir, key), key
 
 
-def test_ivf_near_dup_zero_norm_raises_in_both_tiers(spark):
+def test_ivf_near_dup_zero_norm_raises_in_both_tiers(spark, monkeypatch):
     """A zero-norm vector makes the raw cosine division hit a zero
-    divisor: ANSI kills the expr plan with DIVIDE_BY_ZERO and the numpy
-    tier raises the mirrored ArithmeticError — neither tier silently
-    emits garbage pairs."""
-    import pytest
-
+    divisor: both assignment paths — the Arrow pass and the JVM
+    broadcast join used above _ASSIGN_COLLECT_CEILING — fail with
+    DIVIDE_BY_ZERO instead of silently emitting garbage pairs."""
     rows = [(0, [1.0, 0.0]), (1, [0.5, 0.1]), (2, [0.0, 0.0])]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    for impl in ("expr", "numpy"):
+    for ceiling in (S._ASSIGN_COLLECT_CEILING, 0):
+        monkeypatch.setattr(S, "_ASSIGN_COLLECT_CEILING", ceiling)
         with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
             S.ivf_near_dup_pairs(
                 df, "vec_id", "embedding",
-                threshold=0.3, nassign=2, target_cell=2, impl=impl,
+                threshold=0.3, nassign=2, target_cell=2,
             ).collect()
 
 
 def test_ivf_topk_tiers_identical_and_null_policy(spark, sf_dir):
-    """ivf_topk(impl='numpy') == impl='expr' row-for-row (ids, bit-exact
-    cosines, ranks) at both registered nprobe configs, AND on a
-    pathological frame (zero / NULL / NaN / inf / wrong-length / empty
-    vectors). Both tiers share _cosine's undefined-similarity policy:
-    zero-norm OR NaN cosine => NULL, ranked last — the numpy assignment
-    runs policy='cosine_null', NOT the near-dup scorer's raw-raise rule."""
+    """ivf_topk on a pathological frame (zero / NULL / NaN / inf /
+    wrong-length / empty vectors) follows _cosine_expr's
+    undefined-similarity policy: zero-norm OR NaN cosine => NULL, ranked
+    last — the assignment runs policy='cosine_null', NOT the near-dup
+    scorer's raw-raise rule. Full row set pinned; nprobe=3 is
+    oracle-checked (llm_knn_ivf), nprobe=12 pinned by value hash."""
     import math
 
-    from sig_etl_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    c = emb.filter(F.col("vec_id") >= 10)
-    for np_ in (3, 12):
-        a = sorted(map(tuple, S.ivf_topk(
-            q, c, "vec_id", "embedding", k=5, n_centroids=16, nprobe=np_,
-            impl="numpy").collect()))
-        b = sorted(map(tuple, S.ivf_topk(
-            q, c, "vec_id", "embedding", k=5, n_centroids=16, nprobe=np_,
-            impl="expr").collect()))
-        assert a == b and a
+    _, q, c = _fixture_split(spark, sf_dir)
+    hi = S.ivf_topk(q, c, "vec_id", "embedding", k=5, n_centroids=16, nprobe=12)
+    assert _frame_hash(hi) == _fixture_hash(sf_dir, "ivf_nprobe12")
 
     dim = 4
     rows = [
@@ -987,66 +1042,46 @@ def test_ivf_topk_tiers_identical_and_null_policy(spark, sf_dir):
     qq = df.filter(F.col("vec_id") < 10)
     cc = df.filter(F.col("vec_id") >= 10)
     ra = sorted(map(tuple, S.ivf_topk(
-        qq, cc, "vec_id", "embedding", k=10, n_centroids=4, nprobe=4,
-        impl="numpy").collect()))
-    rb = sorted(map(tuple, S.ivf_topk(
-        qq, cc, "vec_id", "embedding", k=10, n_centroids=4, nprobe=4,
-        impl="expr").collect()))
-    assert ra == rb and ra
+        qq, cc, "vec_id", "embedding", k=10, n_centroids=4, nprobe=4).collect()))
+    assert ra == sorted(
+        [(0, 10, 0.9950371902099893, 1), (0, 16, -1.0, 2)]
+        + [(0, c, None, r) for r, c in enumerate(range(11, 16), 3)]
+        + [(q, c, None, r) for q in (1, 2, 3) for r, c in enumerate(range(10, 17), 1)]
+    )
 
 
 def test_ivf_incremental_and_kmeans_tiers_identical(spark, sf_dir):
-    """The numpy assignment tier is tier-equal through the maintenance
-    compositions too: ivf_incremental_topk (with deletes) and
-    ivf_kmeans_topk produce identical rows under impl='numpy' and
-    impl='expr'."""
-    from sig_etl_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
+    """The maintenance compositions at configurations no registered
+    query runs (8 cells, tombstones vec_id % 11 == 0; k-means with 8
+    cells) keep their pinned value hashes."""
+    emb, q, c = _fixture_split(spark, sf_dir)
     static = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") % 7 != 0))
     delta = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") % 7 == 0))
     deletes = emb.filter(F.col("vec_id") % 11 == 0).select("vec_id")
-    a = sorted(map(tuple, S.ivf_incremental_topk(
+    inc = S.ivf_incremental_topk(
         q, static, delta, "vec_id", "embedding", k=5, n_centroids=8,
-        nprobe=3, deletes=deletes, impl="numpy").collect()))
-    b = sorted(map(tuple, S.ivf_incremental_topk(
-        q, static, delta, "vec_id", "embedding", k=5, n_centroids=8,
-        nprobe=3, deletes=deletes, impl="expr").collect()))
-    assert a == b and a
-
-    ak = sorted(map(tuple, S.ivf_kmeans_topk(
-        q, emb.filter(F.col("vec_id") >= 10), "vec_id", "embedding",
-        k=5, n_centroids=8, nprobe=3, impl="numpy").collect()))
-    bk = sorted(map(tuple, S.ivf_kmeans_topk(
-        q, emb.filter(F.col("vec_id") >= 10), "vec_id", "embedding",
-        k=5, n_centroids=8, nprobe=3, impl="expr").collect()))
-    assert ak == bk and ak
+        nprobe=3, deletes=deletes,
+    )
+    assert _frame_hash(inc) == _fixture_hash(sf_dir, "incremental_deletes11_c8")
+    km = S.ivf_kmeans_topk(
+        q, c, "vec_id", "embedding", k=5, n_centroids=8, nprobe=3
+    )
+    assert _frame_hash(km) == _fixture_hash(sf_dir, "ivf_kmeans_c8")
 
 
 def test_lsh_tiers_identical_and_edge_rows(spark, sf_dir):
-    """lsh_topk(impl='numpy') == impl='expr' row-for-row (ids, bit-exact
-    cosines, ranks) at both registered band configs, AND on a
-    pathological frame. Bucket-bit rule shared by both tiers: NULL vec /
-    NULL element / length mismatch -> bit '0' (a NULL comparison takes
-    the otherwise branch); NaN fold -> '1' (Spark's >= ranks NaN above
-    every numeric — probed: the first numpy cut used IEEE >= and
-    diverged on NaN queries); +inf fold -> '1'."""
+    """LSH bucket bits and results on a pathological frame. Bucket-bit
+    rule: NULL vec / NULL element / length mismatch -> bit '0'; NaN
+    fold -> '1' (Spark's and DuckDB's >= rank NaN above every numeric);
+    +inf fold -> '1' where the sign is positive. The b2p4 fixture config
+    is oracle-checked (llm_knn_lsh); b8p3 is pinned by value hash."""
     import math
 
-    from sig_etl_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    c = emb.filter(F.col("vec_id") >= 10)
-    for b, p in ((2, 4), (8, 3)):
-        a = sorted(map(tuple, S.lsh_topk(
-            q, c, "vec_id", "embedding", k=5, dim=64, bands=b,
-            planes_per_band=p, impl="numpy").collect()))
-        e = sorted(map(tuple, S.lsh_topk(
-            q, c, "vec_id", "embedding", k=5, dim=64, bands=b,
-            planes_per_band=p, impl="expr").collect()))
-        assert a == e and a
+    _, q, c = _fixture_split(spark, sf_dir)
+    hi = S.lsh_topk(
+        q, c, "vec_id", "embedding", k=5, dim=64, bands=8, planes_per_band=3
+    )
+    assert _frame_hash(hi) == _fixture_hash(sf_dir, "lsh_b8p3")
 
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
@@ -1061,92 +1096,108 @@ def test_lsh_tiers_identical_and_edge_rows(spark, sf_dir):
         (15, [-1.0, 0.2, 0.0, 0.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    planes = S.hyperplanes(4, 6, 7)
+    buckets = {
+        (r.vid, r.band): r.bucket
+        for r in S._with_buckets_np(
+            df, "vec_id", "embedding", "vid", [planes[:3], planes[3:]]
+        ).collect()
+    }
+    want = {0: "001", 1: "111", 2: "000", 3: "111", 10: "001", 11: "000",
+            12: "000", 13: "001", 14: "000", 15: "110"}
+    assert buckets == {(v, b): w for v, w in want.items() for b in (0, 1)}
+
     qq = df.filter(F.col("vec_id") < 10)
     cc = df.filter(F.col("vec_id") >= 10)
     ra = sorted(map(tuple, S.lsh_topk(
         qq, cc, "vec_id", "embedding", k=10, dim=4, bands=2,
-        planes_per_band=3, impl="numpy").collect()))
-    rb = sorted(map(tuple, S.lsh_topk(
-        qq, cc, "vec_id", "embedding", k=10, dim=4, bands=2,
-        planes_per_band=3, impl="expr").collect()))
-    assert ra == rb and ra
+        planes_per_band=3).collect()))
+    assert ra == [
+        (0, 10, 0.9950371902099893, 1), (0, 13, None, 2),
+        (2, 11, None, 1), (2, 12, None, 2), (2, 14, None, 3),
+    ]
 
 
 def test_pq_encode_np_schema_matches_expr_twin(spark, sf_dir):
-    """The numpy encoder's statically-constructed output schema must equal
-    the expr twin's schema with every field forced nullable — the
-    drop-in-interchangeable invariant that used to be guaranteed by
-    BUILDING the twin per call (round 14 removed that ~1.7 s/build py4j
-    cost; this test pins the invariant instead)."""
-    from pyspark.sql.types import StructField, StructType
-
-    from sig_etl_spark.llm.similarity import _pq_encode, _pq_encode_np
-    from sig_etl_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    c = emb.filter(F.col("vec_id") >= 10)
-    twin = _pq_encode(c, "vec_id", "embedding", 8, 16, 64)
-    want = StructType(
-        [StructField(f.name, f.dataType, True) for f in twin.schema.fields]
+    """The encoder's statically-constructed output schema: every field
+    nullable (the bad-row policy emits NULLs), codes elements the
+    IntegerType row_number-derived j."""
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        IntegerType,
+        LongType,
+        StructField,
+        StructType,
     )
-    got = _pq_encode_np(c, "vec_id", "embedding", 8, 16, 64).schema
-    assert got == want, f"\ngot:  {got}\nwant: {want}"
+
+    _, _, c = _fixture_split(spark, sf_dir)
+    got = S._pq_encode_np(c, "vec_id", "embedding", 8, 16, 64).schema
+    assert got == StructType(
+        [
+            StructField("corpus_id", LongType(), True),
+            StructField("codes", ArrayType(IntegerType(), True), True),
+            StructField("recon_norm2", DoubleType(), True),
+        ]
+    )
 
 
 def test_pq_luts_tiers_identical_and_edge_rows(spark, sf_dir):
-    """_pq_luts_np == _pq_luts row-for-row (bit-exact LUT entries and
-    qnorm2) on the fixture queries AND on pathological query vectors
-    (NULL vec, NULL element, NaN/inf, short/long/empty) — the slice +
-    zip_with padding rules are reproduced exactly: unequal-length slices
-    -> NULL, equal-length slices fold over that length, two empty
-    slices -> 0.0."""
+    """_pq_luts_np on the fixture queries AND on pathological query
+    vectors (NULL vec, NULL element, NaN/inf, short/long/empty): the
+    slice + fold padding rules — unequal-length slices -> NULL,
+    equal-length slices fold over that length, two empty slices -> 0.0;
+    NaN stays NaN (not NULL). Rows pinned by a NaN-preserving hash."""
     import math
 
-    from sig_etl_spark.llm.similarity import _pq_codebook, _pq_luts, _pq_luts_np
-    from sig_etl_spark.tables import load_table
+    from sig_etl_spark.llm.similarity import _pq_codebook_entries, _pq_luts_np
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10)
-    c = emb.filter(F.col("vec_id") >= 10)
-    cb_rows = _pq_codebook(c, "vec_id", "embedding", 16, m_subs=8, dsub=8).collect()
-    cb_entries = list(cb_rows[0]["cbook"])
-    a = sorted(map(tuple, _pq_luts_np(q, "vec_id", "embedding", cb_entries, 8, 8).collect()))
-    b = sorted(map(tuple, _pq_luts(q, c, "vec_id", "embedding", 8, 16, 64).collect()))
-    assert a == b and a
+    _, q, c = _fixture_split(spark, sf_dir)
+    cb_entries = _pq_codebook_entries(c, "vec_id", "embedding", 16, 8, 8)
+    luts = _pq_luts_np(q, "vec_id", "embedding", cb_entries, 8, 8)
+    assert _repr_hash(luts) == _fixture_hash(sf_dir, "pq_luts")
 
-    # Round 15 (ADVICE r14): the NaN-element query is now INCLUDED —
-    # _pq_luts_np emits via mapInArrow, so an expr-tier NaN lut entry
-    # stays NaN on the numpy side too (the old mapInPandas bridge
-    # collapsed it to NULL and the case had to be excluded).
     rows = [
         (0, [1.0] * 64),
         (1, None),                               # NULL vec -> NULL luts + qnorm2
         (2, [1.0] * 63 + [None]),                # NULL element
-        (3, [math.nan] + [1.0] * 63),            # NaN folds stay NaN in both tiers
+        (3, [math.nan] + [1.0] * 63),            # NaN folds stay NaN
         (4, [math.inf] + [1.0] * 63),            # inf folds survive the bridge
         (5, [1.0] * 8),                          # short: m=0 folds (equal 8-slices), m>=1 NULL
         (6, [1.0] * 70),                         # long: full slices everywhere, real folds
         (7, []),                                 # empty vs 8-long entry slices -> NULL
     ]
     qq = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    ra = sorted(map(tuple, _pq_luts_np(qq, "vec_id", "embedding", cb_entries, 8, 8).collect()), key=str)
-    rb = sorted(map(tuple, _pq_luts(qq, c, "vec_id", "embedding", 8, 16, 64).collect()), key=str)
-    # str-canonicalized equality: the NaN rows compare by repr (NaN !=
-    # NaN under tuple equality even when bit-identical)
-    assert [str(t) for t in ra] == [str(t) for t in rb] and ra
+    edge = _pq_luts_np(qq, "vec_id", "embedding", cb_entries, 8, 8)
+    out = {r.query_id: r for r in edge.collect()}
+
+    def null_subspaces(r):
+        return [m is None or all(x is None for x in m) for m in r.lut]
+
+    assert out[0].qnorm2 == 64.0 and not any(null_subspaces(out[0]))
+    assert out[1].qnorm2 is None and all(null_subspaces(out[1]))
+    assert out[2].qnorm2 is None and null_subspaces(out[2]) == [False] * 7 + [True]
+    assert math.isnan(out[3].qnorm2) and math.isnan(out[3].lut[0][0])
+    assert out[4].qnorm2 == math.inf
+    assert out[5].qnorm2 == 8.0 and null_subspaces(out[5]) == [False] + [True] * 7
+    assert out[6].qnorm2 == 70.0 and not any(null_subspaces(out[6]))
+    assert out[7].qnorm2 == 0.0 and all(null_subspaces(out[7]))
+    assert _repr_hash(edge) == "e9d65c534acccdb8a17726d1d8d48ca9"
 
 
 def test_ivf_kmeans_string_id_corpus_tier_schema_parity(spark):
-    """ADVICE r14: the numpy assignment typed cent_id from the CORPUS id
-    column, so a trained quantizer (cent_id long by construction) over a
-    string-id corpus diverged from the expr tier (or failed the Arrow
-    cast). cent_id now carries the centroid frame's own type; both tiers
-    must agree on schema AND rows for a non-long-id corpus."""
+    """A trained quantizer (cent_id long by construction) over a
+    string-id corpus: cent_id carries the centroid frame's own type, so
+    the result keeps the string ids and the pinned rows."""
     import random
 
-    from pyspark.sql import functions as F
-
-    from sig_etl_spark.llm import similarity as S
+    from pyspark.sql.types import (
+        DoubleType,
+        IntegerType,
+        StringType,
+        StructField,
+        StructType,
+    )
 
     random.seed(1)
     rows = [
@@ -1157,15 +1208,17 @@ def test_ivf_kmeans_string_id_corpus_tier_schema_parity(spark):
     q = df.filter(F.col("sid") < "id010")
     c = df.filter(F.col("sid") >= "id010")
     a = S.ivf_kmeans_topk(
-        q, c, "sid", "vec", k=3, n_centroids=4, sample_size=16, iters=2,
-        impl="numpy",
+        q, c, "sid", "vec", k=3, n_centroids=4, sample_size=16, iters=2
     )
-    b = S.ivf_kmeans_topk(
-        q, c, "sid", "vec", k=3, n_centroids=4, sample_size=16, iters=2,
-        impl="expr",
+    assert a.schema == StructType(
+        [
+            StructField("query_id", StringType(), True),
+            StructField("corpus_id", StringType(), True),
+            StructField("cosine", DoubleType(), True),
+            StructField("rank", IntegerType(), False),
+        ]
     )
-    assert a.schema == b.schema
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    assert _frame_hash(a) == "3735008606da8c71bbca72a8065fbd83"
 
 
 def test_ivfpq_probe_dot_is_double_on_float_arrays(spark):

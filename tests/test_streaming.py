@@ -96,6 +96,36 @@ def test_run_available_now_requires_sink_or_output_dir(spark, landing):
         run_available_now(stream, ckpt, "nosink")
 
 
+def _batch_cells(df, cents, n: int) -> dict:
+    """{(vec_id, rank): (cent_id, cosine)}: the batch IVF assignment
+    (similarity._nearest_cells_np) of ``df``'s rows to their ``n``
+    nearest cells of the (cent_id, cent_vec) frame ``cents``, scored by
+    the batch cosine and ranked by (cosine DESC, cent_id)."""
+    from pyspark.sql import Window
+
+    from sig_etl_spark.llm.similarity import (
+        _cent_norm_frame,
+        _collect_cent_rows,
+        _cosine_expr,
+        _nearest_cells_np,
+    )
+
+    w = Window.partitionBy("corpus_id").orderBy(F.col("cosine").desc(), "cent_id")
+    cells = _nearest_cells_np(
+        df, "vec_id", "embedding", "corpus_id", n, _collect_cent_rows(cents)
+    )
+    return {
+        (r.corpus_id, r.rk): (r.cent_id, r.cosine)
+        for r in cells.join(_cent_norm_frame(cents), "cent_id")
+        .withColumn(
+            "cosine",
+            _cosine_expr("corpus_id_vec", "cent_vec", "corpus_id_norm2", "cent_norm2"),
+        )
+        .withColumn("rk", F.row_number().over(w))
+        .collect()
+    }
+
+
 def _last_update_per_key(batches: list[pd.DataFrame], keys: list[str]) -> pd.DataFrame:
     all_rows = pd.concat(batches, ignore_index=True)
     return all_rows.groupby(keys, as_index=False).last()
@@ -787,12 +817,7 @@ def test_stream_ivf_assign_matches_batch_assignment(spark, sf_dir, tmp_path):
     the batch assignment picks (same hash-sampled quantizer, same double
     folds, same sim-desc/cent-asc tiebreak), each vector exactly once
     across the checkpointed redelivery."""
-    from sig_etl_spark.llm.similarity import (
-        _cent_norm_frame,
-        _hash_sample,
-        _nearest_cells,
-        _with_norm2,
-    )
+    from sig_etl_spark.llm.similarity import _hash_sample
     from sig_etl_spark.streaming import (
         collect_ivf_index,
         read_embedding_stream,
@@ -825,13 +850,7 @@ def test_stream_ivf_assign_matches_batch_assignment(spark, sf_dir, tmp_path):
 
     assert len(got) == n, "each vector assigned exactly once"
     cents = _hash_sample(emb, "vec_id", "embedding", 8, "cent_id", "cent_vec")
-    batch = {
-        (r.corpus_id, r.cent_id)
-        for r in _nearest_cells(
-            _with_norm2(emb, "vec_id", "embedding", "corpus_id"),
-            "corpus_id", 1, _cent_norm_frame(cents),
-        ).collect()
-    }
+    batch = {(vid, cid) for (vid, _), (cid, _) in _batch_cells(emb, cents, 1).items()}
     streamed = {(r.vec_id, r.cent_id) for r in got.itertuples(index=False)}
     assert streamed == batch
 
@@ -886,12 +905,7 @@ def test_stream_ivf_assign_trained_quantizer_matches_batch(spark, sf_dir, tmp_pa
     assign every vector to exactly the cell the batch
     ivf_incremental_kmeans path assigns (same centroids by determinism
     of the bounded-sample trainer, same folds, same tiebreak)."""
-    from sig_etl_spark.llm.similarity import (
-        _cent_norm_frame,
-        _nearest_cells,
-        _with_norm2,
-        kmeans_cents_frame,
-    )
+    from sig_etl_spark.llm.similarity import kmeans_cents_frame
     from sig_etl_spark.streaming import (
         collect_ivf_index,
         read_embedding_stream,
@@ -918,11 +932,7 @@ def test_stream_ivf_assign_trained_quantizer_matches_batch(spark, sf_dir, tmp_pa
 
     cents = kmeans_cents_frame(static, "vec_id", "embedding", n_centroids=8)
     batch = {
-        (r.corpus_id, r.cent_id)
-        for r in _nearest_cells(
-            _with_norm2(delta, "vec_id", "embedding", "corpus_id"),
-            "corpus_id", 1, _cent_norm_frame(cents),
-        ).collect()
+        (vid, cid) for (vid, _), (cid, _) in _batch_cells(delta, cents, 1).items()
     }
     streamed = {(int(r.vec_id), int(r.cent_id)) for r in got.itertuples(index=False)}
     assert streamed == batch and streamed
@@ -1011,13 +1021,7 @@ def test_stream_ivf_assign_zero_norm_sorts_last(spark, tmp_path):
     too, not first (the raw struct sort would put a NULL field first).
     Pins full stream/batch rank equality with a zero centroid AND a zero
     query vector in play."""
-    from pyspark.sql import Window
-
-    from sig_etl_spark.llm.similarity import (
-        _cent_norm_frame,
-        _nearest_cells,
-        _with_norm2,
-    )
+    from sig_etl_spark.llm.similarity import _cent_norm_frame
     from sig_etl_spark.streaming import read_embedding_stream, stream_ivf_assign
 
     vecs = [
@@ -1053,26 +1057,8 @@ def test_stream_ivf_assign_zero_norm_sorts_last(spark, tmp_path):
         ignore_index=True,
     )
 
-    batch = _nearest_cells(
-        _with_norm2(emb, "vec_id", "embedding", "corpus_id"),
-        "corpus_id", 3, cent_norm,
-    ).join(cent_norm, "cent_id")
-    w = Window.partitionBy("corpus_id").orderBy(
-        F.col("_bsim").desc(), F.col("cent_id")
-    )
-    from sig_etl_spark.llm.similarity import _cosine
-
     batch_ranked = {
-        (r.corpus_id, r.cent_id): r.rk
-        for r in batch.withColumn(
-            "_bsim",
-            _cosine(
-                F.col("corpus_id_vec"), F.col("cent_vec"),
-                F.col("corpus_id_norm2"), F.col("cent_norm2"),
-            ),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .collect()
+        (vid, cid): rank for (vid, rank), (cid, _) in _batch_cells(emb, cents, 3).items()
     }
     streamed = {
         (int(r.vec_id), int(r.cent_id)): int(r.cell_rank)
@@ -1388,44 +1374,41 @@ def test_stream_decontaminate_matches_batch_bloom(spark, sf_dir, tmp_path):
     )
 
 
-def test_stream_ivf_assign_numpy_tier_bitwise_equals_expr_tier(spark, sf_dir):
-    """The vectorized numpy scorer must be BIT-IDENTICAL to the
-    literal-expression reference arm — same assignments, same ranks, and
-    bitwise-equal cosines (np.cumsum's last element is the same strict
-    left-to-right IEEE fold _double_dot performs). Run on the full
-    sf0.01 embeddings table with multi-cell output so ties/ordering are
-    exercised."""
+def test_stream_ivf_assign_bitwise_equals_batch_assignment(spark, sf_dir):
+    """The streaming scorer must be BIT-IDENTICAL to the batch assignment
+    (similarity._nearest_cells_np, cosine by the batch _cosine_expr) —
+    same cells, same ranks, and bitwise-equal cosines: both run the same
+    strict left-to-right IEEE fold _double_dot performs. Multi-cell
+    output, so ties/ordering are exercised."""
     import numpy as np
 
+    from sig_etl_spark.llm.similarity import _hash_sample
     from sig_etl_spark.streaming import collect_ivf_index, stream_ivf_assign
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     index = collect_ivf_index(emb, "vec_id", "embedding", n_centroids=8)
-
-    def rows(scorer):
-        out = stream_ivf_assign(emb, index, n_cells=3, scorer=scorer).collect()
-        return {
-            (r.vec_id, r.cell_rank): (r.cent_id, r.cosine) for r in out
-        }
-
-    got_np = rows("numpy")
-    got_expr = rows("expr")
-    assert set(got_np) == set(got_expr)
-    for key, (cid_n, cos_n) in got_np.items():
-        cid_e, cos_e = got_expr[key]
-        assert cid_n == cid_e, key
-        if cos_e is None:
-            assert cos_n is None, key
+    streamed = {
+        (r.vec_id, r.cell_rank): (r.cent_id, r.cosine)
+        for r in stream_ivf_assign(emb, index, n_cells=3).collect()
+    }
+    cents = _hash_sample(emb, "vec_id", "embedding", 8, "cent_id", "cent_vec")
+    batch = _batch_cells(emb, cents, 3)
+    assert set(streamed) == set(batch) and batch
+    for key, (cid_s, cos_s) in streamed.items():
+        cid_b, cos_b = batch[key]
+        assert cid_s == cid_b, key
+        if cos_b is None:
+            assert cos_s is None, key
         else:
-            assert np.float64(cos_n).tobytes() == np.float64(cos_e).tobytes(), key
+            assert np.float64(cos_s).tobytes() == np.float64(cos_b).tobytes(), key
 
 
 def test_stream_ivf_assign_numpy_tier_null_embeddings(spark):
     """A NULL embedding, a wrong-length embedding, a vector with a null
-    element, AND a vector with a NaN element must all follow the shared
-    NULL-sim path in BOTH tiers — k rows emitted, cent_ids the k lowest,
-    cosine NULL — never a task crash and never a NaN leaking out (the
-    expr tier nanvl-normalizes NaN sims; round-14 ADVICE fix)."""
+    element, a zero-norm vector AND a vector with a NaN element must all
+    follow the shared NULL-sim path — k rows emitted, cent_ids the k
+    lowest, cosine NULL — never a task crash and never a NaN leaking
+    out."""
     from sig_etl_spark.streaming import stream_ivf_assign
 
     index = [(5, [1.0, 0.0], 1.0), (2, [0.0, 1.0], 1.0), (9, [1.0, 1.0], 2.0)]
@@ -1435,17 +1418,16 @@ def test_stream_ivf_assign_numpy_tier_null_embeddings(spark):
             (2, None),                # NULL vector
             (3, [1.0]),               # wrong length
             (4, [1.0, None]),         # null element
-            (5, [0.0, 0.0]),          # zero norm (expr: try_divide NULL)
-            (6, [1.0, float("nan")]),  # NaN element (expr: nanvl -> NULL)
+            (5, [0.0, 0.0]),          # zero norm: NULL sim
+            (6, [1.0, float("nan")]),  # NaN element: NULL sim
         ],
         "vec_id bigint, embedding array<double>",
     )
-    for scorer in ("numpy", "expr"):
-        got = {
-            (r.vec_id, r.cell_rank): (r.cent_id, r.cosine)
-            for r in stream_ivf_assign(df, index, n_cells=2, scorer=scorer).collect()
-        }
-        assert got[(1, 1)][0] == 5 and got[(1, 1)][1] is not None, scorer
-        for vid in (2, 3, 4, 5, 6):
-            assert got[(vid, 1)] == (2, None), (scorer, vid, got[(vid, 1)])
-            assert got[(vid, 2)] == (5, None), (scorer, vid, got[(vid, 2)])
+    got = {
+        (r.vec_id, r.cell_rank): (r.cent_id, r.cosine)
+        for r in stream_ivf_assign(df, index, n_cells=2).collect()
+    }
+    assert got[(1, 1)][0] == 5 and got[(1, 1)][1] is not None
+    for vid in (2, 3, 4, 5, 6):
+        assert got[(vid, 1)] == (2, None), (vid, got[(vid, 1)])
+        assert got[(vid, 2)] == (5, None), (vid, got[(vid, 2)])

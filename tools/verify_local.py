@@ -71,6 +71,59 @@ def frame_hash(df: pd.DataFrame) -> str:
     return h.hexdigest()
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        # Driver testdata is a single file per table; Spark-written sets
+        # (e.g. the local .testdata/sf1 scale point) are DIRECTORIES named
+        # <t>.parquet — glob inside those for DuckDB.
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        pat = os.path.join(path, "*.parquet") if os.path.isdir(path) else path
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pat}')")
+    return con
+
+
+def check(spark, con, sf_dir: str, name: str) -> list[str]:
+    """Run query ``name`` on Spark and its oracle SQL on ``con``; return
+    the mismatches (row count, column names, value hash), empty when the
+    two agree or the query has no oracle."""
+    rq = QUERIES[name]
+    try:
+        sdf = rq.builder(spark, sf_dir).toPandas()
+    except Exception as e:  # noqa: BLE001
+        return [f"spark error: {e}"]
+    if rq.oracle is None:
+        return []
+    try:
+        odf = con.execute(rq.oracle).df()
+    except Exception as e:  # noqa: BLE001
+        return [f"duckdb error: {e}"]
+    problems = []
+    if len(sdf) != len(odf):
+        problems.append(f"rowcount spark={len(sdf)} duck={len(odf)}")
+    if sorted(sdf.columns) != sorted(odf.columns):
+        problems.append(f"schema spark={sorted(sdf.columns)} duck={sorted(odf.columns)}")
+    if not problems and frame_hash(sdf) != frame_hash(odf):
+        # show a diff sample
+        cols = sorted(sdf.columns)
+        s_rows = {
+            "\x01".join(canon_cell(v) for v in rec)
+            for rec in sdf[cols].itertuples(index=False)
+        }
+        o_rows = {
+            "\x01".join(canon_cell(v) for v in rec)
+            for rec in odf[cols].itertuples(index=False)
+        }
+        sample = [
+            f"{side}: {r.replace(chr(1), ' | ')[:200]}"
+            for side, rows in (("spark-only", s_rows - o_rows), ("duck-only", o_rows - s_rows))
+            for r in list(rows)[:3]
+        ]
+        problems.append("\n        ".join(["value-hash mismatch", *sample]))
+    return problems
+
+
 def main() -> int:
     # Spark's Python workers see PYTHONPATH, not sys.path: export the
     # checkout before any session starts, so any working directory works.
@@ -102,14 +155,7 @@ def main() -> int:
             return 1
 
     spark = get_spark("verify_local")
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        # Driver testdata is a single file per table; Spark-written sets
-        # (e.g. the local .testdata/sf1 scale point) are DIRECTORIES named
-        # <t>.parquet — glob inside those for DuckDB.
-        path = os.path.join(args.sf_dir, f"{t}.parquet")
-        pat = os.path.join(path, "*.parquet") if os.path.isdir(path) else path
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pat}')")
+    con = oracle_connection(args.sf_dir)
 
     from tools.dtype_seam_scan import EXPECTED_DIVERGENT
 
@@ -119,54 +165,16 @@ def main() -> int:
         if name in EXPECTED_DIVERGENT:
             print(f"skip  {name}: deliberately-divergent seam probe")
             continue
-        rq = QUERIES[name]
         t0 = time.time()
-        try:
-            sdf = rq.builder(spark, args.sf_dir).toPandas()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error: {e}")
-            failures.append(name)
-            continue
-        if rq.oracle is None:
-            ok = len(sdf) >= 0
-            print(f"rows  {name}: {len(sdf)} rows (no oracle) [{time.time()-t0:.1f}s]")
-            continue
-        try:
-            odf = con.execute(rq.oracle).df()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: duckdb error: {e}")
-            failures.append(name)
-            continue
-        problems = []
-        if len(sdf) != len(odf):
-            problems.append(f"rowcount spark={len(sdf)} duck={len(odf)}")
-        if sorted(sdf.columns) != sorted(odf.columns):
-            problems.append(f"schema spark={sorted(sdf.columns)} duck={sorted(odf.columns)}")
-        if not problems:
-            hs, ho = frame_hash(sdf), frame_hash(odf)
-            if hs != ho:
-                problems.append("value-hash mismatch")
-                # show a diff sample
-                cols = sorted(sdf.columns)
-                s_rows = {
-                    "\x01".join(canon_cell(v) for v in rec)
-                    for rec in sdf[cols].itertuples(index=False)
-                }
-                o_rows = {
-                    "\x01".join(canon_cell(v) for v in rec)
-                    for rec in odf[cols].itertuples(index=False)
-                }
-                only_s = list(s_rows - o_rows)[:3]
-                only_o = list(o_rows - s_rows)[:3]
-                for r in only_s:
-                    print(f"        spark-only: {r.replace(chr(1), ' | ')[:200]}")
-                for r in only_o:
-                    print(f"        duck-only:  {r.replace(chr(1), ' | ')[:200]}")
+        problems = check(spark, con, args.sf_dir, name)
+        took = f"[{time.time() - t0:.1f}s]"
         if problems:
-            print(f"FAIL  {name}: {'; '.join(problems)} [{time.time()-t0:.1f}s]")
+            print(f"FAIL  {name}: {'; '.join(problems)} {took}")
             failures.append(name)
+        elif QUERIES[name].oracle is None:
+            print(f"rows  {name}: no oracle {took}")
         else:
-            print(f"OK    {name}: {len(sdf)} rows [{time.time()-t0:.1f}s]")
+            print(f"OK    {name}: {took}")
 
     print(f"\n{len(names)-len(failures)}/{len(names)} passed")
     return 1 if failures else 0
